@@ -264,16 +264,11 @@ def _flags(
     return probe, flags
 
 
-def violation_counts(
-    changes: DataFrame,
-    cons: dict[str, dict],
-    logical_schema: T.StructType,
-    spark: SparkSession | None = None,
-) -> dict[str, int]:
-    """Per-constraint violating-event counts over one batch: one
-    partial-aggregating pass (map-only for CHECK specs; FK specs add their
-    bucket-pruned parent anti-join, still O(batch))."""
-    probe, flags = _flags(changes, cons, logical_schema, spark)
+def violation_counts(probe: DataFrame, flags: dict) -> dict[str, int]:
+    """Per-constraint violating-event counts over one batch's
+    :func:`_flags` probe: one partial-aggregating pass (map-only for CHECK
+    specs; FK specs add their bucket-pruned parent anti-join, still
+    O(batch))."""
     row = probe.agg(
         *[
             F.sum(flag.cast("long")).alias(n)
@@ -297,7 +292,10 @@ def enforce_general(
     cons = constraints_of(snap)
     if not cons:
         return changes, {}
-    counts = violation_counts(changes, cons, logical_schema, spark)
+    # one probe for both the verdict and the filter: an FK spec's probe
+    # reads the parent's keys, which must happen once per batch
+    probe, flags = _flags(changes, cons, logical_schema, spark)
+    counts = violation_counts(probe, flags)
     bad = {n: c for n, c in counts.items() if c}
     fail_bad = {
         n: c for n, c in bad.items()
@@ -307,7 +305,6 @@ def enforce_general(
         raise ConstraintViolationError(epoch_label, fail_bad)
     if not bad:
         return changes, counts
-    probe, flags = _flags(changes, cons, logical_schema, spark)
     drop_flags = [
         flags[n] for n in cons
         if cons[n]["on_violation"] in ("drop", "dlq")
@@ -379,7 +376,9 @@ def check_fail_only(
         if cur != c:
             df = df.withColumnRenamed(c, cur)
     keep = [c for c in df.columns if c in set(need) | {"op"}]
-    counts = violation_counts(df.select(*keep), cons, logical_schema, spark)
+    counts = violation_counts(
+        *_flags(df.select(*keep), cons, logical_schema, spark)
+    )
     bad = {n: c for n, c in counts.items() if c}
     if bad:
         raise ConstraintViolationError(epoch_label, bad)

@@ -381,6 +381,33 @@ def _stat_key(v):
     return None
 
 
+def fold_file_stats(
+    entries: Iterable[tuple[int, str, dict]],
+) -> dict[int, dict]:
+    """Fold per-file ``(bucket, relpath, _file_stats(...))`` entries into
+    commit-ready ``bucket_updates``: bucket -> {files, rows, max_lsn,
+    fstats}, where ``fstats`` is per-file ``[rows, max_lsn, kmin, kmax,
+    cstats]``."""
+    out: dict[int, dict] = {}
+    for b, relpath, st in entries:
+        info = out.setdefault(
+            b, {"files": [], "rows": 0, "max_lsn": None, "fstats": []}
+        )
+        info["files"].append(relpath)
+        info["rows"] += st["rows"]
+        if st["max_lsn"] is not None:
+            info["max_lsn"] = (
+                st["max_lsn"]
+                if info["max_lsn"] is None
+                else max(info["max_lsn"], st["max_lsn"])
+            )
+        info["fstats"].append(
+            [st["rows"], st["max_lsn"], st.get("kmin"), st.get("kmax"),
+             st.get("cstats") or None]
+        )
+    return out
+
+
 def _file_stats(
     path: str,
     lsn_col: str = LSN_META_COL,
@@ -2499,10 +2526,6 @@ class LakeTable:
             self.data_dir, f"stage-{os.getpid()}-{_uuid.uuid4().hex[:10]}"
         )
 
-    # kept for one release for external callers; sid is only a label now
-    def staging_dir(self, next_sid: int) -> str:  # pragma: no cover
-        return self.new_staging_dir()
-
     def collect_staged(
         self,
         stage: str,
@@ -2570,25 +2593,10 @@ class LakeTable:
                 for _, fp in pairs
             }
 
-        out: dict[int, dict] = {}
-        for b, fp in pairs:
-            st = stats_by_path[fp]
-            info = out.setdefault(
-                b, {"files": [], "rows": 0, "max_lsn": None, "fstats": []}
-            )
-            info["files"].append(os.path.relpath(fp, self.root))
-            info["rows"] += st["rows"]
-            if st["max_lsn"] is not None:
-                info["max_lsn"] = (
-                    st["max_lsn"]
-                    if info["max_lsn"] is None
-                    else max(info["max_lsn"], st["max_lsn"])
-                )
-            info["fstats"].append(
-                [st["rows"], st["max_lsn"], st.get("kmin"), st.get("kmax"),
-                 st.get("cstats") or None]
-            )
-        return out
+        return fold_file_stats(
+            (b, os.path.relpath(fp, self.root), stats_by_path[fp])
+            for b, fp in pairs
+        )
 
     def commit(
         self,

@@ -12,14 +12,14 @@ waste: every row is already exactly where it must end up.
 
 This module exploits that: ``apply_changes_copart`` runs the whole MoR
 apply as a MAP-ONLY job. One Arrow task per bucket (chunked if hot) reads
-that bucket's WAL files, folds within-batch LWW with the SAME pandas kernel
-the grouped merge uses (``operators.merge._merge_kernel`` — tested
-bit-identical to the native total order), writes the bucket's delta file
+that bucket's WAL files, folds within-batch LWW in Arrow C++
+(``_lww_fold_arrow`` — tested bit-identical to the grouped merge's pandas
+kernel and the native total order), writes the bucket's delta file
 directly into the staging dir, harvests its footer stats in place, and
 returns one tiny stats row. No exchange, no second stats pass, no driver
-file loop — the commit is the same CAS/epoch-ledger commit as every other
-write path, so crash/resume, exactly-once and concurrent-writer semantics
-are unchanged.
+file loop — the commit goes through the same ``operators.merge._finish``
+as every other write path, so crash/resume, exactly-once and
+concurrent-writer semantics are unchanged.
 
 Why this matters at 100 TB: an all-to-all exchange is the one ingest phase
 whose cost scales with CLUSTER size (network bisection), not data size per
@@ -57,7 +57,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 from typing import Iterator, Sequence
 
@@ -67,16 +66,18 @@ from pyspark.sql import types as T
 
 from cnpj_data_pipeline_spark.config import BUCKET_COL, EngineConfig
 from cnpj_data_pipeline_spark.lake.format import (
-    EpochAlreadyAppliedError,
     LakeTable,
     LSN_META_COL,
     OP_META_COL,
     PHYSICAL_META_FIELDS,
+    fold_file_stats,
 )
 from cnpj_data_pipeline_spark.operators.merge import (
     ENVELOPE_COLS,
-    _skipped_by_race,
-    _staged_result,
+    _epoch_label,
+    _finish,
+    _ledger_skip,
+    _PhaseClock,
 )
 from cnpj_data_pipeline_spark.schemas import union_schema
 
@@ -406,32 +407,10 @@ def apply_changes_copart(
     descriptor is persisted instead of committing (``metrics["token"]``) —
     the audit gate composes with the shuffle-free path."""
     cfg = cfg or EngineConfig()
-    t0 = time.monotonic()
-    phases: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.monotonic()
-        phases[name] = round(now - _last[0], 3)
-        _last[0] = now
-
-    epoch_set = {epoch} if isinstance(epoch, int) else set(epoch)
-    already = epoch_set & table.applied_epochs()
-    if already == epoch_set:
-        return {
-            "epoch": epoch,
-            "skipped": True,
-            "rows_applied": 0,
-            "buckets_touched": 0,
-            "seconds": 0.0,
-            "snapshot_id": table.current_snapshot_id(),
-        }
-    if already:
-        raise ValueError(
-            f"window epochs {sorted(already)} already applied but "
-            f"{sorted(epoch_set - already)} are not — a folded batch cannot "
-            "be partially replayed; re-plan the window over pending epochs"
-        )
+    clock = _PhaseClock()
+    skip = _ledger_skip(table, epoch)
+    if skip is not None:
+        return skip
 
     snap = table.snapshot()
     key_cols = list(snap["key_cols"]) if snap["key_cols"] is not None else None
@@ -450,23 +429,21 @@ def apply_changes_copart(
     # the zero-shuffle apply untouched. Row-dropping modes (drop/dlq) need
     # a batch rewrite and are routed to the general path by the pipeline
     # (check_fail_only raises if they reach here).
-    constraint_counts = None
+    extra: dict = {"copartitioned": True}
     if all_files and any(
         k.startswith("constraint.") and v is not None
         for k, v in (snap.get("props") or {}).items()
     ):
         from cnpj_data_pipeline_spark.lake.constraints import check_fail_only
 
-        constraint_counts = check_fail_only(
+        extra["constraint_violations"] = check_fail_only(
             spark,
             snap,
             all_files,
-            epoch
-            if isinstance(epoch, int)
-            else f"{min(epoch_set)}-{max(epoch_set)}",
+            _epoch_label(epoch),
             table.logical_schema(),
         )
-        _mark("constraints")
+        clock.mark("constraints")
     # GENERATED columns: this path never rewrites the batch, so producers
     # must supply them (pre-computed like bucket placement); verified in
     # one column-pruned map-only scan, missing columns fail loud.
@@ -482,12 +459,10 @@ def apply_changes_copart(
             spark,
             snap,
             all_files,
-            epoch
-            if isinstance(epoch, int)
-            else f"{min(epoch_set)}-{max(epoch_set)}",
+            _epoch_label(epoch),
             table.logical_schema(),
         )
-        _mark("generated")
+        clock.mark("generated")
     base_schema = table.schema()
     # renamed columns: producers write logical names, files store physical
     # — the inverse map rides into the footer union and every per-file
@@ -511,7 +486,7 @@ def apply_changes_copart(
         evolved = base_schema
     # field-list comparison, not a length check: a WIDENING evolution
     # (int -> long) changes a type without adding a column
-    evolved_changed = evolved.fields != base_schema.fields
+    new_schema = evolved if evolved.fields != base_schema.fields else None
 
     chunks = [
         (b, chunk)
@@ -526,25 +501,12 @@ def apply_changes_copart(
     # raw generation stays "unmerged" so the read path resolves it.
     n_chunked_buckets = len({b for b, _ in chunks})
     folded_gen = engine == "lww" and len(chunks) == n_chunked_buckets
-    _mark("plan")
+    clock.mark("plan")
 
     updates: dict[int, dict] = {}
     stage = table.new_staging_dir()
     if chunks:
         os.makedirs(stage, exist_ok=True)
-        n_parts = min(
-            len(chunks),
-            cfg.merge_partitions
-            or 2 * spark.sparkContext.defaultParallelism,
-        )
-        # parallelize slices the chunk list round-robin into exactly
-        # n_parts partitions with NO shuffle stage — a repartition() here
-        # would add a whole extra stage barrier per epoch just to move
-        # ~n_buckets metadata rows
-        driving = spark.createDataFrame(
-            spark.sparkContext.parallelize(chunks, n_parts),
-            "bucket int, files array<string>",
-        )
         task = _make_task(
             stage,
             table.root,
@@ -560,79 +522,38 @@ def apply_changes_copart(
             fold=engine == "lww",
             forbid_deletes=engine == "aggregate",
         )
-        rows = driving.mapInPandas(task, _RESULT_SCHEMA).collect()
-        _mark("merge_write")
-        for r in rows:
-            st = json.loads(r["stats"])
-            info = updates.setdefault(
-                r["bucket"],
-                {"files": [], "rows": 0, "max_lsn": None, "fstats": []},
-            )
-            info["files"].append(r["relpath"])
-            info["rows"] += st["rows"]
-            if st["max_lsn"] is not None:
-                info["max_lsn"] = (
-                    st["max_lsn"]
-                    if info["max_lsn"] is None
-                    else max(info["max_lsn"], st["max_lsn"])
-                )
-            info["fstats"].append(
-                [st["rows"], st["max_lsn"], st.get("kmin"), st.get("kmax"),
-                 st.get("cstats") or None]
-            )
+        updates = _map_buckets(spark, chunks, cfg.merge_partitions, task)
+        clock.mark("merge_write")
+    return _finish(
+        spark, table, cfg, clock, snap, epoch, updates, new_schema,
+        merged=folded_gen, stage=stage, stage_only=stage_only, extra=extra,
+    )
 
-    if stage_only:
-        out = _staged_result(
-            table, epoch, sorted(epoch_set), updates,
-            evolved if evolved_changed else None, stage, t0, phases,
-            evolved_changed, merged=folded_gen,
-        )
-        out["copartitioned"] = True
-        return out
-    try:
-        sid = table.commit(
-            op="evolve" if evolved_changed else "append",
-            epoch=epoch,
-            bucket_updates=updates,
-            new_schema=evolved if evolved_changed else None,
-            mode="append",
-            merged=folded_gen,
-            expected_parent=snap["snapshot_id"],
-        )
-    except EpochAlreadyAppliedError:
-        return _skipped_by_race(table, epoch, t0)
-    _mark("commit")
-    compacted_sid = None
-    if key_cols is not None and cfg.compact_threshold:
-        # footer-only under "auto": see the twin call in merge.py — inline
-        # auto-compaction is ingest-path work, blooms belong to maintenance
-        compacted_sid = table.compact_if_needed(
-            spark,
-            cfg.compact_threshold,
-            salt_factor=cfg.salt_factor,
-            max_buckets=cfg.compact_max_buckets,
-            blooms=cfg.key_blooms == "force",
-        )
-        if compacted_sid is not None:
-            sid = compacted_sid
-            _mark("compact")
-    return {
-        "epoch": epoch,
-        "skipped": False,
-        "copartitioned": True,
-        "rows_applied": sum(u["rows"] for u in updates.values()),
-        "buckets_touched": len(updates),
-        "seconds": time.monotonic() - t0,
-        "snapshot_id": sid,
-        "schema_evolved": evolved_changed,
-        "compacted": compacted_sid is not None,
-        "phases": phases,
-        **(
-            {"constraint_violations": constraint_counts}
-            if constraint_counts is not None
-            else {}
-        ),
-    }
+
+def _map_buckets(
+    spark: SparkSession,
+    work: list[tuple[int, list[str]]],
+    merge_partitions: int | None,
+    task,
+) -> dict[int, dict]:
+    """Run ``task`` over ``(bucket, files)`` rows with no shuffle and fold
+    the stats rows it returns into commit-ready ``bucket_updates``."""
+    n_parts = min(
+        len(work),
+        merge_partitions or 2 * spark.sparkContext.defaultParallelism,
+    )
+    # parallelize slices the work list round-robin into exactly n_parts
+    # partitions with NO shuffle stage — a repartition() here would add a
+    # whole extra stage barrier per call just to move ~n_buckets metadata
+    # rows
+    driving = spark.createDataFrame(
+        spark.sparkContext.parallelize(work, n_parts),
+        "bucket int, files array<string>",
+    )
+    rows = driving.mapInPandas(task, _RESULT_SCHEMA).collect()
+    return fold_file_stats(
+        (r["bucket"], r["relpath"], json.loads(r["stats"])) for r in rows
+    )
 
 
 def rewrite_buckets_map(
@@ -820,31 +741,4 @@ def rewrite_buckets_map(
                     }
                 )
 
-    n_parts = min(
-        len(work),
-        merge_partitions or 2 * spark.sparkContext.defaultParallelism,
-    )
-    driving = spark.createDataFrame(
-        spark.sparkContext.parallelize(work, n_parts),
-        "bucket int, files array<string>",
-    )
-    updates: dict[int, dict] = {}
-    for r in driving.mapInPandas(task, _RESULT_SCHEMA).collect():
-        st = json.loads(r["stats"])
-        info = updates.setdefault(
-            r["bucket"],
-            {"files": [], "rows": 0, "max_lsn": None, "fstats": []},
-        )
-        info["files"].append(r["relpath"])
-        info["rows"] += st["rows"]
-        if st["max_lsn"] is not None:
-            info["max_lsn"] = (
-                st["max_lsn"]
-                if info["max_lsn"] is None
-                else max(info["max_lsn"], st["max_lsn"])
-            )
-        info["fstats"].append(
-            [st["rows"], st["max_lsn"], st.get("kmin"), st.get("kmax"),
-             st.get("cstats") or None]
-        )
-    return updates
+    return _map_buckets(spark, work, merge_partitions, task)

@@ -131,66 +131,187 @@ def _merge_kernel(key_cols: list[str]):
     return kernel
 
 
-def _skipped_by_race(table: LakeTable, epoch, t0: float) -> dict:
-    """A concurrent writer applied this epoch between our entry check and our
-    commit CAS — exactly-once means our staged files stay orphaned (GC'd by
-    clean_orphans) and the apply reports itself as skipped."""
+class _PhaseClock:
+    """Per-apply stopwatch: ``mark(name)`` records the seconds since the
+    previous mark (or the start) under ``phases[name]``."""
+
+    def __init__(self) -> None:
+        self.t0 = self._last = time.monotonic()
+        self.phases: dict[str, float] = {}
+
+    def mark(self, name: str) -> None:
+        now = time.monotonic()
+        self.phases[name] = round(now - self._last, 3)
+        self._last = now
+
+    def seconds(self) -> float:
+        return time.monotonic() - self.t0
+
+
+def _epoch_set(epoch) -> set[int]:
+    return (
+        {epoch} if isinstance(epoch, int)
+        else set() if epoch is None
+        else set(epoch)
+    )
+
+
+def _epoch_label(epoch) -> str | int:
+    """The DLQ/error label of a batch: the epoch, or ``lo-hi`` for a
+    folded window."""
+    if isinstance(epoch, int):
+        return epoch
+    epochs = _epoch_set(epoch)
+    return f"{min(epochs)}-{max(epochs)}"
+
+
+def _skipped(table: LakeTable, epoch, seconds: float, **why) -> dict:
     return {
         "epoch": epoch,
         "skipped": True,
-        "skipped_by": "concurrent-writer",
+        **why,
         "rows_applied": 0,
         "buckets_touched": 0,
-        "seconds": round(time.monotonic() - t0, 3),
+        "seconds": seconds,
         "snapshot_id": table.current_snapshot_id(),
     }
 
 
-def _staged_result(
+def _ledger_skip(table: LakeTable, epoch) -> dict | None:
+    """Idempotent replay guard — the reference's processed-files skip
+    (main.py:100-131), at change-batch granularity: the skip result when
+    every epoch of the batch is already applied, None when none is. A
+    folded window that is only PARTLY applied cannot be replayed."""
+    epoch_set = _epoch_set(epoch)
+    already = epoch_set & table.applied_epochs()
+    if epoch_set and already == epoch_set:
+        return _skipped(table, epoch, 0.0)
+    if already:
+        raise ValueError(
+            f"window epochs {sorted(already)} already applied but "
+            f"{sorted(epoch_set - already)} are not — a folded batch cannot "
+            "be partially replayed; re-plan the window over pending epochs"
+        )
+    return None
+
+
+def _finish(
+    spark: SparkSession,
     table: LakeTable,
+    cfg: EngineConfig,
+    clock: _PhaseClock,
+    snap: dict | None,
     epoch,
-    epochs: list[int],
     updates: dict[int, dict],
-    new_schema,
-    stage: str,
-    t0: float,
-    phases: dict,
-    evolved_changed: bool,
+    new_schema: T.StructType | None,
+    *,
+    mode: str = "append",
     merged: bool = True,
+    stage: str | None = None,
+    stage_only: bool = False,
+    props: dict | None = None,
+    expected_props: dict | None = None,
+    extra: dict | None = None,
 ) -> dict:
-    """Persist the pending-commit descriptor (WAP stage) and report it."""
-    token = table.stage_commit(
-        op="evolve" if evolved_changed else "append",
-        epochs=epochs,
-        bucket_updates=updates,
-        new_schema=new_schema,
-        stage_dir=stage,
-        merged=merged,
+    """Commit (or, under ``stage_only``, stage) one applied batch and report
+    it — the single commit point of every apply path.
+
+    ``snap`` is the snapshot the batch was planned against: the CAS parent,
+    and whose key columns decide inline compaction (keyed append-mode
+    commits compact; keyless appends and CoW rewrites never do). ``None``
+    commits against whatever head the commit finds. The op follows from the
+    inputs: ``evolve`` with a ``new_schema``, else ``append`` in append mode
+    and ``merge`` otherwise. ``extra`` is merged into the result.
+
+    A concurrent writer that applied the epoch between the ledger guard
+    and the CAS wins: exactly-once means our staged files stay orphaned
+    (GC'd by clean_orphans) and the apply reports itself as skipped."""
+    op = (
+        "evolve" if new_schema is not None
+        else "append" if mode == "append"
+        else "merge"
     )
-    return {
+    rows = sum(u["rows"] for u in updates.values())
+    out = {
         "epoch": epoch,
         "skipped": False,
-        "staged": True,
-        "token": token,
-        "rows_staged": sum(u["rows"] for u in updates.values()),
-        "rows_applied": 0,
+        "rows_applied": rows,
         "buckets_touched": len(updates),
-        "seconds": round(time.monotonic() - t0, 3),
-        "snapshot_id": None,
-        # highest LSN in the staged batch: a transaction uses it as the
-        # floor for later driver statements' minted LSNs, so statement
-        # order inside the block decides the fold even when an earlier
-        # MERGE staged WAL offsets far above the published high-water mark
-        "max_lsn": max(
-            (
-                u["max_lsn"]
-                for u in updates.values()
-                if u.get("max_lsn") is not None
-            ),
-            default=None,
-        ),
-        "phases": phases,
+        "schema_evolved": new_schema is not None,
+        "compacted": False,
+        **(extra or {}),
     }
+    if stage_only:
+        # the WAP stage: persist the pending-commit descriptor instead
+        token = table.stage_commit(
+            op=op,
+            epochs=sorted(_epoch_set(epoch)),
+            bucket_updates=updates,
+            new_schema=new_schema,
+            stage_dir=stage,
+            merged=merged,
+        )
+        out.update(
+            staged=True,
+            token=token,
+            rows_staged=rows,
+            rows_applied=0,
+            snapshot_id=None,
+            # highest LSN in the staged batch: a transaction uses it as the
+            # floor for later driver statements' minted LSNs, so statement
+            # order inside the block decides the fold even when an earlier
+            # MERGE staged WAL offsets far above the published high-water
+            # mark
+            max_lsn=max(
+                (
+                    u["max_lsn"]
+                    for u in updates.values()
+                    if u.get("max_lsn") is not None
+                ),
+                default=None,
+            ),
+            seconds=round(clock.seconds(), 3),
+            phases=clock.phases,
+        )
+        return out
+    try:
+        sid = table.commit(
+            op=op,
+            epoch=epoch,
+            bucket_updates=updates,
+            new_schema=new_schema,
+            mode=mode,
+            merged=merged,
+            expected_parent=snap["snapshot_id"] if snap else None,
+            props=props,
+            expected_props=expected_props,
+        )
+    except EpochAlreadyAppliedError:
+        return _skipped(
+            table, epoch, round(clock.seconds(), 3),
+            skipped_by="concurrent-writer",
+        )
+    clock.mark("commit")
+    keyed = snap is not None and snap["key_cols"] is not None
+    if mode == "append" and keyed and cfg.compact_threshold:
+        # inline auto-compaction rides the GATED ingest path: under "auto"
+        # it stays footer-only (blooms are built by explicit maintenance —
+        # run_maintenance.py / table.compact — where Iceberg likewise spends
+        # its stats budget); "force" pays the extra column-pruned read per
+        # rewritten file here too
+        compacted_sid = table.compact_if_needed(
+            spark,
+            cfg.compact_threshold,
+            salt_factor=cfg.salt_factor,
+            max_buckets=cfg.compact_max_buckets,
+            blooms=cfg.key_blooms == "force",
+        )
+        if compacted_sid is not None:
+            sid = compacted_sid
+            out["compacted"] = True
+            clock.mark("compact")
+    out.update(snapshot_id=sid, seconds=clock.seconds(), phases=clock.phases)
+    return out
 
 
 def apply_changes(
@@ -226,15 +347,7 @@ def apply_changes(
     ``abandon_staged``. Append-mode paths only (MoR / keyless): a staged
     CoW rewrite could not rebase over intervening commits at publish time."""
     cfg = cfg or EngineConfig()
-    t0 = time.monotonic()
-    phases: dict[str, float] = {}
-    _last = [t0]
-
-    def _mark(name: str) -> None:
-        now = time.monotonic()
-        phases[name] = round(now - _last[0], 3)
-        _last[0] = now
-
+    clock = _PhaseClock()
     if epoch is None and expected_props is None:
         raise ValueError(
             "epoch=None requires expected_props — some exactly-once guard "
@@ -245,53 +358,31 @@ def apply_changes(
             "stage_only requires an integer epoch ledger and no table "
             "properties — the publish is a plain append commit"
         )
-    epoch_set = (
-        {epoch} if isinstance(epoch, int)
-        else set() if epoch is None
-        else set(epoch)
-    )
-    already = epoch_set & table.applied_epochs()
-    if epoch_set and already == epoch_set:
-        # Idempotent replay guard — the reference's processed-files skip
-        # (main.py:100-131), at change-batch granularity.
-        return {
-            "epoch": epoch,
-            "skipped": True,
-            "rows_applied": 0,
-            "buckets_touched": 0,
-            "seconds": 0.0,
-            "snapshot_id": table.current_snapshot_id(),
-        }
-    if already:
-        raise ValueError(
-            f"window epochs {sorted(already)} already applied but "
-            f"{sorted(epoch_set - already)} are not — a folded batch cannot "
-            "be partially replayed; re-plan the window over pending epochs"
-        )
+    skip = _ledger_skip(table, epoch)
+    if skip is not None:
+        return skip
 
     snap = table.snapshot()
     # CHECK constraints (lake/constraints.py): fail / drop / dlq the
     # violating events BEFORE the merge, against LOGICAL names (the
     # language constraints are declared in). One map-only pass over the
     # batch; tables without constraints skip this entirely.
-    constraint_counts = None
+    extra: dict = {}
     if any(
         k.startswith("constraint.") and v is not None
         for k, v in (snap.get("props") or {}).items()
     ):
         from cnpj_data_pipeline_spark.lake.constraints import enforce_general
 
-        changes, constraint_counts = enforce_general(
+        changes, extra["constraint_violations"] = enforce_general(
             spark,
             snap,
             changes,
-            epoch
-            if isinstance(epoch, int)
-            else f"{min(epoch_set)}-{max(epoch_set)}",
+            _epoch_label(epoch),
             os.path.join(table.root, "_dlq", "constraints"),
             table.logical_schema(),
         )
-        _mark("constraints")
+        clock.mark("constraints")
     # GENERATED columns (lake/generated.py): compute absent declared
     # columns (one fused Catalyst projection), verify supplied ones (one
     # map-only pass). Tables without declarations skip this entirely.
@@ -305,12 +396,10 @@ def apply_changes(
             spark,
             snap,
             changes,
-            epoch
-            if isinstance(epoch, int)
-            else f"{min(epoch_set)}-{max(epoch_set)}",
+            _epoch_label(epoch),
             table.logical_schema(),
         )
-        _mark("generated")
+        clock.mark("generated")
     # renamed columns: producers speak logical names, files store physical
     # — map the batch at the boundary (identity when nothing was renamed)
     changes = batch_to_physical(changes, snap)
@@ -342,7 +431,7 @@ def apply_changes(
     )
     # field-list comparison, not a length check: a WIDENING evolution
     # (int -> long) changes a type without adding a column
-    evolved_changed = evolved.fields != base_schema.fields
+    new_schema = evolved if evolved.fields != base_schema.fields else None
 
     # -- normalize the batch: payload aligned to evolved schema + (op, lsn)
     ch = changes
@@ -357,8 +446,12 @@ def apply_changes(
     # extra shuffle (window by key) for no semantic gain. The standalone
     # operator remains available as operators.dedup.lww_dedup (W1).
 
-    _mark("plan")
+    clock.mark("plan")
 
+    # copy-on-write rewrites the buckets the batch touches; the keyless and
+    # merge-on-read paths append delta files to them
+    cow = key_cols is not None and cfg.write_mode != "mor"
+    touched: list[int] = []
     if key_cols is None:
         # KEYLESS APPEND-ONLY path (the reference's no-PK table family:
         # ``socios``/``dados_simples`` take pure executemany INSERT with no
@@ -379,52 +472,7 @@ def apply_changes(
             F.col("op").alias(OP_META_COL),
             F.col(BUCKET_COL),
         )
-        if cfg.write_audit_col:
-            phys = phys.withColumn(cfg.audit_col, F.current_timestamp())
-        stage = table.new_staging_dir()
-        _mark("build_plan")
-        with owned_write_conf(spark):
-            phys.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
-        _mark("append_write")
-        updates = table.collect_staged(stage, spark, blooms=cfg.key_blooms)
-        _mark("collect_staged")
-        if stage_only:
-            return _staged_result(
-                table, epoch, sorted(epoch_set), updates,
-                evolved if evolved_changed else None, stage, t0, phases,
-                evolved_changed,
-            )
-        try:
-            sid = table.commit(
-                op="evolve" if evolved_changed else "append",
-                epoch=epoch,
-                bucket_updates=updates,
-                new_schema=evolved if evolved_changed else None,
-                mode="append",
-                expected_parent=snap["snapshot_id"],
-                props=props,
-                expected_props=expected_props,
-            )
-        except EpochAlreadyAppliedError:
-            return _skipped_by_race(table, epoch, t0)
-        _mark("commit")
-        return {
-            "epoch": epoch,
-            "skipped": False,
-            "rows_applied": sum(u["rows"] for u in updates.values()),
-            "buckets_touched": len(updates),
-            "seconds": time.monotonic() - t0,
-            "snapshot_id": sid,
-            "schema_evolved": evolved_changed,
-            "phases": phases,
-            **(
-                {"constraint_violations": constraint_counts}
-                if constraint_counts is not None
-                else {}
-            ),
-        }
-
-    if cfg.write_mode == "mor":
+    elif cfg.write_mode == "mor":
         # MERGE-ON-READ fast path: no state read at all. LWW-dedup the batch
         # (batch losers can never be global winners — the total order is the
         # same one readers apply), append the winners as delta files to their
@@ -500,221 +548,121 @@ def apply_changes(
             *extra_meta,
             F.col(BUCKET_COL),
         )
-        if cfg.write_audit_col:
-            phys = phys.withColumn(cfg.audit_col, F.current_timestamp())
-
-        stage = table.new_staging_dir()
-        _mark("build_plan")
-        with owned_write_conf(spark):
-            phys.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
-        _mark("merge_write")
-        updates = table.collect_staged(stage, spark, blooms=cfg.key_blooms)
-        _mark("collect_staged")
-        if stage_only:
-            return _staged_result(
-                table, epoch, sorted(epoch_set), updates,
-                evolved if evolved_changed else None, stage, t0, phases,
-                evolved_changed,
-            )
-        try:
-            sid = table.commit(
-                op="evolve" if evolved_changed else "append",
-                epoch=epoch,
-                bucket_updates=updates,
-                new_schema=evolved if evolved_changed else None,
-                mode="append",
-                expected_parent=snap["snapshot_id"],
-                props=props,
-                expected_props=expected_props,
-            )
-        except EpochAlreadyAppliedError:
-            return _skipped_by_race(table, epoch, t0)
-        _mark("commit")
-        compacted_sid = None
-        if cfg.compact_threshold:
-            # inline auto-compaction rides the GATED ingest path: under
-            # "auto" it stays footer-only (blooms are built by explicit
-            # maintenance — run_maintenance.py / table.compact — where
-            # Iceberg likewise spends its stats budget); "force" pays the
-            # extra column-pruned read per rewritten file here too
-            compacted_sid = table.compact_if_needed(
-                spark,
-                cfg.compact_threshold,
-                salt_factor=cfg.salt_factor,
-                max_buckets=cfg.compact_max_buckets,
-                blooms=cfg.key_blooms == "force",
-            )
-            if compacted_sid is not None:
-                sid = compacted_sid
-                _mark("compact")
-        secs = time.monotonic() - t0
-        rows_applied = sum(u["rows"] for u in updates.values())
-        return {
-            "epoch": epoch,
-            "skipped": False,
-            "rows_applied": rows_applied,
-            "buckets_touched": len(updates),
-            "seconds": secs,
-            "snapshot_id": sid,
-            "schema_evolved": evolved_changed,
-            "compacted": compacted_sid is not None,
-            "phases": phases,
-            **(
-                {"constraint_violations": constraint_counts}
-                if constraint_counts is not None
-                else {}
-            ),
-        }
-
-    # -- touched buckets (bounded by n_buckets; tiny driver-side list).
-    # When the batch is large relative to the bucket count (cheap footer-level
-    # row-count hint from the WAL source), every bucket is touched with
-    # overwhelming probability ((1-1/B)^n), so skip the distinct scan — treating
-    # an actually-empty bucket as touched is correct (its state is read and
-    # rewritten unchanged), it only costs a little write amplification.
-    if batch_rows_hint is not None and batch_rows_hint >= 16 * n_buckets:
-        touched = list(range(n_buckets))
     else:
-        touched = sorted(
-            r[0] for r in ch.select(BUCKET_COL).distinct().collect()
-        )
-    _mark("touched_scan")
-    if not touched:
-        try:
-            sid = table.commit(
-                op="merge", epoch=epoch, bucket_updates={},
-                props=props, expected_props=expected_props,
+        # -- touched buckets (bounded by n_buckets; tiny driver-side list).
+        # When the batch is large relative to the bucket count (cheap
+        # footer-level row-count hint from the WAL source), every bucket is
+        # touched with overwhelming probability ((1-1/B)^n), so skip the
+        # distinct scan — treating an actually-empty bucket as touched is
+        # correct (its state is read and rewritten unchanged), it only
+        # costs a little write amplification.
+        if batch_rows_hint is not None and batch_rows_hint >= 16 * n_buckets:
+            touched = list(range(n_buckets))
+        else:
+            touched = sorted(
+                r[0] for r in ch.select(BUCKET_COL).distinct().collect()
             )
-        except EpochAlreadyAppliedError:
-            return _skipped_by_race(table, epoch, t0)
-        return {
-            "epoch": epoch,
-            "skipped": False,
-            "rows_applied": 0,
-            "buckets_touched": 0,
-            "seconds": time.monotonic() - t0,
-            "snapshot_id": sid,
-        }
+        clock.mark("touched_scan")
+        if not touched:
+            # an empty batch marks its epochs applied and changes nothing
+            # else: no schema evolution, no CAS parent (it touches no bucket)
+            return _finish(
+                spark, table, cfg, clock, None, epoch, {}, None,
+                mode="replace", props=props, expected_props=expected_props,
+            )
 
-    # -- current state of touched buckets, padded to the evolved schema,
-    #    re-enveloped with its ORIGINAL (lsn, op) so the combined LWW total
-    #    order is exactly the oracle's (no state-vs-change special cases).
-    state = table.read_state_for_merge(spark, touched, evolved)
-    state_env = state.select(
-        *[F.col(f.name) for f in evolved.fields],
-        F.col(OP_META_COL).alias("op"),
-        F.col(LSN_META_COL).alias("lsn"),
-        F.col(BUCKET_COL),
-    )
+        # -- current state of touched buckets, padded to the evolved schema,
+        #    re-enveloped with its ORIGINAL (lsn, op) so the combined LWW
+        #    total order is exactly the oracle's (no state-vs-change special
+        #    cases).
+        state = table.read_state_for_merge(spark, touched, evolved)
+        state_env = state.select(
+            *[F.col(f.name) for f in evolved.fields],
+            F.col(OP_META_COL).alias("op"),
+            F.col(LSN_META_COL).alias("lsn"),
+            F.col(BUCKET_COL),
+        )
 
-    combined = state_env.unionByName(ch)
-
-    # -- per-key winner
-    if cfg.merge_strategy == "native":
-        # SINGLE-SHUFFLE merge: repartition once on (bucket, salt-of-full-key),
-        # then run the LWW window partitioned by (bucket, salt, key...). Because
-        # (bucket, salt) is a subset of the window's partition keys, the
-        # HashPartitioning from the explicit repartition already satisfies the
-        # window's ClusteredDistribution — EnsureRequirements inserts only a
-        # local sort, no second exchange. The explicit numPartitions also keeps
-        # AQE from coalescing the write stage below the core count, and each
-        # output task holds exactly one (bucket, salt) group, so partitionBy
-        # emits exactly one file per task (bounded file counts at scale).
-        from pyspark.sql import Window
-
-        combined = combined.withColumn(
+        combined = state_env.unionByName(ch).withColumn(
             SALT_COL,
             F.pmod(
                 F.xxhash64(*[F.col(c) for c in key_cols], F.lit(cfg.salt_seed)),
                 F.lit(cfg.salt_factor),
             ).cast("int"),
         )
-        n_parts = min(
-            _merge_partitions(spark, n_buckets, cfg.salt_factor, cfg.merge_partitions),
-            max(len(touched) * cfg.salt_factor, 1),
-        )
-        parted = combined.repartition(
-            n_parts, F.col(BUCKET_COL), F.col(SALT_COL)
-        )
-        merged = lww_winners_agg(
-            parted, [BUCKET_COL, SALT_COL, *key_cols]
-        ).drop(SALT_COL)
-    else:
-        # salted grouped-map merge: group key is (bucket, salt-of-full-key) so a
-        # hot bucket splits across salt_factor Arrow tasks while each
-        # (conv_id, turn_idx) stays within exactly one group.
-        combined = combined.withColumn(
-            SALT_COL,
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(cfg.salt_seed)),
-                F.lit(cfg.salt_factor),
-            ).cast("int"),
-        )
-        out_schema = T.StructType(
-            list(evolved.fields)
-            + [
-                T.StructField("op", T.StringType(), False),
-                T.StructField("lsn", T.LongType(), False),
-                T.StructField(BUCKET_COL, T.IntegerType(), False),
-                T.StructField(SALT_COL, T.IntegerType(), False),
-            ]
-        )
-        merged = (
-            combined.groupBy(BUCKET_COL, SALT_COL)
-            .applyInPandas(_merge_kernel(key_cols), schema=out_schema)
-            .drop(SALT_COL)
+
+        # -- per-key winner
+        if cfg.merge_strategy == "native":
+            # SINGLE-SHUFFLE merge: repartition once on (bucket,
+            # salt-of-full-key), then run the LWW window partitioned by
+            # (bucket, salt, key...). Because (bucket, salt) is a subset of
+            # the window's partition keys, the HashPartitioning from the
+            # explicit repartition already satisfies the window's
+            # ClusteredDistribution — EnsureRequirements inserts only a local
+            # sort, no second exchange. The explicit numPartitions also keeps
+            # AQE from coalescing the write stage below the core count, and
+            # each output task holds exactly one (bucket, salt) group, so
+            # partitionBy emits exactly one file per task (bounded file
+            # counts at scale).
+            n_parts = min(
+                _merge_partitions(
+                    spark, n_buckets, cfg.salt_factor, cfg.merge_partitions
+                ),
+                max(len(touched) * cfg.salt_factor, 1),
+            )
+            parted = combined.repartition(
+                n_parts, F.col(BUCKET_COL), F.col(SALT_COL)
+            )
+            merged = lww_winners_agg(
+                parted, [BUCKET_COL, SALT_COL, *key_cols]
+            ).drop(SALT_COL)
+        else:
+            # salted grouped-map merge: group key is (bucket,
+            # salt-of-full-key) so a hot bucket splits across salt_factor
+            # Arrow tasks while each (conv_id, turn_idx) stays within
+            # exactly one group.
+            out_schema = T.StructType(
+                list(evolved.fields)
+                + [
+                    T.StructField("op", T.StringType(), False),
+                    T.StructField("lsn", T.LongType(), False),
+                    T.StructField(BUCKET_COL, T.IntegerType(), False),
+                    T.StructField(SALT_COL, T.IntegerType(), False),
+                ]
+            )
+            merged = (
+                combined.groupBy(BUCKET_COL, SALT_COL)
+                .applyInPandas(_merge_kernel(key_cols), schema=out_schema)
+                .drop(SALT_COL)
+            )
+
+        # -- physical rows: payload + __lsn/__op (tombstones kept)
+        phys = merged.select(
+            *[F.col(f.name) for f in evolved.fields],
+            F.col("lsn").alias(LSN_META_COL),
+            F.col("op").alias(OP_META_COL),
+            F.col(BUCKET_COL),
         )
 
-    # -- physical rows: payload + __lsn/__op (tombstones kept)
-    phys = merged.select(
-        *[F.col(f.name) for f in evolved.fields],
-        F.col("lsn").alias(LSN_META_COL),
-        F.col("op").alias(OP_META_COL),
-        F.col(BUCKET_COL),
-    )
     if cfg.write_audit_col:
         phys = phys.withColumn(cfg.audit_col, F.current_timestamp())
 
     stage = table.new_staging_dir()
-    _mark("build_plan")
+    clock.mark("build_plan")
     with owned_write_conf(spark):
         phys.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
-    _mark("merge_write")
+    clock.mark("append_write" if key_cols is None else "merge_write")
 
     updates = table.collect_staged(stage, spark, blooms=cfg.key_blooms)
-    _mark("collect_staged")
+    clock.mark("collect_staged")
     # a touched bucket can stage zero files only if all its rows vanished —
     # impossible under tombstone retention, but keep the manifest consistent:
     for b in touched:
         updates.setdefault(b, {"files": [], "rows": 0, "max_lsn": None})
 
-    try:
-        sid = table.commit(
-            op="evolve" if evolved_changed else "merge",
-            epoch=epoch,
-            bucket_updates=updates,
-            new_schema=evolved if evolved_changed else None,
-            expected_parent=snap["snapshot_id"],
-            props=props,
-            expected_props=expected_props,
-        )
-    except EpochAlreadyAppliedError:
-        return _skipped_by_race(table, epoch, t0)
-    _mark("commit")
-    secs = time.monotonic() - t0
-    rows_applied = sum(u["rows"] for u in updates.values())
-    return {
-        "epoch": epoch,
-        "skipped": False,
-        "rows_applied": rows_applied,
-        "buckets_touched": len(touched),
-        "seconds": secs,
-        "snapshot_id": sid,
-        "schema_evolved": evolved_changed,
-        "phases": phases,
-        **(
-            {"constraint_violations": constraint_counts}
-            if constraint_counts is not None
-            else {}
-        ),
-    }
+    return _finish(
+        spark, table, cfg, clock, snap, epoch, updates, new_schema,
+        mode="replace" if cow else "append", stage=stage,
+        stage_only=stage_only, props=props, expected_props=expected_props,
+        extra=extra,
+    )

@@ -233,3 +233,37 @@ def test_fk_sql_surface(spark, tmp_path):
     rows = execute_ddl(spark, "DESCRIBE EXTENDED turns", tables).collect()
     cons_row = [r for r in rows if r[0] == "Check Constraints"][0][1]
     assert "FOREIGN KEY" in cons_row
+
+
+def test_fk_dirty_batch_reads_parent_keys_once(spark, tmp_path, monkeypatch):
+    """The verdict counts and the drop filter share one probe: a dirty
+    epoch looks the parent's keys up exactly once per FK."""
+    parent = _parent(spark, tmp_path / "convs", ["c1"])
+    child = LakeTable.create(
+        str(tmp_path / "turns"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], 4
+    )
+    child.add_fk_constraint(
+        spark, "fk_conv", ["conv_id"], parent, on_violation="drop",
+        ref_name="convs",
+    )
+    calls = []
+    real_read_keys = LakeTable.read_keys
+
+    def counting_read_keys(self, *a, **kw):
+        calls.append(self.root)
+        return real_read_keys(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "read_keys", counting_read_keys)
+    for e in (0, 1):
+        rows = [
+            ("c1", e, "user", "ok", None, TS, "I", 10 + 2 * e, e),
+            ("c9", e, "user", "orphan", None, TS, "I", 11 + 2 * e, e),
+        ]
+        m = apply_changes(
+            spark, child, spark.createDataFrame(rows, CHANGE_SCHEMA),
+            epoch=e, cfg=EngineConfig(n_buckets=4),
+        )
+        assert m["constraint_violations"] == {"fk_conv": 1}
+        assert calls == [parent.root] * (e + 1)
+    state = {(r.conv_id, r.turn_idx) for r in child.read(spark).collect()}
+    assert state == {("c1", 0), ("c1", 1)}
