@@ -1692,6 +1692,7 @@ def _history_stmt(spark: SparkSession, m: re.Match, tables: dict):
     import os
 
     name, loc, ine = m.group("name"), m.group("loc"), m.group("ine")
+    src = m.group("src")
     spec_path = os.path.join(loc, _HISTORY_SPEC_FILE)
     if os.path.exists(spec_path):
         if not ine:
@@ -1699,9 +1700,26 @@ def _history_stmt(spark: SparkSession, m: re.Match, tables: dict):
                 f"history table already exists at {loc!r} "
                 "(use CREATE HISTORY TABLE IF NOT EXISTS to re-register)"
             )
+        with open(spec_path, encoding="utf-8") as f:
+            spec = json.load(f)
+        # re-registering must not silently bind ON <src> to another source:
+        # a registered source must be the recorded root, an unregistered
+        # one the recorded name
+        t = tables.get(src)
+        src_root = t.root if isinstance(t, LakeTable) else t
+        if (
+            os.path.abspath(src_root) != os.path.abspath(spec["source_root"])
+            if src_root is not None
+            else src != spec["source"]
+        ):
+            raise ValueError(
+                f"history table at {loc!r} records source "
+                f"{spec['source']!r} at {spec['source_root']!r}; the "
+                f"statement names {src!r}"
+                + (f" at {src_root!r}" if src_root is not None else "")
+            )
         tables[name] = loc
         return LakeTable.load(loc)
-    src = m.group("src")
     if src not in tables:
         raise ValueError(
             f"unknown source table {src!r} (registered: {sorted(tables)})"

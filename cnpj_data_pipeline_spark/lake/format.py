@@ -145,6 +145,30 @@ def owned_write_conf(spark: SparkSession):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def local_frame(
+    spark: SparkSession, schema: T.StructType, rows: Sequence = ()
+) -> DataFrame:
+    """A ``schema``-typed frame over driver-side ``rows`` (tuples or Rows
+    in field order, as ``collect`` returns them), planned as a JVM
+    LocalRelation built from Arrow: evaluating it starts no Python worker.
+    ``createDataFrame(list)`` is a parallelize-backed scan that starts one
+    Python task per default partition on EVERY evaluation, an empty frame
+    included. Values pass through each
+    type's ``toInternal``, so collected values — naive local timestamps
+    included — round-trip exactly."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = [
+        pa.array([f.dataType.toInternal(r[i]) for r in rows], arrow.field(i).type)
+        for i, f in enumerate(schema.fields)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
 CHANGE_TYPE_COL = "change_type"  # typed change feed (read_changes_typed)
 
 
@@ -1743,7 +1767,7 @@ class LakeTable:
             else:
                 files = self._bucket_files(snap, bs)
             if not files:
-                out = spark.createDataFrame([], phys)
+                out = local_frame(spark, phys)
             else:
                 out = spark.read.schema(phys).parquet(*files)
             if scan_filter is not None:
@@ -1861,20 +1885,29 @@ class LakeTable:
         ).distinct()
         file_index = None
         scan_filter = None
+        if broadcast_keys:
+            # evaluate the caller's plan ONCE: one job collects the distinct
+            # (bucket, *on) rows, and the semi join's build side is a
+            # LocalRelation over them — neither the broadcast nor a
+            # re-collect of the returned frame re-runs `keys`
+            bcol = (
+                [bucket_expr(bcols, snap["n_buckets"]).alias("__b")]
+                if prunable
+                else []
+            )
+            key_rows = kd.select(*bcol, *on).collect()
+            kd = local_frame(
+                spark,
+                T.StructType([T.StructField(c, types[c]) for c in on]),
+                [tuple(r[c] for c in on) for r in key_rows],
+            )
         if not prunable:
             buckets = None  # cannot compute bucket ids from these columns
         elif broadcast_keys:
-            pairs = (
-                kd.select(
-                    bucket_expr(bcols, snap["n_buckets"]).alias("__b"),
-                    F.col(on[0]).alias("__k"),
-                )
-                .distinct()
-                .collect()
-            )
-            keys_by_bucket: dict[int, list] = {}
-            for r in pairs:
-                keys_by_bucket.setdefault(int(r["__b"]), []).append(r["__k"])
+            lead: dict[int, set] = {}
+            for r in key_rows:
+                lead.setdefault(int(r["__b"]), set()).add(r[on[0]])
+            keys_by_bucket = {b: list(ks) for b, ks in lead.items()}
             buckets = sorted(keys_by_bucket)
             if on[0] == key_cols[0]:
                 # file-level kmin/kmax stats are on the leading key column
@@ -1888,7 +1921,7 @@ class LakeTable:
             # subset of a key's versions. Bounded by the mget contract; the
             # env cap guards against degenerate huge IN lists.
             in_cap = int(os.environ.get("SPARK_GRAFT_KEY_IN_MAX", "8192"))
-            vals = sorted({r["__k"] for r in pairs})
+            vals = sorted({r[on[0]] for r in key_rows})
             if vals and len(vals) <= in_cap:
                 scan_filter = F.col(on[0]).isin(vals)
         else:
@@ -2167,7 +2200,7 @@ class LakeTable:
             + _phys_meta_fields(self.snapshot(to_sid))
         )
         if not new_files:
-            df = spark.createDataFrame([], phys)
+            df = local_frame(spark, phys)
         else:
             df = spark.read.schema(phys).parquet(*new_files)
         if not include_meta:
@@ -2252,8 +2285,8 @@ class LakeTable:
         phys_cols = payload_cols + [LSN_META_COL, OP_META_COL]
 
         if from_snapshot == 0:
-            pre = spark.createDataFrame(
-                [],
+            pre = local_frame(
+                spark,
                 T.StructType(list(end_schema.fields) + PHYSICAL_META_FIELDS),
             )
         else:
@@ -2331,7 +2364,7 @@ class LakeTable:
         )
         files = self._bucket_files(snap, buckets)
         if not files:
-            df = spark.createDataFrame([], phys)
+            df = local_frame(spark, phys)
         else:
             df = spark.read.schema(phys).parquet(*files)
         return df.withColumn(
@@ -3191,7 +3224,7 @@ class LakeTable:
                 for f in info["files"]
             ]
             if not files:
-                df = spark.createDataFrame([], phys)
+                df = local_frame(spark, phys)
             else:
                 df = spark.read.schema(phys).parquet(*files)
             return self._logical_alias(df, self.snapshot())
@@ -3610,7 +3643,7 @@ class LakeTable:
         if files:
             df = spark.read.schema(phys).parquet(*files)
         else:
-            df = spark.createDataFrame([], phys)
+            df = local_frame(spark, phys)
         return df.withColumn(
             BUCKET_COL, bucket_expr(self._bucket_cols_of(snap), new_n)
         )

@@ -542,15 +542,28 @@ def _map_buckets(
         len(work),
         merge_partitions or 2 * spark.sparkContext.defaultParallelism,
     )
-    # parallelize slices the work list round-robin into exactly n_parts
-    # partitions with NO shuffle stage — a repartition() here would add a
-    # whole extra stage barrier per call just to move ~n_buckets metadata
-    # rows
-    driving = spark.createDataFrame(
-        spark.sparkContext.parallelize(work, n_parts),
-        "bucket int, files array<string>",
+
+    # The driving frame is a JVM range of n_parts one-row partitions; task
+    # i takes its round-robin slice of `work` from the closure (PySpark
+    # broadcasts a closure over 1 MB). A Python-fed frame
+    # (createDataFrame over sc.parallelize) would start a SECOND Python
+    # worker in every task, and each worker pays ~130-180 ms of start-up
+    # before user code (pyspark's setup_spark_files re-scans every zip
+    # importer on the worker path) — more than a bucket's Arrow fold; a
+    # repartition() would add a shuffle stage instead.
+    def run(ids: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in ids:
+            for i in pdf["id"]:
+                mine = work[int(i)::n_parts]
+                yield from task(
+                    iter([pd.DataFrame(mine, columns=["bucket", "files"])])
+                )
+
+    rows = (
+        spark.range(0, n_parts, 1, n_parts)
+        .mapInPandas(run, _RESULT_SCHEMA)
+        .collect()
     )
-    rows = driving.mapInPandas(task, _RESULT_SCHEMA).collect()
     return fold_file_stats(
         (r["bucket"], r["relpath"], json.loads(r["stats"])) for r in rows
     )

@@ -250,3 +250,33 @@ def test_scd2_sql_surface(spark, tmp_path):
     assert "h" in fresh
     with pytest.raises(ValueError, match="already exists"):
         execute_ddl(spark, stmt, fresh)
+
+
+def test_scd2_if_not_exists_rejects_other_source(spark, tmp_path):
+    """CREATE HISTORY TABLE IF NOT EXISTS re-registers only against the
+    source the sidecar records: naming another source (or the recorded
+    name bound to another root) raises instead of silently binding the
+    history to the old source."""
+    from cnpj_data_pipeline_spark.lake.ddl import execute_ddl
+
+    cfg = EngineConfig(n_buckets=4)
+    changes = gen_changes(spark, n_events=600, n_convs=30, n_epochs=1)
+    batches = list(epoch_batches(changes, 1))
+    roots = {n: str(tmp_path / n) for n in ("a", "b")}
+    for root in roots.values():
+        IngestJob(root, cfg).run_batches(spark, batches)
+    tables = {n: LakeTable.load(r) for n, r in roots.items()}
+    loc = str(tmp_path / "hist")
+    execute_ddl(spark, f"CREATE HISTORY TABLE h ON a LOCATION '{loc}'", tables)
+
+    ine = f"CREATE HISTORY TABLE IF NOT EXISTS h ON {{}} LOCATION '{loc}'"
+    with pytest.raises(ValueError, match="records source 'a'"):
+        execute_ddl(spark, ine.format("b"), tables)
+    with pytest.raises(ValueError, match="records source 'a'"):
+        execute_ddl(spark, ine.format("a"), {"a": tables["b"]})
+    with pytest.raises(ValueError, match="records source 'a'"):
+        execute_ddl(spark, ine.format("c"), {})
+    fresh = {"a": LakeTable.load(roots["a"])}
+    execute_ddl(spark, ine.format("a"), fresh)
+    assert fresh["h"] == loc
+    execute_ddl(spark, ine.format("a"), {})  # unregistered: name matches
