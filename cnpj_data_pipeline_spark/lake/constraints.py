@@ -362,7 +362,9 @@ def check_fail_only(
             for c in spec["fk"]["cols"]
         }
     )
-    df = spark.read.parquet(*wal_files)
+    from cnpj_data_pipeline_spark.lake.format import scan_files
+
+    df = scan_files(spark, wal_files)
     # WAL files may carry retired logical names (a producer behind on a
     # rename) — normalize to CURRENT logical names before evaluating
     inv = {

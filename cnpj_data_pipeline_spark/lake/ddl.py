@@ -1732,14 +1732,16 @@ def _history_stmt(spark: SparkSession, m: re.Match, tables: dict):
         "source_root": source_root,
         "index_root": loc,  # consumer-listing key (SHOW CONSUMERS)
     }
-    os.makedirs(loc, exist_ok=True)
+    from cnpj_data_pipeline_spark.plans.scd2 import SCD2SyncJob
+
+    # sync BEFORE the sidecar lands: a failing sync (a keyless source, say)
+    # leaves no spec behind to make a retried CREATE say "already exists";
+    # a sync that fails midway resumes under the history table's own ledger
+    SCD2SyncJob(source_root, loc).run_once(spark)
     tmp = spec_path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(spec, f, indent=1)
     os.replace(tmp, spec_path)
-    from cnpj_data_pipeline_spark.plans.scd2 import SCD2SyncJob
-
-    SCD2SyncJob(source_root, loc).run_once(spark)
     tables[name] = loc
     return LakeTable.load(loc)
 

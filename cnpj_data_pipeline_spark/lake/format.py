@@ -78,6 +78,7 @@ import glob
 import json
 import os
 import re
+import threading
 import time as _time
 import uuid as _uuid
 from contextlib import contextmanager
@@ -167,6 +168,33 @@ def local_frame(
         for i, f in enumerate(schema.fields)
     ]
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_scan_conf_lock = threading.Lock()
+
+
+def scan_files(
+    spark: SparkSession, files: Sequence[str], schema: T.StructType | None = None
+) -> DataFrame:
+    """A parquet scan over an explicit file list — a snapshot manifest's or
+    a WAL epoch's — with ``schema`` pinned (``None`` infers it from the
+    footers). No files and a schema give an empty ``local_frame``.
+
+    Past ``parallelPartitionDiscovery.threshold`` paths (default 32), Spark
+    stats them with a distributed job of one task per file. The manifest
+    already names every file and the format's ``os.link`` CAS needs a
+    POSIX filesystem the driver mounts, so the threshold is pinned to at
+    least ``len(files)`` while ``load`` lists them, eagerly, on the driver.
+    A missing file still fails at load. The lock keeps concurrent scans in
+    one process from restoring each other's pinned value."""
+    if not files and schema is not None:
+        return local_frame(spark, schema)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    with _scan_conf_lock:
+        pin = max(int(spark.conf.get(_DISCOVERY_THRESHOLD)), len(files))
+        with scoped_sql_conf(spark, {_DISCOVERY_THRESHOLD: str(pin)}):
+            return reader.parquet(*files)
 
 
 CHANGE_TYPE_COL = "change_type"  # typed change feed (read_changes_typed)
@@ -1766,10 +1794,7 @@ class LakeTable:
                 files = [f for b in bs for f in file_index.get(b, [])]
             else:
                 files = self._bucket_files(snap, bs)
-            if not files:
-                out = local_frame(spark, phys)
-            else:
-                out = spark.read.schema(phys).parquet(*files)
+            out = scan_files(spark, files, phys)
             if scan_filter is not None:
                 out = out.filter(scan_filter)
             return out
@@ -1880,27 +1905,28 @@ class LakeTable:
         # throw under ANSI mode or silently WRAP to another key's value
         # under non-ANSI and return that key's rows
         types = {f.name: f.dataType for f in schema_from_json(snap["schema"]).fields}
-        kd = keys.select(
-            *[F.col(c).try_cast(types[c]).alias(c) for c in on]
-        ).distinct()
+        kd = keys.select(*[F.col(c).try_cast(types[c]).alias(c) for c in on])
         file_index = None
         scan_filter = None
         if broadcast_keys:
-            # evaluate the caller's plan ONCE: one job collects the distinct
-            # (bucket, *on) rows, and the semi join's build side is a
-            # LocalRelation over them — neither the broadcast nor a
-            # re-collect of the returned frame re-runs `keys`
+            # evaluate the caller's plan ONCE: one single-stage job collects
+            # the (bucket, *on) rows, deduplicated here rather than by a
+            # shuffle, and the semi join's build side is a LocalRelation over
+            # them — neither the broadcast nor a re-collect of the returned
+            # frame re-runs `keys`
             bcol = (
                 [bucket_expr(bcols, snap["n_buckets"]).alias("__b")]
                 if prunable
                 else []
             )
-            key_rows = kd.select(*bcol, *on).collect()
+            key_rows = list(dict.fromkeys(kd.select(*bcol, *on).collect()))
             kd = local_frame(
                 spark,
                 T.StructType([T.StructField(c, types[c]) for c in on]),
                 [tuple(r[c] for c in on) for r in key_rows],
             )
+        else:
+            kd = kd.distinct()
         if not prunable:
             buckets = None  # cannot compute bucket ids from these columns
         elif broadcast_keys:
@@ -2199,10 +2225,7 @@ class LakeTable:
             list(schema_from_json(end_schema_json).fields)
             + _phys_meta_fields(self.snapshot(to_sid))
         )
-        if not new_files:
-            df = local_frame(spark, phys)
-        else:
-            df = spark.read.schema(phys).parquet(*new_files)
+        df = scan_files(spark, new_files, phys)
         if not include_meta:
             df = df.drop(LSN_META_COL, OP_META_COL)
         # renamed columns surface under the WINDOW-END logical names, like
@@ -2362,11 +2385,7 @@ class LakeTable:
         phys = T.StructType(
             list(evolved_schema.fields) + _phys_meta_fields(snap)
         )
-        files = self._bucket_files(snap, buckets)
-        if not files:
-            df = local_frame(spark, phys)
-        else:
-            df = spark.read.schema(phys).parquet(*files)
+        df = scan_files(spark, self._bucket_files(snap, buckets), phys)
         return df.withColumn(
             BUCKET_COL, bucket_expr(self._bucket_cols_of(snap), snap["n_buckets"])
         )
@@ -2525,8 +2544,7 @@ class LakeTable:
                     F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1
                 ).cast("int")
                 bad = (
-                    spark.read.schema(self.physical_schema())
-                    .parquet(*files)
+                    scan_files(spark, files, self.physical_schema())
                     .where(
                         bucket_expr(
                             self._bucket_cols_of(snap), int(snap["n_buckets"]),
@@ -3223,11 +3241,9 @@ class LakeTable:
                 for info in desc["bucket_updates"].values()
                 for f in info["files"]
             ]
-            if not files:
-                df = local_frame(spark, phys)
-            else:
-                df = spark.read.schema(phys).parquet(*files)
-            return self._logical_alias(df, self.snapshot())
+            return self._logical_alias(
+                scan_files(spark, files, phys), self.snapshot()
+            )
         return self.read(
             spark,
             include_meta=include_meta,
@@ -3639,11 +3655,7 @@ class LakeTable:
             list(schema_from_json(snap["schema"]).fields)
             + _phys_meta_fields(snap)
         )
-        files = self._bucket_files(snap)
-        if files:
-            df = spark.read.schema(phys).parquet(*files)
-        else:
-            df = local_frame(spark, phys)
+        df = scan_files(spark, self._bucket_files(snap), phys)
         return df.withColumn(
             BUCKET_COL, bucket_expr(self._bucket_cols_of(snap), new_n)
         )

@@ -197,7 +197,9 @@ def check_generated_copart(
     gens = generated_of(snap)
     if not gens:
         return
-    df = spark.read.parquet(*wal_files)
+    from cnpj_data_pipeline_spark.lake.format import scan_files
+
+    df = scan_files(spark, wal_files)
     inv = {
         **{l: p for p, l in (snap.get("renames") or {}).items()},
         **(snap.get("retired_names") or {}),

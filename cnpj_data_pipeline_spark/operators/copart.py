@@ -180,7 +180,7 @@ def verify_bucket_placement(
     only — a buggy writer with a correct descriptor passes it."""
     from pyspark.sql import functions as F
 
-    from cnpj_data_pipeline_spark.lake.format import bucket_expr
+    from cnpj_data_pipeline_spark.lake.format import bucket_expr, scan_files
 
     all_files = [fp for fps in bucket_files.values() for fp in fps]
     if not all_files:
@@ -190,7 +190,7 @@ def verify_bucket_placement(
     expected = F.regexp_extract(
         F.input_file_name(), f"{BUCKET_COL}=(\\d+)", 1
     ).cast("int")
-    df = spark.read.parquet(*all_files)
+    df = scan_files(spark, all_files)
     bad = (
         df.where(bucket_expr(bcols, int(snap["n_buckets"])) != expected)
         .count()

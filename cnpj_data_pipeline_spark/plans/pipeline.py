@@ -94,11 +94,15 @@ class IngestJob:
         metrics = []
         done = 0
         rows_admitted = 0
-        for batch in batches:
+        # the epoch bound is checked BEFORE pulling the next batch: a lazy
+        # source reads its epoch (schema inference is a Spark job) on next()
+        it = iter(batches)
+        while max_epochs is None or done < max_epochs:
+            batch = next(it, None)
+            if batch is None:
+                break
             epoch, df = batch[0], batch[1]
             hint = batch[2] if len(batch) > 2 else None
-            if max_epochs is not None and done >= max_epochs:
-                break
             if (
                 max_rows is not None
                 and done > 0

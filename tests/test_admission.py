@@ -133,3 +133,25 @@ def test_multitable_bounded_admission_keeps_fk_barrier(spark, tmp_path):
         ("convs", 2),
         ("turns", 2),
     ]
+
+
+def test_max_epochs_reads_no_further_epoch(spark, tmp_path, monkeypatch):
+    """``run_stream(max_epochs=1)`` stops after its one apply: the epoch
+    after it is never read (``read_epoch`` infers the WAL schema with a
+    Spark job)."""
+    ch = gen_changes(spark, n_events=900, n_convs=40, n_epochs=3)
+    root = str(tmp_path / "wal3")
+    for e, b in epoch_batches(ch, 3):
+        cs.write_epoch(b, root, e)
+    calls = []
+    real = cs.read_epoch
+
+    def _counted(spark_, stream_root, epoch):
+        calls.append(epoch)
+        return real(spark_, stream_root, epoch)
+
+    monkeypatch.setattr(cs, "read_epoch", _counted)
+    job = IngestJob(str(tmp_path / "lake"), EngineConfig(n_buckets=4))
+    m = job.run_stream(spark, root, max_epochs=1)
+    assert [x["epoch"] for x in m if not x["skipped"]] == [0]
+    assert calls == [0]

@@ -280,3 +280,35 @@ def test_scd2_if_not_exists_rejects_other_source(spark, tmp_path):
     execute_ddl(spark, ine.format("a"), fresh)
     assert fresh["h"] == loc
     execute_ddl(spark, ine.format("a"), {})  # unregistered: name matches
+
+
+def test_scd2_failed_create_leaves_location_usable(spark, tmp_path):
+    """A CREATE HISTORY TABLE whose initial sync fails (a keyless source)
+    leaves no ``_history.json`` behind: a later CREATE at the same
+    location succeeds instead of reporting "already exists"."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from cnpj_data_pipeline_spark.lake.ddl import execute_ddl
+
+    keyless = LakeTable.create(
+        str(tmp_path / "keyless"),
+        T.StructType([T.StructField("v", T.StringType(), True)]),
+        key_cols=None,
+        n_buckets=4,
+    )
+    cfg = EngineConfig(n_buckets=4)
+    changes = gen_changes(spark, n_events=600, n_convs=30, n_epochs=1)
+    base = _ingest(spark, str(tmp_path / "base"), changes, 1, cfg)
+    tables = {"k": keyless, "t": base}
+    loc = str(tmp_path / "hist")
+    with pytest.raises(ValueError, match="keyed"):
+        execute_ddl(spark, f"CREATE HISTORY TABLE h ON k LOCATION '{loc}'", tables)
+    assert not os.path.exists(os.path.join(loc, "_history.json"))
+    assert "h" not in tables
+
+    execute_ddl(spark, f"CREATE HISTORY TABLE h ON t LOCATION '{loc}'", tables)
+    assert tables["h"] == loc
+    live = LakeTable.load(loc).read(spark).where("valid_to IS NULL")
+    assert live.count() == base.read(spark).count()
