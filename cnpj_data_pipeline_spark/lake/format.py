@@ -2124,15 +2124,16 @@ class LakeTable:
     CDF_SKIP_OPS = ("create", "compact", "vacuum", "rebucket", "set-props")
 
     def change_window_files(
-        self, from_snapshot: int, to_snapshot: int
-    ) -> tuple[list[str], str]:
+        self, from_snapshot: int, to_snapshot: int, by_bucket: bool = False
+    ) -> tuple[list[str] | dict[int, list[str]], str]:
         """The manifest walk behind the change feed, shared by batch
-        ``read_changes`` and the ``lake_cdf`` streaming source: absolute
-        paths of the delta files added by apply commits in
-        ``(from_snapshot, to_snapshot]``, plus the window-end schema JSON.
-        Validates the window (expired parents fail loudly; a copy-on-write
-        commit inside it raises — its file diff would be table state, not
-        changes)."""
+        ``read_changes``, the ``lake_cdf`` streaming source and the mirror
+        catch-up: absolute paths of the delta files added by apply commits
+        in ``(from_snapshot, to_snapshot]``, plus the window-end schema
+        JSON. ``by_bucket=True`` groups the paths by the manifest bucket
+        that lists them (bucket id -> paths). Validates the window (expired
+        parents fail loudly; a copy-on-write commit inside it raises — its
+        file diff would be table state, not changes)."""
         chain = self.snapshots()
         by_id = {s["snapshot_id"]: s for s in chain}
         if from_snapshot != 0 and from_snapshot not in by_id:
@@ -2142,7 +2143,7 @@ class LakeTable:
             )
         if to_snapshot not in by_id:
             raise ValueError(f"to_snapshot {to_snapshot} not in reachable history")
-        new_files: list[str] = []
+        new_files: dict[int, list[str]] = {}
         for s in chain:
             sid = s["snapshot_id"]
             if not (from_snapshot < sid <= to_snapshot):
@@ -2179,12 +2180,15 @@ class LakeTable:
                         "change feed — use merge-on-read (cfg.write_mode="
                         "'mor') for CDF windows"
                     )
-                new_files.extend(
+                new_files.setdefault(int(b), []).extend(
                     os.path.join(self.root, f)
                     for f in info["files"]
                     if f not in pfiles
                 )
-        return new_files, by_id[to_snapshot]["schema"]
+        end_schema = by_id[to_snapshot]["schema"]
+        if by_bucket:
+            return new_files, end_schema
+        return [f for fs in new_files.values() for f in fs], end_schema
 
     def read_changes(
         self,

@@ -40,6 +40,15 @@ AND count must match exactly) and silently falls back to the general
 shuffling path on any mismatch, so a mis-partitioned WAL can never corrupt
 bucket locality.
 
+The engine's own bucket directories are the second producer of this
+contract: a lake table's committed delta files sit in
+``<table>/data/.../__bucket=<b>/`` and its manifest records which bucket
+lists each file. A mirror with the source's keys and bucket layout
+(``plans.sync.FeedSyncJob``) applies a change-feed window through the same
+kernel, reading each bucket's window files as the manifest lists them. The
+manifest is trusted like the descriptor, and ``copart_verify_placement`` is
+not applied to these files: the engine placed every row itself.
+
 Skew: one hot bucket would otherwise serialize into one task, so a bucket's
 file list is split into chunks of ``cfg.copart_max_task_bytes``. Chunks of
 the same bucket are folded independently — cross-chunk duplicates may both
@@ -276,10 +285,19 @@ def _make_task(
     fold: bool = True,
     forbid_deletes: bool = False,
     inv_renames: dict[str, str] | None = None,
+    envelope: tuple[str, str] = ("lsn", "op"),
+    file_cols: Sequence[str] | None = None,
 ):
     """Build the Arrow task body. Everything it closes over is tiny and
     picklable; the evolved schema travels as JSON and is rebuilt per task
-    (a pa.Schema closure would pin pyarrow pickling across versions)."""
+    (a pa.Schema closure would pin pyarrow pickling across versions).
+
+    ``envelope`` names the input files' (lsn, op) columns: the raw WAL
+    envelope, or the physical meta columns of a lake table's committed
+    delta files (a change-feed window). ``file_cols`` limits what is read
+    from each file: a lake file can still hold a column its table has
+    since dropped, which must read back as NULL, not as its old values."""
+    lsn_col, op_col = envelope
 
     def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
@@ -297,21 +315,27 @@ def _make_task(
         if audit_col:
             phys_fields.append(T.StructField(audit_col, T.TimestampType()))
         target = to_arrow_schema(T.StructType(phys_fields))
-        # pre-rename WAL shape: evolved payload + raw (lsn, op) envelope.
+        # pre-rename input shape: evolved payload + (lsn, op) envelope.
         # Every file is normalized to THIS schema individually before concat
         # (mixed-producer encodings, additive evolution inside a fold window)
         wal_target = to_arrow_schema(
             T.StructType(
                 list(evolved.fields)
                 + [
-                    T.StructField("lsn", T.LongType()),
-                    T.StructField("op", T.StringType()),
+                    T.StructField(lsn_col, T.LongType()),
+                    T.StructField(op_col, T.StringType()),
                 ]
             )
         )
 
-        def lww_fold(tbl: pa.Table) -> pa.Table:
-            return _lww_fold_arrow(tbl, key_cols)
+        def read(fp: str) -> pa.Table:
+            if file_cols is None:
+                return pq.read_table(fp)
+            pf = pq.ParquetFile(fp)
+            keep = set(file_cols)
+            return pf.read(
+                columns=[c for c in pf.schema_arrow.names if c in keep]
+            )
 
         for driving in batches:
             for _, row in driving.iterrows():  # rows are (bucket, files)
@@ -319,9 +343,7 @@ def _make_task(
                 files = list(row["files"])
                 tbl = pa.concat_tables(
                     [
-                        _normalize_to(
-                            pq.read_table(f), wal_target, inv_renames
-                        )
+                        _normalize_to(read(f), wal_target, inv_renames)
                         for f in files
                     ]
                 )
@@ -329,7 +351,7 @@ def _make_task(
                     import pyarrow.compute as pc
 
                     if pc.any(
-                        pc.equal(tbl.column("op"), "D")
+                        pc.equal(tbl.column(op_col), "D")
                     ).as_py():
                         raise ValueError(
                             "merge_engine='aggregate' rejects tombstones: "
@@ -337,10 +359,10 @@ def _make_task(
                             "model removals as explicit negative deltas"
                         )
                 if key_cols and fold and len(tbl):
-                    tbl = lww_fold(tbl)
+                    tbl = _lww_fold_arrow(tbl, key_cols, lsn_col, op_col)
                 tbl = tbl.rename_columns(
                     [
-                        {"lsn": LSN_META_COL, "op": OP_META_COL}.get(c, c)
+                        {lsn_col: LSN_META_COL, op_col: OP_META_COL}.get(c, c)
                         for c in tbl.column_names
                     ]
                 )
@@ -390,6 +412,7 @@ def apply_changes_copart(
     epoch: int | Sequence[int],
     cfg: EngineConfig | None = None,
     stage_only: bool = False,
+    feed_schema: T.StructType | None = None,
 ) -> dict:
     """Apply one bucket-aligned change batch with NO shuffle: one Arrow task
     per (bucket, chunk) reads, LWW-folds, writes and stats its own delta
@@ -401,6 +424,16 @@ def apply_changes_copart(
     ``sources.change_stream.bucketed_layout`` — bucket id -> absolute WAL
     file paths. ``epoch`` may be a sequence for catch-up folds (the chunks
     then span epochs and the kernel folds across them).
+
+    ``feed_schema`` marks ``bucket_files`` as a change-feed window of
+    another lake table with this table's keys and bucket layout
+    (``LakeTable.change_window_files(..., by_bucket=True)``): committed
+    delta files with the physical ``__lsn``/``__op`` envelope, whose
+    payload schema is ``feed_schema``, the window-end schema the manifest
+    records. Footers are not consulted — a bucket directory holds files
+    from both sides of an ``evolve`` — and the placement check is not run:
+    the engine placed those rows itself. Tables with CHECK constraints or
+    generated columns are refused; their batches need the general path.
 
     ``stage_only=True`` is the WRITE-AUDIT-PUBLISH entry, exactly as in the
     general path: the full map-only apply runs but a pending-commit
@@ -421,7 +454,16 @@ def apply_changes_copart(
             "keyed tables — CoW reads state and must use apply_changes"
         )
 
-    if cfg.copart_verify_placement:
+    props = snap.get("props") or {}
+    if feed_schema is not None and any(
+        k.startswith(("constraint.", "generated.")) and v is not None
+        for k, v in props.items()
+    ):
+        raise ValueError(
+            "a change-feed window is not checked against CHECK constraints "
+            "or generated columns — apply it through apply_changes"
+        )
+    if cfg.copart_verify_placement and feed_schema is None:
         verify_bucket_placement(spark, table, bucket_files)
     all_files = [fp for fps in bucket_files.values() for fp in fps]
     # CHECK constraints: fail-mode only on this path — one column-pruned,
@@ -432,7 +474,7 @@ def apply_changes_copart(
     extra: dict = {"copartitioned": True}
     if all_files and any(
         k.startswith("constraint.") and v is not None
-        for k, v in (snap.get("props") or {}).items()
+        for k, v in props.items()
     ):
         from cnpj_data_pipeline_spark.lake.constraints import check_fail_only
 
@@ -449,7 +491,7 @@ def apply_changes_copart(
     # one column-pruned map-only scan, missing columns fail loud.
     if all_files and any(
         k.startswith("generated.") and v is not None
-        for k, v in (snap.get("props") or {}).items()
+        for k, v in props.items()
     ):
         from cnpj_data_pipeline_spark.lake.generated import (
             check_generated_copart,
@@ -472,13 +514,16 @@ def apply_changes_copart(
     # path.
     inv_renames = {l: p for p, l in (snap.get("renames") or {}).items()}
     inv_renames.update(snap.get("retired_names") or {})
-    if all_files:
+    payload = feed_schema
+    if payload is None and all_files:
+        payload = _payload_schema_of_files(all_files, inv_renames or None)
+    if payload is not None:
         # frozen keys: a WAL epoch with drifted key types cannot reach this
         # path (bucketed_layout rejects type-misaligned layouts), but the
         # payload may legitimately widen — never the bucket-hash inputs
         evolved = union_schema(
             base_schema,
-            _payload_schema_of_files(all_files, inv_renames or None),
+            payload,
             frozen=snap["key_cols"] or (),
             dropped=snap.get("dropped_cols") or (),
         )
@@ -507,6 +552,10 @@ def apply_changes_copart(
     stage = table.new_staging_dir()
     if chunks:
         os.makedirs(stage, exist_ok=True)
+        envelope = (
+            ("lsn", "op") if feed_schema is None
+            else (LSN_META_COL, OP_META_COL)
+        )
         task = _make_task(
             stage,
             table.root,
@@ -521,6 +570,11 @@ def apply_changes_copart(
             # the read/compaction fold stays associative (operators/partial.py)
             fold=engine == "lww",
             forbid_deletes=engine == "aggregate",
+            envelope=envelope,
+            file_cols=(
+                None if feed_schema is None
+                else feed_schema.names + list(envelope)
+            ),
         )
         updates = _map_buckets(spark, chunks, cfg.merge_partitions, task)
         clock.mark("merge_write")

@@ -20,9 +20,19 @@ consumer checkpoint — the same idempotent-replay guard the ingest uses
 crash mid-sync re-runs from the top; applied epochs skip at metadata cost.
 
 Per-sync cost is O(changed data): each window reads only the delta files the
-base's apply commit appended, and the merge is the same O(batch) MoR append.
-At 10^10 rows the derived table is never rebuilt and the base is never
+base's apply commits appended, and the apply is an O(window) MoR append. At
+10^10 rows the derived table is never rebuilt and the base is never
 re-scanned — the property that makes N consumers affordable.
+
+A mirror moves the window along the key instead of re-partitioning it. It
+has the source's keys and bucket layout, so each window delta file already
+sits in the bucket the mirror needs. When the whole window keeps that layout
+(see ``_copart_window``), the window goes through the shuffle-free
+``operators.copart.apply_changes_copart`` kernel: one Arrow task per bucket
+LWW-folds that bucket's window files and writes one delta file. Every other
+window (a transform, a different layout, a ``rebucket``, renames, derived
+constraints or generated columns) takes the general ``apply_changes``
+shuffle. Both end in the same commit, so the ledger is shared.
 """
 
 from __future__ import annotations
@@ -40,15 +50,35 @@ from cnpj_data_pipeline_spark.lake.format import (
     LakeTable,
 )
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
+from cnpj_data_pipeline_spark.schemas import schema_from_json
 
 Transform = Callable[[DataFrame], DataFrame]
 
 
 def _apply_snapshots(table: LakeTable) -> list[dict]:
+    return _applies_of(table.snapshots())
+
+
+def _applies_of(chain: list[dict]) -> list[dict]:
     return [
-        s for s in table.snapshots()
+        s for s in chain
         if s["op"] in ("append", "evolve") and s.get("epoch") is not None
     ]
+
+
+def _layout_of(snap: dict) -> tuple:
+    return (
+        snap["key_cols"], LakeTable._bucket_cols_of(snap), snap["n_buckets"]
+    )
+
+
+def _plain(snap: dict) -> bool:
+    """LWW engine, no column ever renamed."""
+    return (
+        snap.get("merge_engine", "lww") == "lww"
+        and not snap.get("renames")
+        and not snap.get("retired_names")
+    )
 
 
 def _pending_windows(
@@ -133,6 +163,26 @@ class FeedSyncJob:
             self.n_buckets or src.n_buckets(),
         )
 
+    def _copart_window(self, derived: dict, window: list[dict]) -> bool:
+        """Whether a window can skip the shuffle: an untransformed MoR
+        mirror, and every source snapshot in the window (rebuckets and
+        compactions included) has the derived table's keys and bucket
+        layout. ``derived`` is the derived table's snapshot."""
+        return (
+            self.transform is None
+            and self.cfg.copart != "off"
+            and self.cfg.write_mode == "mor"
+            and _plain(derived)
+            and not any(
+                k.startswith(("constraint.", "generated.")) and v is not None
+                for k, v in (derived.get("props") or {}).items()
+            )
+            and all(
+                _plain(s) and _layout_of(s) == _layout_of(derived)
+                for s in window
+            )
+        )
+
     def run_once(
         self, spark: SparkSession, max_window_epochs: int | None = None
     ) -> dict:
@@ -146,23 +196,43 @@ class FeedSyncJob:
         one per missed epoch. ``max_window_epochs`` bounds a single apply
         (memory/latency admission, the consumer-side twin of the ingest's
         ``max_epochs_per_run``); windows also break at any already-applied
-        epoch so a fold can never re-include applied changes."""
+        epoch so a fold can never re-include applied changes.
+
+        A mirror window whose layout matches the derived table's
+        (``_copart_window``) is applied without a shuffle by
+        ``operators.copart.apply_changes_copart``; the result counts those
+        windows in ``windows_copartitioned``."""
+        from cnpj_data_pipeline_spark.operators import copart
+
         t0 = time.monotonic()
         src = LakeTable.load(self.source_root)
         derived = self._ensure_derived(spark, src)
-        applies = _apply_snapshots(src)
+        chain = src.snapshots()
         done = derived.applied_epochs()
-        synced, rows = [], 0
+        synced, rows, n_copart = [], 0, 0
         for window, prev_sid in _pending_windows(
-            applies, done, max_window_epochs
+            _applies_of(chain), done, max_window_epochs
         ):
-            feed = src.read_changes(
-                spark, prev_sid, window[-1]["snapshot_id"]
-            )
+            end_sid = window[-1]["snapshot_id"]
             epochs = [s["epoch"] for s in window]
-            m = apply_changes(
-                spark, derived, self._envelope(feed), epoch=epochs, cfg=self.cfg
-            )
+            if self._copart_window(
+                derived.snapshot(),
+                [s for s in chain if prev_sid < s["snapshot_id"] <= end_sid],
+            ):
+                files, end_schema = src.change_window_files(
+                    prev_sid, end_sid, by_bucket=True
+                )
+                m = copart.apply_changes_copart(
+                    spark, derived, files, epochs, self.cfg,
+                    feed_schema=schema_from_json(end_schema),
+                )
+                n_copart += 1
+            else:
+                feed = src.read_changes(spark, prev_sid, end_sid)
+                m = apply_changes(
+                    spark, derived, self._envelope(feed), epoch=epochs,
+                    cfg=self.cfg,
+                )
             synced.extend(epochs)
             rows += m["rows_applied"]
         lag = len(_apply_snapshots(src)) - len(derived.applied_epochs())
@@ -170,6 +240,7 @@ class FeedSyncJob:
             "epochs_synced": synced,
             "rows_applied": rows,
             "epochs_behind": max(lag, 0),
+            "windows_copartitioned": n_copart,
             "seconds": round(time.monotonic() - t0, 3),
         }
 

@@ -155,3 +155,40 @@ def test_max_epochs_reads_no_further_epoch(spark, tmp_path, monkeypatch):
     m = job.run_stream(spark, root, max_epochs=1)
     assert [x["epoch"] for x in m if not x["skipped"]] == [0]
     assert calls == [0]
+
+
+def _counted_reads(monkeypatch) -> list[int]:
+    calls: list[int] = []
+    real = cs.read_epoch
+
+    def _counted(spark_, stream_root, epoch):
+        calls.append(epoch)
+        return real(spark_, stream_root, epoch)
+
+    monkeypatch.setattr(cs, "read_epoch", _counted)
+    return calls
+
+
+def test_fold_window_reads_no_further_epoch(spark, tmp_path, monkeypatch):
+    """A full fold window is applied before the next epoch is planned:
+    ``run_stream(max_epochs=1, fold_window=2)`` reads epochs 0 and 1 only."""
+    ch = gen_changes(spark, n_events=1_200, n_convs=40, n_epochs=4)
+    root = str(tmp_path / "wal4")
+    for e, b in epoch_batches(ch, 4):
+        cs.write_epoch(b, root, e)
+    calls = _counted_reads(monkeypatch)
+    job = IngestJob(str(tmp_path / "lake"), EngineConfig(n_buckets=4))
+    m = job.run_stream(spark, root, max_epochs=1, fold_window=2)
+    assert [x["epoch"] for x in m if not x["skipped"]] == [(0, 1)]
+    assert calls == [0, 1]
+
+
+def test_row_budget_reads_no_further_epoch(spark, tmp_path, wal, monkeypatch):
+    """``max_rows`` decides admission on the footer hint before the epoch
+    is read: an over-budget next epoch is never read."""
+    root, _ = wal
+    calls = _counted_reads(monkeypatch)
+    job = IngestJob(str(tmp_path / "lake"), EngineConfig(n_buckets=8))
+    m = job.run_stream(spark, root, max_rows=1)
+    assert [x["epoch"] for x in m if not x["skipped"]] == [0]
+    assert calls == [0]

@@ -21,7 +21,11 @@ from cnpj_data_pipeline_spark import EngineConfig, LakeTable
 from cnpj_data_pipeline_spark.lake.format import EpochAlreadyAppliedError
 from cnpj_data_pipeline_spark.operators.copart import apply_changes_copart
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
-from cnpj_data_pipeline_spark.schemas import CHANGE_SCHEMA, TRANSCRIPT_SCHEMA
+from cnpj_data_pipeline_spark.schemas import (
+    CHANGE_SCHEMA,
+    TRANSCRIPT_SCHEMA,
+    schema_from_json,
+)
 from cnpj_data_pipeline_spark.sources.change_stream import (
     bucketed_layout,
     write_epoch_bucketed,
@@ -60,6 +64,10 @@ PINNED = {
         BASE_KEYS | {"schema_evolved", "compacted", "phases", "copartitioned"},
         ["plan", "merge_write", "commit"],
     ),
+    "mirror": (
+        BASE_KEYS | {"schema_evolved", "compacted", "phases", "copartitioned"},
+        ["plan", "merge_write", "commit"],
+    ),
 }
 PHASE_NAMES = {
     "plan", "build_plan", "merge_write", "collect_staged", "commit",
@@ -87,6 +95,20 @@ def _apply_fn(spark, tmp_path, path: str):
         assert layout is not None
         return table, lambda: apply_changes_copart(
             spark, table, layout, 0, cfg
+        )
+    if path == "mirror":
+        # the change-feed window of a source table with the same layout
+        src = LakeTable.create(
+            str(tmp_path / "src"), TRANSCRIPT_SCHEMA, key_cols=KEYS,
+            n_buckets=4,
+        )
+        apply_changes(spark, src, batch, epoch=0, cfg=cfg)
+        files, end_schema = src.change_window_files(
+            0, src.current_snapshot_id(), by_bucket=True
+        )
+        return table, lambda: apply_changes_copart(
+            spark, table, files, 0, cfg,
+            feed_schema=schema_from_json(end_schema),
         )
     return table, lambda: apply_changes(spark, table, batch, epoch=0, cfg=cfg)
 

@@ -184,8 +184,7 @@ def test_scd2_edge_cases(spark, tmp_path):
     assert "k4" not in as_of_12.index  # zero-width: retired at its own LSN
     as_of_25 = job.read_as_of_lsn(spark, 25).toPandas()
     assert "k2" not in set(as_of_25["conv_id"])  # deleted at 21, back at 31
-    as_of_31 = job.read_as_of_lsn(spark, 31).set_index("conv_id").toPandas() \
-        if False else job.read_as_of_lsn(spark, 31).toPandas().set_index("conv_id")
+    as_of_31 = job.read_as_of_lsn(spark, 31).toPandas().set_index("conv_id")
     assert as_of_31.loc["k2"]["text"] == "y"
 
 
