@@ -1780,13 +1780,11 @@ def _history_refresh(spark: SparkSession, m: re.Match, tables: dict) -> dict:
 
 def _show_consumers(spark: SparkSession, tables: dict):
     """SHOW CONSUMERS: one row per registered DECLARED consumer (index or
-    materialized view) with its lag — ``epochs_behind`` is the count of
-    source apply-commits its own epoch ledger hasn't consumed yet (the
-    same formula every sync job reports). Metadata-only: snapshot reads,
-    no Spark job over data."""
+    materialized view) with its lag — ``epochs_behind`` is
+    ``LakeTable.epochs_behind``, the same figure every consumer's
+    ``run_once`` reports. Metadata-only: snapshot reads, no Spark job over
+    data."""
     import os
-
-    from cnpj_data_pipeline_spark.plans.sync import _apply_snapshots
 
     rows = []
     for name, t in sorted(tables.items()):
@@ -1804,10 +1802,8 @@ def _show_consumers(spark: SparkSession, tables: dict):
             src_root = spec["source_root"]
             behind = None
             if LakeTable.exists(src_root) and LakeTable.exists(root):
-                behind = max(
-                    len(_apply_snapshots(LakeTable.load(src_root)))
-                    - len(LakeTable.load(root).applied_epochs()),
-                    0,
+                behind = LakeTable.load(src_root).epochs_behind(
+                    LakeTable.load(root)
                 )
             rows.append(
                 (

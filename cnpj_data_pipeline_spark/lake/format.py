@@ -1718,6 +1718,24 @@ class LakeTable:
     def applied_epochs(self) -> set[int]:
         return set(self.snapshot()["applied_epochs"])
 
+    @staticmethod
+    def applies_of(chain: list[dict]) -> list[dict]:
+        """The apply commits of a snapshot chain: the data commits that
+        carry an epoch. Maintenance (compact, rebucket, vacuum) and
+        metadata-only commits (rename, widen, drop) change no values, so a
+        change-feed consumer neither reads nor counts them."""
+        return [
+            s for s in chain
+            if s["op"] in ("append", "evolve") and s.get("epoch") is not None
+        ]
+
+    def epochs_behind(self, consumer: "LakeTable | None") -> int:
+        """A consumer's lag behind this source table: the source's apply
+        commits its own epoch ledger has not recorded (a consumer that
+        does not exist yet has recorded none)."""
+        done = consumer.applied_epochs() if consumer is not None else ()
+        return max(len(self.applies_of(self.snapshots())) - len(done), 0)
+
     def watermarks(self, sid: int | None = None) -> dict[int, int | None]:
         """bucket -> max applied LSN (per-partition offset checkpoint)."""
         s = self.snapshot(sid)

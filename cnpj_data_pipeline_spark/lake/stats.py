@@ -18,10 +18,10 @@ is implicit). This module is that feature for this table format, Spark-first:
   UPPER BOUND on current NDV under updates/deletes and exact for insert-only
   columns (keys in an append-heavy stream — exactly the columns join
   planning cares about). The stats record carries ``mode:
-  "incremental-upper-bound"`` and drops per-column null counts (deletes make
-  them unmaintainable without a re-scan); a full ``analyze_table`` resets to
-  exact. This is the standard lake-format trade (Iceberg's incremental
-  stats proposals make the same one).
+  "incremental-upper-bound"`` and drops the row count and per-column null
+  counts (deletes make them unmaintainable without a re-scan); a full
+  ``analyze_table`` resets to exact. This is the standard lake-format trade
+  (Iceberg's incremental stats proposals make the same one).
 
 Storage: ``<root>/meta/colstats-<snapshot_id>.json`` written atomically
 (tmp + rename, the bloom-sidecar pattern — advisory metadata, no snapshot
@@ -149,36 +149,24 @@ def _write_record(root: str, rec: dict) -> str:
     return path
 
 
-def load_stats(table) -> dict | None:
-    """The most recent stats record (by analyzed snapshot id), with column
-    keys mapped to CURRENT logical names and a ``commits_behind`` staleness
-    figure. Returns None when the table was never analyzed."""
-    cands = []
-    for p in glob.glob(os.path.join(table.root, "meta", "colstats-*.json")):
-        m = _STATS_RE.search(os.path.basename(p))
-        if m:
-            cands.append((int(m.group(1)), p))
-    if not cands:
-        return None
-    sid, path = max(cands)
-    with open(path) as fh:
-        rec = json.load(fh)
+def _present(table, rec: dict) -> dict:
+    """A stats record as readers see it: column keys mapped to CURRENT
+    logical names (since-dropped columns leave), a ``commits_behind``
+    staleness figure, no sketch binaries."""
     ren = table.renames()  # physical -> current logical
     snap = table.snapshot()
     live = {f.name for f in table.logical_schema().fields}
     cols = {}
     for phys, st in rec["columns"].items():
         logical = ren.get(phys, phys)
-        if logical in live:  # since-dropped columns leave the view
+        if logical in live:
             cols[logical] = st
-    # staleness counts DATA commits only (epoch-carrying apply snapshots —
-    # the plans/sync.py notion of an apply); metadata-only evolutions
-    # (rename, widen, drop) do not change values
+    # staleness counts DATA commits only (the apply commits a change-feed
+    # consumer counts); metadata-only evolutions (rename, widen, drop) do
+    # not change values
     applies = [
-        s for s in table.snapshots()
-        if s["op"] in ("append", "evolve")
-        and s.get("epoch") is not None
-        and s["snapshot_id"] > sid
+        s for s in table.applies_of(table.snapshots())
+        if s["snapshot_id"] > rec["snapshot_id"]
     ]
     out = dict(rec)
     out["columns"] = cols
@@ -186,6 +174,27 @@ def load_stats(table) -> dict | None:
     out["current_snapshot_id"] = snap["snapshot_id"]
     del out["sketches"]  # binaries stay on disk for refresh, not for readers
     return out
+
+
+def _latest_record(table) -> dict | None:
+    """The stored record with the highest analyzed snapshot id."""
+    cands = []
+    for p in glob.glob(os.path.join(table.root, "meta", "colstats-*.json")):
+        m = _STATS_RE.search(os.path.basename(p))
+        if m:
+            cands.append((int(m.group(1)), p))
+    if not cands:
+        return None
+    with open(max(cands)[1]) as fh:
+        return json.load(fh)
+
+
+def load_stats(table) -> dict | None:
+    """The most recent stats record (by analyzed snapshot id), with column
+    keys mapped to CURRENT logical names and a ``commits_behind`` staleness
+    figure. Returns None when the table was never analyzed."""
+    rec = _latest_record(table)
+    return None if rec is None else _present(table, rec)
 
 
 def analyze_table(
@@ -198,7 +207,8 @@ def analyze_table(
     """Full ANALYZE at a snapshot (default: current): exact row/null counts,
     HLL NDV per column, one scan. ``columns`` selects a subset by LOGICAL
     name (default: every sketchable column). Persists the sidecar and
-    returns the record (sans sketch binaries)."""
+    returns that record in :func:`load_stats`'s shape — also when it
+    analyzed an older snapshot than a sidecar already on disk."""
     snap = table.snapshot(snapshot_id)
     sid = snap["snapshot_id"]
     ren = table.renames(sid)
@@ -250,7 +260,7 @@ def analyze_table(
         },
     }
     _write_record(table.root, rec)
-    return load_stats(table)
+    return _present(table, rec)
 
 
 def refresh_stats(
@@ -262,22 +272,21 @@ def refresh_stats(
     under updates/deletes; exact for insert-only columns). Falls back to a
     full :func:`analyze_table` when the table was never analyzed. Columns
     added inside the window are sketched from the window alone (they were
-    all-NULL before); dropped columns leave the record."""
-    cands = []
-    for p in glob.glob(os.path.join(table.root, "meta", "colstats-*.json")):
-        m = _STATS_RE.search(os.path.basename(p))
-        if m:
-            cands.append((int(m.group(1)), p))
-    if not cands:
+    all-NULL before); dropped columns leave the record.
+
+    The refreshed record stores ``rows`` and every column's ``nulls`` as
+    None: the change window gives neither the live row count nor the null
+    counts without a re-scan (deletes and updates retract rows the sketch
+    union cannot take back)."""
+    prev = _latest_record(table)
+    if prev is None:
         return analyze_table(spark, table, snapshot_id=snapshot_id)
-    from_sid, path = max(cands)
-    with open(path) as fh:
-        prev = json.load(fh)
+    from_sid = prev["snapshot_id"]
     to_sid = (
         table.current_snapshot_id() if snapshot_id is None else snapshot_id
     )
     if to_sid <= from_sid:
-        return load_stats(table)
+        return _present(table, prev)
     lg_k = prev["lg_k"]
     ren = table.renames(to_sid)
     logical = table.logical_schema(to_sid)
@@ -328,13 +337,12 @@ def refresh_stats(
         ).collect():
             merged[r["col"]] = bytes(r["u"])
     ndv = _estimates(spark, merged)
-    snap = table.snapshot(to_sid)
     rec = {
         "snapshot_id": to_sid,
         "mode": "incremental-upper-bound",
         "base_snapshot_id": prev.get("base_snapshot_id", from_sid),
         "lg_k": lg_k,
-        "rows": snap.get("rows_total"),
+        "rows": None,
         "skipped": prev.get("skipped", {}),
         "columns": {
             c: {"ndv": ndv[c], "nulls": None, "cast": None} for c in merged
@@ -344,7 +352,7 @@ def refresh_stats(
         },
     }
     _write_record(table.root, rec)
-    return load_stats(table)
+    return _present(table, rec)
 
 
 def drop_stats(table) -> int:

@@ -109,7 +109,11 @@ def decontam_transform(
     return _t
 
 
-class DecontamIndexJob:
+class DecontamIndexJob(FeedSyncJob):
+    """Consecutive pending epochs fold into one window: every delivered
+    version is scored independently (keyed by lsn) and the LWW merge picks
+    the newest verdict, so the window fold needs no cross-version state."""
+
     def __init__(
         self,
         source_root: str,
@@ -121,33 +125,15 @@ class DecontamIndexJob:
         cfg: EngineConfig | None = None,
         n_buckets: int | None = None,
     ):
-        self.id_col = id_col
-        self.sync = FeedSyncJob(
+        super().__init__(
             source_root,
             index_root,
             transform=decontam_transform(eval_grams, id_col, text_col, k),
             cfg=cfg,
             n_buckets=n_buckets,
         )
+        self.id_col = id_col
         self.index_root = index_root
-
-    def run_once(self, spark: SparkSession) -> dict:
-        """Score every pending base epoch (exactly-once, crash-safe — the
-        index table's own applied_epochs set is the consumer checkpoint).
-        Consecutive pending epochs fold into one window: every delivered
-        version is scored independently (keyed by lsn) and the LWW merge
-        picks the newest verdict, so the window fold needs no
-        cross-version state."""
-        return self.sync.run_once(spark)
-
-    def run_follow(
-        self,
-        spark: SparkSession,
-        poll_seconds: float = 5.0,
-        max_polls: int | None = None,
-    ) -> dict:
-        """Long-running consumer loop (FeedSyncJob.run_follow underneath)."""
-        return self.sync.run_follow(spark, poll_seconds, max_polls=max_polls)
 
     def index_table(self) -> LakeTable:
         return LakeTable.load(self.index_root)

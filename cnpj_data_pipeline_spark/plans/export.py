@@ -53,7 +53,6 @@ import uuid
 from pyspark.sql import SparkSession
 
 from cnpj_data_pipeline_spark.lake.format import LakeTable
-from cnpj_data_pipeline_spark.plans.sync import _apply_snapshots
 from cnpj_data_pipeline_spark.sources.debezium import export_changes_debezium
 
 _MANIFEST = "_window.json"
@@ -158,7 +157,7 @@ class ExportJob:
 
         applies = [
             s
-            for s in _apply_snapshots(src)
+            for s in src.applies_of(src.snapshots())
             if s["snapshot_id"] > frontier
         ]
         exported, events = [], 0

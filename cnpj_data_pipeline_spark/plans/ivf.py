@@ -100,7 +100,7 @@ def ivf_assign_transform(
     return _t
 
 
-class IVFIndexJob:
+class IVFIndexJob(FeedSyncJob):
     def __init__(
         self,
         source_root: str,
@@ -114,55 +114,29 @@ class IVFIndexJob:
         """``centroids``: the frozen codebook, a small (cell int, cent
         array<double>) frame — seed slice or Lloyd-trained (see
         queries/vector.py ``_trained_cents``)."""
-        self.id_col = id_col
-        self.emb_col = emb_col
-        self.centroids = centroids
-        self.sync = FeedSyncJob(
+        super().__init__(
             source_root,
             index_root,
             transform=ivf_assign_transform(centroids, id_col, emb_col),
             cfg=cfg,
             n_buckets=n_buckets,
         )
+        self.id_col = id_col
+        self.emb_col = emb_col
+        self.centroids = centroids
         self.index_root = index_root
 
-    def run_once(self, spark: SparkSession) -> dict:
-        """Assign every pending base epoch (exactly-once, crash-safe — the
-        index table's own applied_epochs set is the consumer checkpoint),
-        then make sure the posting-list layout is declared: sort_order =
-        (cell,), so every later compaction clusters postings and probe
-        reads skip files by manifest stats."""
-        m = self.sync.run_once(spark)
+    def run_once(
+        self, spark: SparkSession, max_window_epochs: int | None = None
+    ) -> dict:
+        """The chassis sync, then make sure the posting-list layout is
+        declared: sort_order = (cell,), so every later compaction clusters
+        postings and probe reads skip files by manifest stats."""
+        m = super().run_once(spark, max_window_epochs)
         t = self.index_table()
         if not (t.snapshot().get("props") or {}).get("sort_order"):
             t.set_sort_order(["cell"])
         return m
-
-    def run_follow(
-        self,
-        spark: SparkSession,
-        poll_seconds: float = 5.0,
-        max_polls: int | None = None,
-    ) -> dict:
-        """Long-running consumer loop: one wrapped run_once first (creates
-        the index table and declares the posting-list layout), then the
-        plain FeedSyncJob poll loop."""
-        first = self.run_once(spark)
-        if max_polls is not None and max_polls <= 1:
-            return {
-                "epochs_synced": first["epochs_synced"],
-                "rows_applied": first["rows_applied"],
-                "polls": 1,
-            }
-        rest = self.sync.run_follow(
-            spark,
-            poll_seconds,
-            max_polls=None if max_polls is None else max_polls - 1,
-        )
-        rest["epochs_synced"] = first["epochs_synced"] + rest["epochs_synced"]
-        rest["rows_applied"] += first["rows_applied"]
-        rest["polls"] += 1
-        return rest
 
     def index_table(self) -> LakeTable:
         return LakeTable.load(self.index_root)

@@ -33,18 +33,17 @@ THEN 1 END``). A NULL expr value contributes nothing in either direction
 (matching SQL SUM), so NULL-producing expressions stay consistent between
 insert and retract. MIN/MAX are NOT delta-maintainable under deletes
 (retracting the current extremum needs the runner-up); maintain those with a
-group-refresh consumer instead (``FeedSyncJob`` + re-aggregation of affected
-groups).
+group-refresh consumer instead (``GroupRefreshSyncJob``: re-aggregation of
+the affected groups).
 
-Exactly-once: base epochs are the unit of progress and the view's own
-``applied_epochs`` set is the consumer checkpoint — a crash mid-run resumes
-idempotently, the same ledger the ingest itself uses (reference analogue:
-the processed-files table, ``main.py:100-131``).
+Both jobs run on the ``plans/sync.py`` consumer chassis (catch-up windows,
+the view's own epoch ledger, lag, poll loop). The typed feed is computed
+over the NET window, so folding K epochs costs ONE pre-image lookup and one
+merge instead of K; windows never span an already-applied epoch, whose
+deltas would double-count.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,19 +51,81 @@ from pyspark.sql import functions as F
 from cnpj_data_pipeline_spark.config import EngineConfig
 from cnpj_data_pipeline_spark.lake.format import CHANGE_TYPE_COL, LakeTable
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
-from cnpj_data_pipeline_spark.plans.sync import _pending_windows
+from cnpj_data_pipeline_spark.plans.sync import Consumer, FeedWindow
 
 N_ROWS_COL = "n_rows"  # implicit COUNT(*) measure: the view's liveness signal
 
 
-def _apply_snapshots(table: LakeTable) -> list[dict]:
-    return [
-        s for s in table.snapshots()
-        if s["op"] in ("append", "evolve") and s.get("epoch") is not None
-    ]
+class _GroupViewJob(Consumer):
+    """What both GROUP BY view jobs share: the definition, the view table
+    (created from the first window's output, or eagerly by
+    ``ensure_view``), and its read."""
+
+    def __init__(
+        self,
+        source_root: str,
+        view_root: str,
+        group_cols: list[str],
+        measures: dict[str, str],
+        cfg: EngineConfig | None = None,
+        n_buckets: int | None = None,
+        group_exprs: dict[str, str] | None = None,
+    ):
+        bad = [m for m in measures if m in set(group_cols)]
+        if bad:
+            raise ValueError(f"measure names collide with group columns: {bad}")
+        stray = [g for g in (group_exprs or {}) if g not in set(group_cols)]
+        if stray:
+            raise ValueError(
+                f"group_exprs names not listed in group_cols: {stray}"
+            )
+        self.source_root = source_root
+        self.view_root = view_root
+        self.group_cols = list(group_cols)
+        self.measures = dict(measures)
+        self.cfg = cfg or EngineConfig()
+        self.n_buckets = n_buckets
+        self.group_exprs = dict(group_exprs or {})
+
+    def _project(self, df: DataFrame) -> DataFrame:
+        for name, e in self.group_exprs.items():
+            df = df.withColumn(name, F.expr(e))
+        return df
+
+    def _target(self, spark: SparkSession, src: LakeTable) -> LakeTable | None:
+        if LakeTable.exists(self.view_root):
+            return LakeTable.load(self.view_root)
+        return None
+
+    def _create_view(self, rows: DataFrame, src: LakeTable) -> LakeTable:
+        if LakeTable.exists(self.view_root):
+            return LakeTable.load(self.view_root)
+        return LakeTable.create(
+            self.view_root,
+            rows.schema,  # group cols + measure cols, types from the algebra
+            self.group_cols,
+            self.n_buckets or src.n_buckets(),
+        )
+
+    def ensure_view(self, spark: SparkSession) -> LakeTable:
+        """Create the (empty) view table eagerly — the MATERIALIZED VIEW DDL
+        surface needs the table to exist at CREATE time even when the source
+        has no applied epochs yet. The schema comes from running the view's
+        algebra over a zero-row slice of the source (types exactly as the
+        first real sync would derive them)."""
+        if LakeTable.exists(self.view_root):
+            return LakeTable.load(self.view_root)
+        src = LakeTable.load(self.source_root)
+        return self._create_view(
+            self._view_rows(src.read(spark).limit(0)), src
+        )
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        """The maintained view's current state (live groups only)."""
+        return LakeTable.load(self.view_root).read(spark)
 
 
-class AggSyncJob:
+class AggSyncJob(_GroupViewJob):
     def __init__(
         self,
         source_root: str,
@@ -91,29 +152,15 @@ class AggSyncJob:
         (insert and retract must land in the same group)."""
         if N_ROWS_COL in measures:
             raise ValueError(f"measure name {N_ROWS_COL!r} is reserved (COUNT(*))")
-        bad = [m for m in measures if m in set(group_cols)]
-        if bad:
-            raise ValueError(f"measure names collide with group columns: {bad}")
-        stray = [g for g in (group_exprs or {}) if g not in set(group_cols)]
-        if stray:
-            raise ValueError(
-                f"group_exprs names not listed in group_cols: {stray}"
-            )
-        self.source_root = source_root
-        self.view_root = view_root
-        self.group_cols = list(group_cols)
-        self.measures = dict(measures)
-        self.cfg = cfg or EngineConfig()
-        self.n_buckets = n_buckets
-        self.group_exprs = dict(group_exprs or {})
-
-    # ---------------- internals ----------------
+        super().__init__(
+            source_root, view_root, group_cols, measures, cfg, n_buckets,
+            group_exprs,
+        )
 
     def _deltas(self, typed: DataFrame) -> DataFrame:
         """Δ per affected group from one typed window: post-images and
         inserts contribute +expr, pre-images and deletes retract −expr."""
-        for name, e in self.group_exprs.items():
-            typed = typed.withColumn(name, F.expr(e))
+        typed = self._project(typed)
         sign = F.when(
             F.col(CHANGE_TYPE_COL).isin("insert", "update_postimage"), F.lit(1)
         ).otherwise(F.lit(-1))
@@ -124,23 +171,17 @@ class AggSyncJob:
         aggs.append(F.sum(sign).cast("long").alias(N_ROWS_COL))
         return typed.groupBy(*self.group_cols).agg(*aggs)
 
-    def _ensure_view(self, deltas: DataFrame, src: LakeTable) -> LakeTable:
-        if LakeTable.exists(self.view_root):
-            return LakeTable.load(self.view_root)
-        return LakeTable.create(
-            self.view_root,
-            deltas.schema,  # group cols + measure cols, types from the algebra
-            self.group_cols,
-            self.n_buckets or src.n_buckets(),
-        )
+    def _view_rows(self, rows: DataFrame) -> DataFrame:
+        return self._deltas(rows.withColumn(CHANGE_TYPE_COL, F.lit("insert")))
 
-    def _merge_window(
-        self,
-        spark: SparkSession,
-        view: LakeTable,
-        deltas: DataFrame,
-        epochs: list[int],
-    ) -> dict:
+    def _apply_window(
+        self, spark: SparkSession, src: LakeTable, view: LakeTable | None,
+        w: FeedWindow,
+    ) -> tuple[LakeTable, dict]:
+        deltas = self._deltas(
+            src.read_changes_typed(spark, w.prev_sid, w.end_sid)
+        )
+        view = view or self._create_view(deltas, src)
         mcols = list(self.measures) + [N_ROWS_COL]
         deltas = deltas.persist()
         try:
@@ -173,96 +214,16 @@ class AggSyncJob:
                 F.when(F.col(N_ROWS_COL) <= 0, "D").otherwise("U").alias("op"),
                 # max epoch of the window: later windows always outrank
                 # earlier ones in the view's LWW order
-                F.lit(max(epochs)).cast("long").alias("lsn"),
+                F.lit(max(w.epochs)).cast("long").alias("lsn"),
             )
-            return apply_changes(spark, view, env, epoch=epochs, cfg=self.cfg)
+            return view, apply_changes(
+                spark, view, env, epoch=w.epochs, cfg=self.cfg
+            )
         finally:
             deltas.unpersist()
 
-    # ---------------- public API ----------------
 
-    def ensure_view(self, spark: SparkSession) -> LakeTable:
-        """Create the (empty) view table eagerly — the MATERIALIZED VIEW DDL
-        surface needs the table to exist at CREATE time even when the source
-        has no applied epochs yet. The schema comes from running the delta
-        algebra over a zero-row slice of the source (types exactly as the
-        first real sync would derive them)."""
-        if LakeTable.exists(self.view_root):
-            return LakeTable.load(self.view_root)
-        src = LakeTable.load(self.source_root)
-        empty = src.read(spark).limit(0).withColumn(
-            CHANGE_TYPE_COL, F.lit("insert")
-        )
-        return self._ensure_view(self._deltas(empty), src)
-
-    def run_once(
-        self, spark: SparkSession, max_window_epochs: int | None = None
-    ) -> dict:
-        """Maintain the view through every pending base epoch.
-
-        Pending epochs fold into CATCH-UP WINDOWS (``_pending_windows``):
-        one typed read + one delta merge per run of consecutive pending
-        epochs. The typed feed is computed over the NET window, so folding
-        K epochs costs ONE pre-image lookup and one merge instead of K —
-        and intermediate states a key passed through inside the window are
-        never materialized at all. ``max_window_epochs`` bounds one apply;
-        windows never span an already-applied epoch (its deltas would
-        double-count — the feed-vs-ledger invariant)."""
-        t0 = time.monotonic()
-        src = LakeTable.load(self.source_root)
-        applies = _apply_snapshots(src)
-        view = (
-            LakeTable.load(self.view_root)
-            if LakeTable.exists(self.view_root)
-            else None
-        )
-        done = view.applied_epochs() if view is not None else set()
-        synced, rows = [], 0
-        for window, prev_sid in _pending_windows(
-            applies, done, max_window_epochs
-        ):
-            typed = src.read_changes_typed(
-                spark, prev_sid, window[-1]["snapshot_id"]
-            )
-            deltas = self._deltas(typed)
-            if view is None:
-                view = self._ensure_view(deltas, src)
-            epochs = [s["epoch"] for s in window]
-            m = self._merge_window(spark, view, deltas, epochs)
-            synced.extend(epochs)
-            rows += m["rows_applied"]
-        lag = len(applies) - (len(view.applied_epochs()) if view else 0)
-        return {
-            "epochs_synced": synced,
-            "rows_applied": rows,
-            "epochs_behind": max(lag, 0),
-            "seconds": round(time.monotonic() - t0, 3),
-        }
-
-    def run_follow(
-        self,
-        spark: SparkSession,
-        poll_seconds: float = 5.0,
-        max_polls: int | None = None,
-        max_window_epochs: int | None = None,
-    ) -> dict:
-        """Poll loop: sync, sleep, repeat (the always-fresh-view shape)."""
-        totals = {"epochs_synced": [], "rows_applied": 0, "polls": 0}
-        while True:
-            m = self.run_once(spark, max_window_epochs=max_window_epochs)
-            totals["epochs_synced"].extend(m["epochs_synced"])
-            totals["rows_applied"] += m["rows_applied"]
-            totals["polls"] += 1
-            if max_polls is not None and totals["polls"] >= max_polls:
-                return totals
-            time.sleep(poll_seconds)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        """The maintained view's current state (live groups only)."""
-        return LakeTable.load(self.view_root).read(spark)
-
-
-class GroupRefreshSyncJob:
+class GroupRefreshSyncJob(_GroupViewJob):
     """Incrementally-maintained GROUP BY view for aggregates that are NOT
     delta-maintainable — MIN/MAX (retracting the current extremum needs the
     runner-up), exact COUNT(DISTINCT), medians. The standard IVM fallback:
@@ -287,163 +248,79 @@ class GroupRefreshSyncJob:
     surviving rows are tombstoned.
 
     Cost per window is O(rows of affected groups), vs ``AggSyncJob``'s
-    O(changed rows): the price of non-invertible aggregates. Exactly-once
-    and catch-up windows are identical to ``AggSyncJob`` (the view's own
-    epoch ledger; ``_pending_windows``)."""
+    O(changed rows): the price of non-invertible aggregates.
 
-    def __init__(
-        self,
-        source_root: str,
-        view_root: str,
-        group_cols: list[str],
-        measures: dict[str, str],
-        cfg: EngineConfig | None = None,
-        n_buckets: int | None = None,
-        group_exprs: dict[str, str] | None = None,
-    ):
-        """``measures``: name -> full SQL AGGREGATE expression over the
-        group's base rows (e.g. ``{"max_chars": "max(length(text))",
-        "n_roles": "count(distinct role)"}``).
-
-        ``group_exprs``: derived grouping columns exactly as in
-        :class:`AggSyncJob` (name -> deterministic per-row SQL, names listed
-        in ``group_cols``) — projected onto both the change feed (affected-
-        group discovery; derived groups are off-key, so the typed feed's
-        pre-images surface the OLD bucket of a moved row) and the base rows
-        before re-aggregation. The MIN/MAX time-bucket rollup form."""
-        bad = [m for m in measures if m in set(group_cols)]
-        if bad:
-            raise ValueError(f"measure names collide with group columns: {bad}")
-        stray = [g for g in (group_exprs or {}) if g not in set(group_cols)]
-        if stray:
-            raise ValueError(
-                f"group_exprs names not listed in group_cols: {stray}"
-            )
-        self.source_root = source_root
-        self.view_root = view_root
-        self.group_cols = list(group_cols)
-        self.measures = dict(measures)
-        self.cfg = cfg or EngineConfig()
-        self.n_buckets = n_buckets
-        self.group_exprs = dict(group_exprs or {})
-
-    def _project(self, df: DataFrame) -> DataFrame:
-        for name, e in self.group_exprs.items():
-            df = df.withColumn(name, F.expr(e))
-        return df
-
-    def _affected_rows(
-        self, spark: SparkSession, src: LakeTable, groups: DataFrame
-    ) -> DataFrame:
-        key_cols = src.key_cols() or []
-        if not self.group_exprs and set(self.group_cols) <= set(key_cols):
-            return src.read_keys(
-                spark, groups, on=self.group_cols, broadcast_keys=False
-            )
-        # grouping off the key: no layout pruning possible — one full scan
-        # + semi join per window (documented cost; co-bucket the table on
-        # the group columns to avoid it)
-        return self._project(src.read(spark)).join(
-            groups, on=self.group_cols, how="left_semi"
-        )
+    ``measures``: name -> full SQL AGGREGATE expression over the group's
+    base rows (e.g. ``{"max_chars": "max(length(text))", "n_roles":
+    "count(distinct role)"}``). ``group_exprs``: derived grouping columns
+    exactly as in :class:`AggSyncJob` — projected onto both the change feed
+    (affected-group discovery; derived groups are off-key, so the typed
+    feed's pre-images surface the OLD bucket of a moved row) and the base
+    rows before re-aggregation. The MIN/MAX time-bucket rollup form."""
 
     def _recompute(self, rows: DataFrame) -> DataFrame:
         aggs = [F.expr(e).alias(name) for name, e in self.measures.items()]
         return rows.groupBy(*self.group_cols).agg(*aggs)
 
-    def _ensure_view(self, fresh: DataFrame, src: LakeTable) -> LakeTable:
-        if LakeTable.exists(self.view_root):
-            return LakeTable.load(self.view_root)
-        return LakeTable.create(
-            self.view_root,
-            fresh.schema,
-            self.group_cols,
-            self.n_buckets or src.n_buckets(),
-        )
+    def _view_rows(self, rows: DataFrame) -> DataFrame:
+        return self._recompute(self._project(rows))
 
-    def ensure_view(self, spark: SparkSession) -> LakeTable:
-        """Create the (empty) view table eagerly (MV DDL surface) — the
-        schema comes from re-aggregating a zero-row slice of the source."""
-        if LakeTable.exists(self.view_root):
-            return LakeTable.load(self.view_root)
-        src = LakeTable.load(self.source_root)
-        fresh = self._recompute(self._project(src.read(spark).limit(0)))
-        return self._ensure_view(fresh, src)
-
-    def run_once(
-        self, spark: SparkSession, max_window_epochs: int | None = None
-    ) -> dict:
-        t0 = time.monotonic()
-        src = LakeTable.load(self.source_root)
-        applies = _apply_snapshots(src)
-        view = (
-            LakeTable.load(self.view_root)
-            if LakeTable.exists(self.view_root)
-            else None
-        )
-        done = view.applied_epochs() if view is not None else set()
+    def _apply_window(
+        self, spark: SparkSession, src: LakeTable, view: LakeTable | None,
+        w: FeedWindow,
+    ) -> tuple[LakeTable, dict]:
         on_key = not self.group_exprs and (
             set(self.group_cols) <= set(src.key_cols() or [])
         )
-        synced, rows_applied = [], 0
-        for window, prev_sid in _pending_windows(
-            applies, done, max_window_epochs
-        ):
-            end_sid = window[-1]["snapshot_id"]
+        if on_key:
+            # key values are immutable: new images cover every
+            # affected group, the cheap feed suffices
+            feed = src.read_changes(spark, w.prev_sid, w.end_sid)
+        else:
+            # off-key grouping (incl. any derived group): an update can
+            # MOVE a row between groups and a delete's tombstone may
+            # carry NULL payload — only the typed feed's pre-images
+            # surface the old group, without which it would stay stale
+            # forever
+            feed = src.read_changes_typed(spark, w.prev_sid, w.end_sid)
+        groups = (
+            self._project(feed).select(*self.group_cols).distinct().persist()
+        )
+        try:
             if on_key:
-                # key values are immutable: new images cover every
-                # affected group, the cheap feed suffices
-                feed = src.read_changes(spark, prev_sid, end_sid)
+                rows = src.read_keys(
+                    spark, groups, on=self.group_cols, broadcast_keys=False
+                )
             else:
-                # off-key grouping (incl. any derived group): an update can
-                # MOVE a row between groups and a delete's tombstone may
-                # carry NULL payload — only the typed feed's pre-images
-                # surface the old group, without which it would stay stale
-                # forever
-                feed = src.read_changes_typed(spark, prev_sid, end_sid)
-            groups = (
-                self._project(feed).select(*self.group_cols)
-                .distinct()
-                .persist()
+                # grouping off the key: no layout pruning possible — one
+                # full scan + semi join per window (documented cost;
+                # co-bucket the table on the group columns to avoid it)
+                rows = self._project(src.read(spark)).join(
+                    groups, on=self.group_cols, how="left_semi"
+                )
+            fresh = self._recompute(rows)
+            view = view or self._create_view(fresh, src)
+            # groups in the affected set with no surviving base rows
+            # get tombstoned (anti join: affected minus recomputed)
+            gone = groups.join(
+                fresh.select(*self.group_cols),
+                on=self.group_cols,
+                how="left_anti",
             )
-            try:
-                fresh = self._recompute(
-                    self._affected_rows(spark, src, groups)
-                )
-                if view is None:
-                    view = self._ensure_view(fresh, src)
-                epochs = [s["epoch"] for s in window]
-                # groups in the affected set with no surviving base rows
-                # get tombstoned (anti join: affected minus recomputed)
-                gone = groups.join(
-                    fresh.select(*self.group_cols),
-                    on=self.group_cols,
-                    how="left_anti",
-                )
-                mcols = list(self.measures)
-                env = fresh.select(
-                    *self.group_cols, *mcols,
-                    F.lit("U").alias("op"),
-                ).unionByName(
-                    gone.select(
-                        *self.group_cols,
-                        *[F.lit(None).alias(m) for m in mcols],
-                        F.lit("D").alias("op"),
-                    ),
-                    allowMissingColumns=False,
-                ).withColumn("lsn", F.lit(max(epochs)).cast("long"))
-                m = apply_changes(spark, view, env, epoch=epochs, cfg=self.cfg)
-                synced.extend(epochs)
-                rows_applied += m["rows_applied"]
-            finally:
-                groups.unpersist()
-        lag = len(applies) - (len(view.applied_epochs()) if view else 0)
-        return {
-            "epochs_synced": synced,
-            "rows_applied": rows_applied,
-            "epochs_behind": max(lag, 0),
-            "seconds": round(time.monotonic() - t0, 3),
-        }
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return LakeTable.load(self.view_root).read(spark)
+            mcols = list(self.measures)
+            env = fresh.select(
+                *self.group_cols, *mcols,
+                F.lit("U").alias("op"),
+            ).unionByName(
+                gone.select(
+                    *self.group_cols,
+                    *[F.lit(None).alias(m) for m in mcols],
+                    F.lit("D").alias("op"),
+                ),
+                allowMissingColumns=False,
+            ).withColumn("lsn", F.lit(max(w.epochs)).cast("long"))
+            return view, apply_changes(
+                spark, view, env, epoch=w.epochs, cfg=self.cfg
+            )
+        finally:
+            groups.unpersist()

@@ -77,7 +77,7 @@ def band_index_transform(
     return _t
 
 
-class NearDupIndexJob:
+class NearDupIndexJob(FeedSyncJob):
     def __init__(
         self,
         source_root: str,
@@ -87,8 +87,7 @@ class NearDupIndexJob:
         cfg: EngineConfig | None = None,
         n_buckets: int | None = None,
     ):
-        self.id_col = id_col
-        self.sync = FeedSyncJob(
+        super().__init__(
             source_root,
             index_root,
             transform=band_index_transform(id_col, text_col),
@@ -96,21 +95,8 @@ class NearDupIndexJob:
             n_buckets=n_buckets,
             key_cols=(id_col, "band"),
         )
+        self.id_col = id_col
         self.index_root = index_root
-
-    def run_once(self, spark: SparkSession) -> dict:
-        """Index every pending base epoch (exactly-once, crash-safe — the
-        index table's own applied_epochs set is the consumer checkpoint)."""
-        return self.sync.run_once(spark)
-
-    def run_follow(
-        self,
-        spark: SparkSession,
-        poll_seconds: float = 5.0,
-        max_polls: int | None = None,
-    ) -> dict:
-        """Long-running consumer loop (FeedSyncJob.run_follow underneath)."""
-        return self.sync.run_follow(spark, poll_seconds, max_polls=max_polls)
 
     def index_table(self) -> LakeTable:
         return LakeTable.load(self.index_root)

@@ -20,9 +20,8 @@ window's own assertions first (an update whose projected key did not change
 nets to just the re-assertion). One key therefore never carries two ops at
 one lsn, and windows fold associatively like every other consumer.
 
-Exactly-once bookkeeping is the standard consumer shape (plans/sync.py):
-the projection table's own ``applied_epochs`` set is the checkpoint, catch-up
-windows never span an applied epoch, per-epoch cost is O(changed rows).
+Exactly-once bookkeeping is the ``plans/sync.py`` consumer chassis (the
+projection table's own epoch ledger); per-epoch cost is O(changed rows).
 
 Chained off the near-dup band index this is the "second hash-keyed
 projection" its module doc defers: base docs -> band index (keyed
@@ -36,21 +35,16 @@ retractable change stream.)
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnpj_data_pipeline_spark.config import EngineConfig
 from cnpj_data_pipeline_spark.lake.format import CHANGE_TYPE_COL, LakeTable
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
-from cnpj_data_pipeline_spark.plans.sync import (
-    _apply_snapshots,
-    _pending_windows,
-)
+from cnpj_data_pipeline_spark.plans.sync import Consumer, FeedWindow
 
 
-class ProjectionSyncJob:
+class ProjectionSyncJob(Consumer):
     def __init__(
         self,
         source_root: str,
@@ -71,7 +65,7 @@ class ProjectionSyncJob:
         self.cfg = cfg or EngineConfig()
         self.n_buckets = n_buckets
 
-    def _ensure_proj(self, spark: SparkSession, src: LakeTable) -> LakeTable:
+    def _target(self, spark: SparkSession, src: LakeTable) -> LakeTable:
         if LakeTable.exists(self.proj_root):
             return LakeTable.load(self.proj_root)
         cols = [*self.key_cols, *self.payload_cols]
@@ -108,50 +102,15 @@ class ProjectionSyncJob:
             downs.withColumn("op", F.lit("D"))
         ).withColumn("lsn", F.lit(lsn).cast("long"))
 
-    def run_once(
-        self, spark: SparkSession, max_window_epochs: int | None = None
-    ) -> dict:
-        """Project every pending source epoch (exactly-once, crash-safe —
-        the projection table's applied_epochs set is the checkpoint)."""
-        t0 = time.monotonic()
-        src = LakeTable.load(self.source_root)
-        proj = self._ensure_proj(spark, src)
-        applies = _apply_snapshots(src)
-        done = proj.applied_epochs()
-        synced, rows = [], 0
-        for window, prev_sid in _pending_windows(
-            applies, done, max_window_epochs
-        ):
-            to_sid = window[-1]["snapshot_id"]
-            typed = src.read_changes_typed(spark, prev_sid, to_sid)
-            env = self._envelope(typed, lsn=to_sid)
-            epochs = [s["epoch"] for s in window]
-            m = apply_changes(spark, proj, env, epoch=epochs, cfg=self.cfg)
-            synced.extend(epochs)
-            rows += m["rows_applied"]
-        lag = len(_apply_snapshots(src)) - len(proj.applied_epochs())
-        return {
-            "epochs_synced": synced,
-            "rows_applied": rows,
-            "epochs_behind": max(lag, 0),
-            "seconds": round(time.monotonic() - t0, 3),
-        }
-
-    def run_follow(
-        self,
-        spark: SparkSession,
-        poll_seconds: float = 5.0,
-        max_polls: int | None = None,
-    ) -> dict:
-        totals = {"epochs_synced": [], "rows_applied": 0, "polls": 0}
-        while True:
-            m = self.run_once(spark)
-            totals["epochs_synced"].extend(m["epochs_synced"])
-            totals["rows_applied"] += m["rows_applied"]
-            totals["polls"] += 1
-            if max_polls is not None and totals["polls"] >= max_polls:
-                return totals
-            time.sleep(poll_seconds)
+    def _apply_window(
+        self, spark: SparkSession, src: LakeTable, proj: LakeTable,
+        w: FeedWindow,
+    ) -> tuple[LakeTable, dict]:
+        typed = src.read_changes_typed(spark, w.prev_sid, w.end_sid)
+        env = self._envelope(typed, lsn=w.end_sid)
+        return proj, apply_changes(
+            spark, proj, env, epoch=w.epochs, cfg=self.cfg
+        )
 
     def proj_table(self) -> LakeTable:
         return LakeTable.load(self.proj_root)

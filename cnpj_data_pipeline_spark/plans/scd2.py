@@ -19,14 +19,15 @@ asserted in ``tests/test_scd2.py``.
 Version granularity is the APPLY COMMIT: the history records one version per
 (key, commit) transition the base table actually went through — intra-epoch
 churn is already LWW-collapsed by the base's merge, exactly as the base table
-itself never held those intermediate rows. The job therefore always consumes
-per-commit windows (``_pending_windows(max_window_epochs=1)``): a lagging or
-crash-restarted consumer reconstructs the SAME history it would have seen
-live, instead of the coarsened net-window history a catch-up fold would give.
-That determinism is what makes the job idempotent (its own ``applied_epochs``
-ledger is the checkpoint, like every consumer in ``plans/sync.py``) and
-oracle-checkable (``q_scd2_history`` replays the whole stream and must equal
-a from-scratch SQL derivation of the running-LWW-max version chain).
+itself never held those intermediate rows. The job therefore caps every
+catch-up window at one commit (``window_cap = 1`` on the ``plans/sync.py``
+consumer chassis, whatever the caller passes): a lagging or crash-restarted
+consumer reconstructs the SAME history it would have seen live, instead of
+the coarsened net-window history a catch-up fold would give. That
+determinism is what makes the job idempotent (its own ``applied_epochs``
+ledger is the checkpoint) and oracle-checkable (``q_scd2_history`` replays
+the whole stream and must equal a from-scratch SQL derivation of the
+running-LWW-max version chain).
 
 The no-read-before-write property (the same constraint that shaped
 ``plans/projection.py``): closing a version needs its ``valid_from`` and its
@@ -66,8 +67,6 @@ grows with total change volume, the honest floor for full version retention;
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -81,16 +80,15 @@ from cnpj_data_pipeline_spark.lake.format import (
 )
 from cnpj_data_pipeline_spark.operators.dedup import lww_winners_agg
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
-from cnpj_data_pipeline_spark.plans.sync import (
-    _apply_snapshots,
-    _pending_windows,
-)
+from cnpj_data_pipeline_spark.plans.sync import Consumer, FeedWindow
 
 VALID_FROM_COL = "valid_from"
 VALID_TO_COL = "valid_to"
 
 
-class SCD2SyncJob:
+class SCD2SyncJob(Consumer):
+    window_cap = 1  # version granularity is the apply commit (module doc)
+
     def __init__(
         self,
         source_root: str,
@@ -103,7 +101,7 @@ class SCD2SyncJob:
         self.cfg = cfg or EngineConfig()
         self.n_buckets = n_buckets
 
-    def _ensure_hist(self, spark: SparkSession, src: LakeTable) -> LakeTable:
+    def _target(self, spark: SparkSession, src: LakeTable) -> LakeTable:
         if LakeTable.exists(self.hist_root):
             return LakeTable.load(self.hist_root)
         src_keys = src.key_cols()
@@ -196,33 +194,16 @@ class SCD2SyncJob:
             .withColumn("lsn", F.lit(lsn).cast("long"))
         )
 
-    def run_once(self, spark: SparkSession) -> dict:
-        """Version every pending apply commit of the source (exactly-once;
-        the history table's own ``applied_epochs`` set is the checkpoint).
-        Windows are always one commit wide — version granularity is the
-        apply commit, independent of consumer scheduling (see module doc)."""
-        t0 = time.monotonic()
-        src = LakeTable.load(self.source_root)
-        hist = self._ensure_hist(spark, src)
-        applies = _apply_snapshots(src)
-        done = hist.applied_epochs()
-        synced, rows = [], 0
-        for window, prev_sid in _pending_windows(applies, done, 1):
-            to_sid = window[-1]["snapshot_id"]
-            typed = src.read_changes_typed(spark, prev_sid, to_sid)
-            raw = src.read_changes(spark, prev_sid, to_sid)
-            env = self._envelope(src, typed, raw, lsn=to_sid)
-            epochs = [s["epoch"] for s in window]
-            m = apply_changes(spark, hist, env, epoch=epochs, cfg=self.cfg)
-            synced.extend(epochs)
-            rows += m["rows_applied"]
-        lag = len(_apply_snapshots(src)) - len(hist.applied_epochs())
-        return {
-            "epochs_synced": synced,
-            "rows_applied": rows,
-            "epochs_behind": max(lag, 0),
-            "seconds": round(time.monotonic() - t0, 3),
-        }
+    def _apply_window(
+        self, spark: SparkSession, src: LakeTable, hist: LakeTable,
+        w: FeedWindow,
+    ) -> tuple[LakeTable, dict]:
+        typed = src.read_changes_typed(spark, w.prev_sid, w.end_sid)
+        raw = src.read_changes(spark, w.prev_sid, w.end_sid)
+        env = self._envelope(src, typed, raw, lsn=w.end_sid)
+        return hist, apply_changes(
+            spark, hist, env, epoch=w.epochs, cfg=self.cfg
+        )
 
     def hist_table(self) -> LakeTable:
         return LakeTable.load(self.hist_root)

@@ -1,5 +1,6 @@
-"""FeedSyncJob — the CDC *consumer* job: tail a lake table's change feed into
-a second lake table, incrementally and exactly-once.
+"""The CDC *consumer* chassis (``Consumer``) and its mirror/derived-table
+job (``FeedSyncJob``): tail a lake table's change feed into a second lake
+table, incrementally and exactly-once.
 
 The producer half of the engine tails an upstream WAL into a lake table
 (``IngestJob``); this is the downstream half: derived tables, replicas, and
@@ -18,6 +19,10 @@ of progress, and the DERIVED table's own ``applied_epochs`` set is the
 consumer checkpoint — the same idempotent-replay guard the ingest uses
 (reference analogue: the processed-files ledger, ``main.py:100-131``). A
 crash mid-sync re-runs from the top; applied epochs skip at metadata cost.
+``Consumer`` owns that loop — window planning, the ledger, the lag and the
+poll — for every epoch-ledger consumer (``plans/ivm.py``,
+``plans/projection.py``, ``plans/scd2.py`` and the corpus indexes); a job
+is only its target table and how it applies one window.
 
 Per-sync cost is O(changed data): each window reads only the delta files the
 base's apply commits appended, and the apply is an O(window) MoR append. At
@@ -38,7 +43,7 @@ shuffle. Both end in the same commit, so the ledger is shared.
 from __future__ import annotations
 
 import time
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,17 +58,6 @@ from cnpj_data_pipeline_spark.operators.merge import apply_changes
 from cnpj_data_pipeline_spark.schemas import schema_from_json
 
 Transform = Callable[[DataFrame], DataFrame]
-
-
-def _apply_snapshots(table: LakeTable) -> list[dict]:
-    return _applies_of(table.snapshots())
-
-
-def _applies_of(chain: list[dict]) -> list[dict]:
-    return [
-        s for s in chain
-        if s["op"] in ("append", "evolve") and s.get("epoch") is not None
-    ]
 
 
 def _layout_of(snap: dict) -> tuple:
@@ -112,7 +106,101 @@ def _pending_windows(
     return windows
 
 
-class FeedSyncJob:
+class FeedWindow(NamedTuple):
+    """One catch-up window: the source changes in ``(prev_sid, end_sid]``.
+    ``snaps`` is every source snapshot in that range, maintenance commits
+    included; ``epochs`` is what the window marks applied."""
+
+    prev_sid: int
+    end_sid: int
+    snaps: list[dict]
+    epochs: list[int]
+
+
+class Consumer:
+    """The change-feed consumer chassis every epoch-ledger job runs on.
+
+    ``run_once`` loads the source, reads the target's epoch ledger, plans
+    the pending catch-up windows (``_pending_windows``), applies each one,
+    and reports ``epochs_synced``/``rows_applied`` and the ``epochs_behind``
+    lag; ``run_follow`` polls it. A job supplies ``source_root`` and
+    ``cfg`` and two hooks:
+
+    - ``_target(spark, src)``: its target table, found or created. ``None``
+      means the job creates it from its first window's output;
+    - ``_apply_window(spark, src, target, window)``: apply one
+      ``FeedWindow`` in one commit that records its epochs in the target's
+      ledger. It returns ``(target, apply metrics)``.
+
+    ``window_cap`` bounds every window of a job, whatever the caller
+    passes as ``max_window_epochs``."""
+
+    window_cap: int | None = None
+
+    def run_once(
+        self, spark: SparkSession, max_window_epochs: int | None = None
+    ) -> dict:
+        """Sync every pending source epoch; returns consumer metrics.
+
+        Pending epochs are folded into CATCH-UP WINDOWS: one change-feed read
+        + one apply covers a whole run of consecutive pending epochs (LWW is
+        associative, so folding the window equals applying its epochs one by
+        one), and the window's epochs are marked applied in one atomic
+        commit. A consumer resuming after a long pause pays one apply, not
+        one per missed epoch. ``max_window_epochs`` bounds a single apply
+        (memory/latency admission, the consumer-side twin of the ingest's
+        ``max_epochs_per_run``); windows also break at any already-applied
+        epoch so a fold can never re-include applied changes.
+        ``windows_copartitioned`` counts the windows an apply reported as
+        ``copartitioned`` (shuffle-free)."""
+        t0 = time.monotonic()
+        src = LakeTable.load(self.source_root)
+        target = self._target(spark, src)
+        chain = src.snapshots()
+        done = target.applied_epochs() if target is not None else set()
+        synced, rows, n_copart = [], 0, 0
+        for applies, prev_sid in _pending_windows(
+            LakeTable.applies_of(chain), done,
+            self.window_cap or max_window_epochs,
+        ):
+            end_sid = applies[-1]["snapshot_id"]
+            w = FeedWindow(
+                prev_sid, end_sid,
+                [s for s in chain if prev_sid < s["snapshot_id"] <= end_sid],
+                [s["epoch"] for s in applies],
+            )
+            target, m = self._apply_window(spark, src, target, w)
+            synced.extend(w.epochs)
+            rows += m["rows_applied"]
+            n_copart += bool(m.get("copartitioned"))
+        return {
+            "epochs_synced": synced,
+            "rows_applied": rows,
+            "epochs_behind": src.epochs_behind(target),
+            "windows_copartitioned": n_copart,
+            "seconds": round(time.monotonic() - t0, 3),
+        }
+
+    def run_follow(
+        self,
+        spark: SparkSession,
+        poll_seconds: float = 5.0,
+        max_polls: int | None = None,
+    ) -> dict:
+        """Poll loop: sync, sleep, repeat (the long-running consumer shape).
+        ``max_polls`` bounds the loop for tests/batch drains."""
+        totals = {"epochs_synced": [], "rows_applied": 0, "polls": 0}
+        while True:
+            m = self.run_once(spark)
+            totals["epochs_synced"].extend(m["epochs_synced"])
+            totals["rows_applied"] += m["rows_applied"]
+            totals["polls"] += 1
+            if max_polls is not None and totals["polls"] >= max_polls:
+                return totals
+            time.sleep(poll_seconds)
+
+
+class FeedSyncJob(Consumer):
     def __init__(
         self,
         source_root: str,
@@ -134,6 +222,15 @@ class FeedSyncJob:
         self.n_buckets = n_buckets
         self.key_cols = key_cols
 
+    def run_once(
+        self, spark: SparkSession, max_window_epochs: int | None = None
+    ) -> dict:
+        """``Consumer.run_once``; a mirror window counts in
+        ``windows_copartitioned`` when it skipped the shuffle. Defined on
+        this class so that ``FeedSyncJob.run_once`` is its own attribute,
+        which ``cdcbench``'s tracer wraps by name."""
+        return super().run_once(spark, max_window_epochs)
+
     def _envelope(self, feed: DataFrame) -> DataFrame:
         """Feed rows (payload + meta) -> change envelope (payload + op/lsn),
         with the user transform applied to the payload columns."""
@@ -148,7 +245,7 @@ class FeedSyncJob:
                 )
         return ch
 
-    def _ensure_derived(self, spark: SparkSession, src: LakeTable) -> LakeTable:
+    def _target(self, spark: SparkSession, src: LakeTable) -> LakeTable:
         if LakeTable.exists(self.derived_root):
             return LakeTable.load(self.derived_root)
         # schema: transform applied to an empty frame of the source's payload
@@ -183,84 +280,28 @@ class FeedSyncJob:
             )
         )
 
-    def run_once(
-        self, spark: SparkSession, max_window_epochs: int | None = None
-    ) -> dict:
-        """Sync every pending base epoch; returns consumer metrics.
-
-        Pending epochs are folded into CATCH-UP WINDOWS: one change-feed read
-        + one merge covers a whole run of consecutive pending epochs (LWW is
-        associative, so folding the window equals applying its epochs one by
-        one), and the window's epochs are marked applied in one atomic
-        commit. A consumer resuming after a long pause pays one merge, not
-        one per missed epoch. ``max_window_epochs`` bounds a single apply
-        (memory/latency admission, the consumer-side twin of the ingest's
-        ``max_epochs_per_run``); windows also break at any already-applied
-        epoch so a fold can never re-include applied changes.
-
-        A mirror window whose layout matches the derived table's
+    def _apply_window(
+        self, spark: SparkSession, src: LakeTable, derived: LakeTable,
+        w: FeedWindow,
+    ) -> tuple[LakeTable, dict]:
+        """A mirror window whose layout matches the derived table's
         (``_copart_window``) is applied without a shuffle by
-        ``operators.copart.apply_changes_copart``; the result counts those
-        windows in ``windows_copartitioned``."""
+        ``operators.copart.apply_changes_copart``; every other window goes
+        through ``apply_changes``."""
         from cnpj_data_pipeline_spark.operators import copart
 
-        t0 = time.monotonic()
-        src = LakeTable.load(self.source_root)
-        derived = self._ensure_derived(spark, src)
-        chain = src.snapshots()
-        done = derived.applied_epochs()
-        synced, rows, n_copart = [], 0, 0
-        for window, prev_sid in _pending_windows(
-            _applies_of(chain), done, max_window_epochs
-        ):
-            end_sid = window[-1]["snapshot_id"]
-            epochs = [s["epoch"] for s in window]
-            if self._copart_window(
-                derived.snapshot(),
-                [s for s in chain if prev_sid < s["snapshot_id"] <= end_sid],
-            ):
-                files, end_schema = src.change_window_files(
-                    prev_sid, end_sid, by_bucket=True
-                )
-                m = copart.apply_changes_copart(
-                    spark, derived, files, epochs, self.cfg,
-                    feed_schema=schema_from_json(end_schema),
-                )
-                n_copart += 1
-            else:
-                feed = src.read_changes(spark, prev_sid, end_sid)
-                m = apply_changes(
-                    spark, derived, self._envelope(feed), epoch=epochs,
-                    cfg=self.cfg,
-                )
-            synced.extend(epochs)
-            rows += m["rows_applied"]
-        lag = len(_apply_snapshots(src)) - len(derived.applied_epochs())
-        return {
-            "epochs_synced": synced,
-            "rows_applied": rows,
-            "epochs_behind": max(lag, 0),
-            "windows_copartitioned": n_copart,
-            "seconds": round(time.monotonic() - t0, 3),
-        }
-
-    def run_follow(
-        self,
-        spark: SparkSession,
-        poll_seconds: float = 5.0,
-        max_polls: int | None = None,
-    ) -> dict:
-        """Poll loop: sync, sleep, repeat (the long-running consumer shape).
-        ``max_polls`` bounds the loop for tests/batch drains."""
-        totals = {"epochs_synced": [], "rows_applied": 0, "polls": 0}
-        while True:
-            m = self.run_once(spark)
-            totals["epochs_synced"].extend(m["epochs_synced"])
-            totals["rows_applied"] += m["rows_applied"]
-            totals["polls"] += 1
-            if max_polls is not None and totals["polls"] >= max_polls:
-                return totals
-            time.sleep(poll_seconds)
+        if self._copart_window(derived.snapshot(), w.snaps):
+            files, end_schema = src.change_window_files(
+                w.prev_sid, w.end_sid, by_bucket=True
+            )
+            return derived, copart.apply_changes_copart(
+                spark, derived, files, w.epochs, self.cfg,
+                feed_schema=schema_from_json(end_schema),
+            )
+        feed = src.read_changes(spark, w.prev_sid, w.end_sid)
+        return derived, apply_changes(
+            spark, derived, self._envelope(feed), epoch=w.epochs, cfg=self.cfg
+        )
 
 
 def text_stats_transform(ch: DataFrame) -> DataFrame:

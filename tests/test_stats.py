@@ -217,3 +217,46 @@ def test_refresh_falls_back_to_full_on_cow_window(spark, tmp_path):
     assert abs(rec["columns"]["conv_id"]["ndv"] - exact["ndv"]) <= max(
         2, TOL * exact["ndv"]
     )
+
+
+def test_analyze_older_snapshot_returns_its_record(spark, tmp_path):
+    """ANALYZE at an older snapshot id returns the record it wrote, not the
+    newest sidecar on disk."""
+    cfg = EngineConfig(n_buckets=4, salt_factor=2)
+    changes = gen_changes(
+        spark, n_events=1_500, n_convs=60, turns_per_conv=8, n_epochs=2
+    )
+    path = str(tmp_path / "lake")
+    job = IngestJob(path, cfg)
+    batches = list(epoch_batches(changes, 2))
+    job.run_batches(spark, batches[:1])
+    table = LakeTable.load(path)
+    old_sid = table.current_snapshot_id()
+    job.run_batches(spark, batches[1:])
+    head = analyze_table(spark, table)
+    assert head["snapshot_id"] > old_sid
+    rec = analyze_table(spark, table, snapshot_id=old_sid)
+    assert rec["snapshot_id"] == old_sid
+    assert rec["rows"] == table.read(spark, snapshot_id=old_sid).count()
+    assert rec["commits_behind"] == 1 and "sketches" not in rec
+    assert load_stats(table)["snapshot_id"] == head["snapshot_id"]
+
+
+def test_refresh_stores_no_row_count(spark, tmp_path):
+    """An incremental refresh cannot know the live row count (its sketch
+    union never retracts), so its record stores none."""
+    cfg = EngineConfig(n_buckets=4, salt_factor=2)
+    changes = gen_changes(
+        spark, n_events=1_500, n_convs=60, turns_per_conv=8, n_epochs=2,
+        update_ratio=0.5,
+    )
+    path = str(tmp_path / "lake")
+    job = IngestJob(path, cfg)
+    batches = list(epoch_batches(changes, 2))
+    job.run_batches(spark, batches[:1])
+    table = LakeTable.load(path)
+    assert analyze_table(spark, table)["rows"] == table.read(spark).count()
+    job.run_batches(spark, batches[1:])
+    rec = refresh_stats(spark, table)
+    assert rec["mode"] == "incremental-upper-bound"
+    assert rec["rows"] is None

@@ -22,10 +22,11 @@ re-keyed secondary index from the TYPED feed (plans/projection.py, pass
 ``--key-cols band,h1,h2,doc_id``); ``scd2`` maintains an SCD Type 2
 version-history table from the TYPED feed (plans/scd2.py — every
 (key, apply-commit) transition becomes a [valid_from, valid_to) LSN
-interval row). Progress checkpointing is the
-derived table's own applied-epochs set — no external offset store;
-re-running after a crash skips synced epochs at metadata cost. Prints one
-JSON line of consumer metrics.
+interval row). Every ``--transform`` runs on the same consumer chassis
+(``plans/sync.py``), so ``--follow`` polls any of them. Progress
+checkpointing is the derived table's own applied-epochs set — no external
+offset store; re-running after a crash skips synced epochs at metadata
+cost. Prints one JSON line of consumer metrics.
 """
 
 from __future__ import annotations
