@@ -159,6 +159,12 @@ def local_frame(
     included. Values pass through each
     type's ``toInternal``, so collected values — naive local timestamps
     included — round-trip exactly."""
+    return spark.createDataFrame(_arrow_rows(schema, rows), schema)
+
+
+def _arrow_rows(schema: T.StructType, rows: Sequence = ()):
+    """Driver-side ``rows`` (in field order) as a ``schema``-typed Arrow
+    table, each value through its type's ``toInternal``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -167,7 +173,7 @@ def local_frame(
         pa.array([f.dataType.toInternal(r[i]) for r in rows], arrow.field(i).type)
         for i, f in enumerate(schema.fields)
     ]
-    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+    return pa.Table.from_arrays(cols, schema=arrow)
 
 
 _DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -1751,6 +1757,33 @@ class LakeTable:
                 out.extend(os.path.join(self.root, p) for p in info["files"])
         return out
 
+    def _live_files(
+        self,
+        snap: dict,
+        buckets: Iterable[int] | None = None,
+        file_index: dict[int, list[str]] | None = None,
+    ) -> tuple[list[str], list[str]]:
+        """The selected buckets' files as absolute paths, split into
+        (merged, unmerged): a merged bucket holds one final row per key, an
+        unmerged one holds delta generations a read must fold. Keys never
+        span buckets, so the two sides fold independently. ``file_index``
+        (bucket -> kept paths, ``read_keys``' manifest prune) replaces a
+        bucket's manifest list."""
+        keyless = snap["key_cols"] is None
+        sel = None if buckets is None else {int(b) for b in buckets}
+        merged: list[str] = []
+        unmerged: list[str] = []
+        for b, info in snap["buckets"].items():
+            if sel is not None and int(b) not in sel:
+                continue
+            if file_index is not None:
+                files = file_index.get(int(b), [])
+            else:
+                files = [os.path.join(self.root, p) for p in info["files"]]
+            side = merged if keyless or info.get("merged", True) else unmerged
+            side.extend(files)
+        return merged, unmerged
+
     def read(
         self,
         spark: SparkSession,
@@ -1797,28 +1830,24 @@ class LakeTable:
         keyless = snap["key_cols"] is None
         engine = snap.get("merge_engine", "lww")
         payload_fields = schema_from_json(snap["schema"]).fields
-        phys = T.StructType(list(payload_fields) + _phys_meta_fields(snap))
-        sel = None if buckets is None else {int(b) for b in buckets}
-        merged_b, unmerged_b = [], []
-        for b, info in snap["buckets"].items():
-            if sel is not None and int(b) not in sel:
-                continue
-            is_merged = keyless or info.get("merged", True)
-            (merged_b if is_merged else unmerged_b).append(int(b))
+        # every column nullable, as Spark reports any file scan: a side
+        # with no file to scan must not change the read's schema
+        phys = T.StructType(
+            [
+                T.StructField(f.name, f.dataType, True)
+                for f in list(payload_fields) + _phys_meta_fields(snap)
+            ]
+        )
+        merged, unmerged = self._live_files(snap, buckets, file_index)
 
-        def _scan(bs: list[int]) -> DataFrame:
-            if file_index is not None:
-                # caller-pruned file subset (read_keys' manifest-stats prune)
-                files = [f for b in bs for f in file_index.get(b, [])]
-            else:
-                files = self._bucket_files(snap, bs)
+        def _scan(files: list[str]) -> DataFrame:
             out = scan_files(spark, files, phys)
             if scan_filter is not None:
                 out = out.filter(scan_filter)
             return out
 
-        df = _scan(merged_b)
-        if unmerged_b:
+        df = _scan(merged)
+        if unmerged:
             # hash-aggregate fold: map-side partials collapse the delta
             # generations before the shuffle — the MoR read tax shrinks with
             # combine, instead of shuffling every version to a sort. The
@@ -1832,7 +1861,7 @@ class LakeTable:
 
                 key_set = set(snap["key_cols"])
                 winners = partial_winners_agg(
-                    _scan(unmerged_b),
+                    _scan(unmerged),
                     snap["key_cols"],
                     [f.name for f in payload_fields if f.name not in key_set],
                     lsn_col=LSN_META_COL,
@@ -1845,7 +1874,7 @@ class LakeTable:
                 )
 
                 winners = lww_winners_agg(
-                    _scan(unmerged_b),
+                    _scan(unmerged),
                     snap["key_cols"],
                     lsn_col=LSN_META_COL,
                     op_col=OP_META_COL,
@@ -1875,7 +1904,8 @@ class LakeTable:
         scanned — O(|keys|/n_buckets · table) IO instead of a full scan,
         the read-side payoff of hash-bucketed clustering (at 2^14 buckets a
         point lookup touches 1/16384 of the data files). The surviving rows
-        are left-semi-joined against the broadcast key set.
+        are left-semi-joined against the broadcast key set. A key with a
+        NULL in any ``on`` column never matches.
 
         Two regimes, chosen by ``broadcast_keys``:
 
@@ -1883,7 +1913,16 @@ class LakeTable:
           (bounded by min(|keys|, n_buckets)), enabling the SECOND pruning
           level — manifest per-file key min/max skips generation files —
           and the semi join broadcasts. ``keys`` must be driver-small, the
-          normal point-lookup contract.
+          normal point-lookup contract. When the kept files total at most
+          ``spark.sql.autoBroadcastJoinThreshold`` bytes (``-1``: never),
+          the driver answers on its own: it reads them with pyarrow,
+          keeps the rows the leading-key IN list names, folds the unmerged
+          buckets with the table's merge engine
+          (``operators.copart.read_fold_arrow``, the compaction kernel's
+          fold) and returns a LocalRelation — no scan, fold or join job.
+          The schema equals the Spark path's; a
+          partial/aggregate table the Arrow fold cannot refold
+          bit-identically (``_map_refold_unsafe``) always takes Spark.
         * ``False`` (batch lookup, e.g. a change window's touched keys or an
           IVM job's affected groups): only DISTINCT BUCKET IDS are collected
           (bounded by n_buckets — metadata-scale regardless of |keys|); the
@@ -1900,7 +1939,8 @@ class LakeTable:
         whose prefix matches. Bucket pruning applies whenever ``on`` covers
         the table's bucket columns (the bucket hash is computable from the
         lookup keys); otherwise the lookup degrades to a full-bucket scan +
-        semi join, loudly assumed by the caller."""
+        semi join, loudly assumed by the caller. As with any USING join,
+        the ``on`` columns come first in the result."""
         snap = self.snapshot(snapshot_id)
         key_cols = snap["key_cols"]
         if key_cols is None:
@@ -1925,24 +1965,25 @@ class LakeTable:
         types = {f.name: f.dataType for f in schema_from_json(snap["schema"]).fields}
         kd = keys.select(*[F.col(c).try_cast(types[c]).alias(c) for c in on])
         file_index = None
-        scan_filter = None
+        lead_in = None
         if broadcast_keys:
             # evaluate the caller's plan ONCE: one single-stage job collects
             # the (bucket, *on) rows, deduplicated here rather than by a
-            # shuffle, and the semi join's build side is a LocalRelation over
-            # them — neither the broadcast nor a re-collect of the returned
-            # frame re-runs `keys`
+            # shuffle; keys with a NULL column (never a match) are dropped.
+            # Neither the semi join's build side nor a re-collect of the
+            # returned frame re-runs `keys`
             bcol = (
                 [bucket_expr(bcols, snap["n_buckets"]).alias("__b")]
                 if prunable
                 else []
             )
-            key_rows = list(dict.fromkeys(kd.select(*bcol, *on).collect()))
-            kd = local_frame(
-                spark,
-                T.StructType([T.StructField(c, types[c]) for c in on]),
-                [tuple(r[c] for c in on) for r in key_rows],
-            )
+            key_rows = [
+                r
+                for r in dict.fromkeys(kd.select(*bcol, *on).collect())
+                if all(r[c] is not None for c in on)
+            ]
+            key_schema = T.StructType([T.StructField(c, types[c]) for c in on])
+            key_vals = [tuple(r[c] for c in on) for r in key_rows]
         else:
             kd = kd.distinct()
         if not prunable:
@@ -1967,7 +2008,7 @@ class LakeTable:
             in_cap = int(os.environ.get("SPARK_GRAFT_KEY_IN_MAX", "8192"))
             vals = sorted({r[on[0]] for r in key_rows})
             if vals and len(vals) <= in_cap:
-                scan_filter = F.col(on[0]).isin(vals)
+                lead_in = vals
         else:
             buckets = sorted(
                 int(r["__b"])
@@ -1977,6 +2018,21 @@ class LakeTable:
                 .distinct()
                 .collect()
             )
+        if broadcast_keys:
+            merged, unmerged = self._live_files(snap, buckets, file_index)
+            nbytes = sum(os.path.getsize(f) for f in merged + unmerged)
+            conf = spark._jsparkSession.sessionState().conf()
+            if (
+                nbytes <= conf.autoBroadcastJoinThreshold()
+                and not _map_refold_unsafe(snap)
+            ):
+                return self._read_keys_local(
+                    spark, snap, merged, unmerged,
+                    _arrow_rows(key_schema, key_vals), lead_in is not None,
+                    include_meta, include_tombstones, logical,
+                )
+            # the semi join's build side: a LocalRelation over the rows
+            kd = local_frame(spark, key_schema, key_vals)
         df = self.read(
             spark,
             snapshot_id=snapshot_id,
@@ -1984,11 +2040,72 @@ class LakeTable:
             include_tombstones=include_tombstones,
             buckets=buckets,
             file_index=file_index,
-            scan_filter=scan_filter,
+            scan_filter=None if lead_in is None else F.col(on[0]).isin(lead_in),
             logical=logical,
         )
         join_keys = F.broadcast(kd) if broadcast_keys else kd
         return df.join(join_keys, on=on, how="left_semi")
+
+    def _read_keys_local(
+        self,
+        spark: SparkSession,
+        snap: dict,
+        merged: list[str],
+        unmerged: list[str],
+        keys,
+        push_lead: bool,
+        include_meta: bool,
+        include_tombstones: bool,
+        logical: bool,
+    ) -> DataFrame:
+        """The driver regime of :meth:`read_keys`: the same answer from
+        Arrow on the driver. ``keys`` is the deduplicated, NULL-free key set
+        as an Arrow table of the ``on`` columns; ``push_lead`` filters each
+        file read by its first column. Row groups are not skipped: under the
+        default 10 MB bound a kept file is smaller than one compaction row
+        group (``SPARK_GRAFT_REWRITE_ROWGROUP_BYTES``, 32 MiB)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from cnpj_data_pipeline_spark.operators.copart import read_fold_arrow
+
+        on = keys.column_names
+        phys = T.StructType(
+            list(schema_from_json(snap["schema"]).fields) + _phys_meta_fields(snap)
+        )
+        target = to_arrow_schema(phys)
+        key_in = (on[0], pc.unique(keys.column(on[0]))) if push_lead else None
+        tbl = pa.concat_tables(
+            [
+                read_fold_arrow(merged, target, key_in=key_in, workers=8),
+                read_fold_arrow(
+                    unmerged, target, snap["key_cols"],
+                    snap.get("merge_engine", "lww"), snap.get("agg_spec"),
+                    key_in=key_in, workers=8,
+                ),
+            ]
+        )
+        if not include_tombstones:
+            tbl = tbl.filter(pc.not_equal(tbl.column(OP_META_COL), "D"))
+        # the semi join: keys hold no NULL, and a NULL never equals a key
+        probe = tbl.select(on).append_column(
+            "__pos", pa.array(range(len(tbl)), pa.int64())
+        )
+        hit = probe.join(keys, keys=on, join_type="left semi")
+        tbl = tbl.take(hit.column("__pos"))
+        drop = set() if include_meta else {
+            f.name for f in _phys_meta_fields(snap)
+        }
+        cols = on + [f.name for f in phys.fields if f.name not in drop | set(on)]
+        ren = (snap.get("renames") or {}) if logical else {}
+        # every column nullable, as a Spark file scan reports it
+        schema = T.StructType(
+            [T.StructField(ren.get(c, c), phys[c].dataType, True) for c in cols]
+        )
+        return spark.createDataFrame(
+            tbl.select(cols).rename_columns(schema.names), schema
+        )
 
     def prune_key_files(
         self, snap: dict, keys_by_bucket: dict[int, list]

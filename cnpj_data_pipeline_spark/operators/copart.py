@@ -275,6 +275,72 @@ def _lww_fold_arrow(
     return srt.take(firsts)
 
 
+def read_fold_arrow(
+    files: Sequence[str],
+    target,
+    key_cols: Sequence[str] | None = None,
+    engine: str = "lww",
+    agg_spec: dict[str, str] | None = None,
+    key_in: tuple | None = None,
+    workers: int = 1,
+):
+    """Committed lake files as one Arrow table of ``target`` (the table's
+    physical pa.Schema, meta columns included), folded to one row per key
+    when ``key_cols`` is given. The fold is the table's merge engine: LWW
+    (``_lww_fold_arrow``) or the partial/aggregate per-column fold
+    (``partial_fold_arrow``; the caller routes ``_map_refold_unsafe``
+    tables elsewhere). Both the map-only compaction kernel and the driver
+    regime of ``LakeTable.read_keys`` read through here.
+
+    Each file is read for the ``target`` columns it holds and normalized on
+    its own before the concat (``_normalize_to``: typed NULLs for
+    pre-evolution files, INT96 and tz-aware timestamps cast). ``key_in`` is
+    ``(column, pa.Array)``: each file keeps only the rows whose column is
+    in the value set, before the concat and fold, so it must keep or drop
+    whole keys, never some of a key's versions. ``workers`` files are read
+    at once (pyarrow releases the GIL): worth it on the driver, while a map
+    task already runs beside the others."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def read(fp: str):
+        with pq.ParquetFile(fp) as pf:
+            have = set(pf.schema_arrow.names)
+            tbl = pf.read(columns=[n for n in target.names if n in have])
+        tbl = _normalize_to(tbl, target)
+        if key_in is not None:
+            col, vals = key_in
+            tbl = tbl.filter(pc.is_in(tbl.column(col), value_set=vals))
+        return tbl
+
+    if workers > 1 and len(files) > 1:
+        with ThreadPoolExecutor(max_workers=min(len(files), workers)) as pool:
+            parts = list(pool.map(read, files))
+    else:
+        parts = [read(fp) for fp in files]
+    tbl = pa.concat_tables(parts) if parts else target.empty_table()
+    if not key_cols or not len(tbl):
+        return tbl
+    if engine == "lww":
+        return _lww_fold_arrow(
+            tbl, list(key_cols), lsn_col=LSN_META_COL, op_col=OP_META_COL
+        )
+    from cnpj_data_pipeline_spark.lake.format import PARTIAL_META_FIELDS
+    from cnpj_data_pipeline_spark.operators.partial import partial_fold_arrow
+
+    skip = set(key_cols) | {LSN_META_COL, OP_META_COL} | {
+        f.name for f in PARTIAL_META_FIELDS
+    }
+    folded = partial_fold_arrow(
+        tbl, list(key_cols), [n for n in target.names if n not in skip],
+        lsn_col=LSN_META_COL, op_col=OP_META_COL, agg_spec=agg_spec,
+    )
+    return _normalize_to(folded, target)
+
+
 def _make_task(
     stage: str,
     root: str,
@@ -696,7 +762,6 @@ def rewrite_buckets_map(
     root = table.root
 
     def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -705,50 +770,22 @@ def rewrite_buckets_map(
             PARTIAL_META_FIELDS,
             _file_stats,
         )
-        from cnpj_data_pipeline_spark.operators.copart import (
-            _lww_fold_arrow,
-            _normalize_to,
-        )
+        from cnpj_data_pipeline_spark.operators.copart import read_fold_arrow
         from cnpj_data_pipeline_spark.schemas import schema_from_json
 
-        payload_fields = list(schema_from_json(schema_json).fields)
-        phys_fields = payload_fields + list(PHYSICAL_META_FIELDS)
+        phys_fields = list(schema_from_json(schema_json).fields) + list(
+            PHYSICAL_META_FIELDS
+        )
         if engine != "lww":
             phys_fields = phys_fields + list(PARTIAL_META_FIELDS)
         target = to_arrow_schema(T.StructType(phys_fields))
-        payload_cols = [
-            f.name for f in payload_fields if f.name not in set(key_cols)
-        ]
 
         for driving in batches:
             for _, row in driving.iterrows():
                 b = int(row["bucket"])
-                files = list(row["files"])
-                # per-file pad/project/cast BEFORE concat: generations of one
-                # bucket may be written by different sessions (engine µs-UTC
-                # vs vanilla-session INT96→ns-naive) and by pre-evolution
-                # schemas — _normalize_to makes them concat-compatible
-                tbl = pa.concat_tables(
-                    [_normalize_to(pq.read_table(f), target) for f in files]
+                folded = read_fold_arrow(
+                    list(row["files"]), target, key_cols, engine, agg_spec
                 )
-                if engine != "lww":
-                    from cnpj_data_pipeline_spark.operators.partial import (
-                        partial_fold_arrow,
-                    )
-
-                    folded = _normalize_to(
-                        partial_fold_arrow(
-                            tbl, key_cols, payload_cols,
-                            lsn_col=LSN_META_COL, op_col=OP_META_COL,
-                            agg_spec=agg_spec,
-                        ),
-                        target,
-                    )
-                else:
-                    folded = _lww_fold_arrow(
-                        tbl, key_cols,
-                        lsn_col=LSN_META_COL, op_col=OP_META_COL,
-                    )
                 if lsn_horizon is not None:
                     keep = pc.invert(
                         pc.and_kleene(
