@@ -60,7 +60,7 @@ Supported grammar (case-insensitive keywords; one statement per call):
     RESTORE TABLE <name> TO VERSION AS OF <n>
                        | TO TIMESTAMP AS OF '<ts>' | TO TAG '<tag>'
                                       -> rollback (history preserved)
-    CREATE MATERIALIZED VIEW <name> [IF NOT EXISTS] LOCATION '<path>' AS
+    CREATE MATERIALIZED VIEW [IF NOT EXISTS] <name> LOCATION '<path>' AS
         SELECT <group items...>, count(*) AS <n>, sum(<expr>) AS <m> ...
         FROM <table> GROUP BY <group names>
                                       -> an INCREMENTALLY-MAINTAINED
@@ -75,7 +75,8 @@ Supported grammar (case-insensitive keywords; one statement per call):
     REFRESH MATERIALIZED VIEW <name>  -> maintain through every pending
                                          source epoch, O(changed data),
                                          idempotent (the view's own ledger)
-    CREATE INDEX <name> [IF NOT EXISTS] ON <table>
+    SHOW CREATE MATERIALIZED VIEW <name> -> the CREATE statement
+    CREATE INDEX [IF NOT EXISTS] <name> ON <table>
         USING NEARDUP (<id>, <text>) LOCATION '<path>'
       | USING DECONTAM (<id>, <text>) LOCATION '<path>' EVAL '<parquet>'
       | USING IVF (<id>, <emb>) LOCATION '<path>' CENTROIDS '<parquet>'
@@ -94,7 +95,7 @@ Supported grammar (case-insensitive keywords; one statement per call):
                                          O(changed data), idempotent
     SHOW CREATE INDEX <name>          -> the CREATE statement (side clause
                                          points at the frozen copy)
-    CREATE HISTORY TABLE <name> [IF NOT EXISTS] ON <table>
+    CREATE HISTORY TABLE [IF NOT EXISTS] <name> ON <table>
         LOCATION '<path>'             -> SCD Type 2 version history
                                          (plans/scd2.py) as a declared
                                          object: _history.json sidecar,
@@ -178,6 +179,22 @@ Semantics, each inherited from the operation the statement compiles to:
   tombstone VACUUM run Spark jobs (bucket rewrites); everything else is
   metadata-only. All are refused inside BEGIN blocks (they commit their
   own CAS and cannot stage); the SHOW forms are allowed anywhere.
+* ``MATERIALIZED VIEW``, ``INDEX`` and ``HISTORY TABLE`` are DECLARED
+  CONSUMERS: a ``plans/`` consumer job over the source's change feed,
+  named in SQL and recorded in a JSON sidecar under its root
+  (``_mview.json`` / ``_index.json`` / ``_history.json``). All three share
+  one path. CREATE resolves the source, freezes INDEX's side input, runs
+  the initial sync, and only then writes the sidecar atomically and
+  registers the name. A CREATE whose freeze or sync fails leaves no
+  sidecar, and removes the location when it made it, so a corrected
+  statement (another query or column list) can reuse the location.
+  ``IF NOT EXISTS`` over an existing sidecar
+  re-registers only against the recorded source: a registered source must
+  be the recorded root, an unregistered one the recorded name (INDEX
+  accepts any unregistered name; view sidecars from before the name was
+  recorded are checked by root only). REFRESH rebuilds the job from the
+  sidecar, SHOW CREATE renders it, SHOW CONSUMERS lists every registered
+  name that has one.
 * There is deliberately no ``DROP TABLE``: destroying state is an
   operator action (retention/expiry are the governed paths), not a
   statement a streaming consumer should ever hold.
@@ -194,7 +211,11 @@ and every compiled action is a metadata-only commit of O(schema) bytes.
 from __future__ import annotations
 
 import json
+import os
 import re
+import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -222,17 +243,24 @@ _ALTER_HEAD = re.compile(
 _PK_RE = re.compile(
     r"^\s*PRIMARY\s+KEY\s*\((?P<cols>[^)]+)\)\s*$", re.IGNORECASE
 )
-_MVIEW_HEAD = re.compile(
-    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
-    r"(?P<name>[\w.-]+)\s+LOCATION\s+'(?P<loc>[^']+)'\s+AS\s+"
-    r"(?P<query>SELECT\s.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_REFRESH_HEAD = re.compile(
-    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.-]+)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_MVIEW_SPEC_FILE = "_mview.json"
+
+
+def resolve_name(
+    tables: dict, name: str, what: str = "DDL target", *, root: bool = False
+):
+    """The registry lookup every statement shares: SQL name -> the
+    registered :class:`LakeTable` (``root=True``: its root path);
+    ``ValueError`` naming ``unknown <what>`` when nothing is registered
+    under it."""
+    if name not in tables:
+        raise ValueError(
+            f"unknown {what} {name!r}: not registered "
+            f"(registered: {sorted(tables)})"
+        )
+    t = tables[name]
+    if root:
+        return t.root if isinstance(t, LakeTable) else t
+    return t if isinstance(t, LakeTable) else LakeTable.load(t)
 
 
 def _split_top_level(s: str, sep: str = ",") -> list[str]:
@@ -309,8 +337,7 @@ def _create_stmt(
     if_not_exists = mh.group("ine") is not None
     if name in tables:
         if if_not_exists:
-            t = tables[name]
-            return t if isinstance(t, LakeTable) else LakeTable.load(t)
+            return resolve_name(tables, name)
         raise ValueError(f"table {name!r} is already registered")
     cols_txt, rest = _scan_balanced(stmt[mh.end() - 1:])
 
@@ -516,17 +543,9 @@ def _clone_stmt(m: re.Match, tables: dict) -> LakeTable:
     name = m.group("name")
     if name in tables:
         if m.group("ine") is not None:
-            t = tables[name]
-            return t if isinstance(t, LakeTable) else LakeTable.load(t)
+            return resolve_name(tables, name)
         raise ValueError(f"table {name!r} is already registered")
-    src_name = m.group("src")
-    if src_name not in tables:
-        raise ValueError(
-            f"CLONE source {src_name!r} is not registered "
-            f"(registered: {sorted(tables)})"
-        )
-    s = tables[src_name]
-    src = s if isinstance(s, LakeTable) else LakeTable.load(s)
+    src = resolve_name(tables, m.group("src"), "CLONE source")
     if m.group("ine") is not None and LakeTable.exists(m.group("loc")):
         # resumable bootstrap: the fork already landed on a prior run
         t = LakeTable.load(m.group("loc"))
@@ -558,23 +577,12 @@ def _resolve_fk_match(m: re.Match, tables: dict):
     if m.group("refpath"):
         return m.group("refpath"), None
     name = m.group("refname")
-    if name not in tables:
-        raise ValueError(
-            f"FOREIGN KEY references unknown table {name!r} "
-            f"(registered: {sorted(tables)}; or quote a lake root path)"
-        )
-    t = tables[name]
-    return (t if isinstance(t, LakeTable) else t), name
+    return resolve_name(tables, name, "table"), name
 
 
 def _alter_stmt(spark: SparkSession, m: re.Match, tables: dict) -> int:
     name, rest = m.group("name"), m.group("rest").strip().rstrip(";")
-    if name not in tables:
-        raise ValueError(
-            f"unknown DDL target {name!r} (registered: {sorted(tables)})"
-        )
-    t = tables[name]
-    table = t if isinstance(t, LakeTable) else LakeTable.load(t)
+    table = resolve_name(tables, name)
 
     rm = re.match(
         r"^RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)$", rest, re.IGNORECASE
@@ -1202,7 +1210,6 @@ def _describe(spark: SparkSession, table: LakeTable, extended: bool):
     )
 
 
-_MV_DELTA_AGGS = ("count_star", "sum", "count", "avg")
 _MV_REFRESH_ONLY = ("min", "max")
 
 
@@ -1353,7 +1360,42 @@ def _parse_mview_query(query: str) -> dict:
     }
 
 
-def _mview_job(spec: dict):
+# ------- declared consumers (module doc: DECLARED CONSUMERS) -------
+
+
+@dataclass(frozen=True)
+class _ConsumerKind:
+    """What differs between the declared consumer kinds; everything else
+    is the one CREATE / REFRESH / SHOW CREATE / SHOW CONSUMERS path."""
+
+    sql: str  # the statement noun: CREATE / REFRESH / SHOW CREATE <sql>
+    label: str  # how messages name one
+    head: re.Pattern  # the CREATE statement
+    spec_file: str  # the sidecar under the consumer's root
+    root_key: str  # the sidecar field recording that root
+    # CREATE match -> definition, including the source's SQL name
+    spec: Callable[[re.Match], dict]
+    # (spark, spec, root) -> the plans/ Consumer job that maintains it
+    job: Callable[[SparkSession, dict, str], object]
+    # (spec, root, name) -> the CREATE statement text
+    show: Callable[[dict, str, str], str]
+    # SHOW CONSUMERS kind column (None: the spec's own "kind")
+    listed: str | None = None
+    # (spark, spec, root): copies a side input under the root before the
+    # first sync, so no refresh depends on the original path
+    freeze: Callable[[SparkSession, dict, str], None] | None = None
+    # IF NOT EXISTS with an unregistered source: must the statement carry
+    # the recorded source name? (INDEX re-registers under any name)
+    by_name: bool = True
+
+
+def _mview_spec(m: re.Match) -> dict:
+    spec = _parse_mview_query(m.group("query"))
+    spec["query"] = " ".join(m.group("query").split()).rstrip(";").strip()
+    return spec
+
+
+def _mview_job(spark: SparkSession, spec: dict, root: str):
     from cnpj_data_pipeline_spark.plans.ivm import (
         AggSyncJob,
         GroupRefreshSyncJob,
@@ -1364,24 +1406,17 @@ def _mview_job(spec: dict):
         if spec.get("kind") == "refresh"
         else AggSyncJob
     )
-    return cls(
+    job = cls(
         spec["source_root"],
-        spec["view_root"],
+        root,
         spec["group_cols"],
         spec["measures"],
         group_exprs=spec["group_exprs"],
     )
-
-
-def _mview_spec_path(view_root: str) -> str:
-    import os
-
-    return os.path.join(view_root, _MVIEW_SPEC_FILE)
-
-
-def load_mview_spec(view_root: str) -> dict:
-    with open(_mview_spec_path(view_root), encoding="utf-8") as f:
-        return json.load(f)
+    # the view table exists from CREATE on, even before the source's
+    # first epoch (a no-op once it does)
+    job.ensure_view(spark)
+    return job
 
 
 def read_mview(spark: SparkSession, view_root: str):
@@ -1393,7 +1428,7 @@ def read_mview(spark: SparkSession, view_root: str):
     column order is restored."""
     from pyspark.sql import functions as F
 
-    spec = load_mview_spec(view_root)
+    spec = _load_spec(_MVIEW, view_root)
     df = LakeTable.load(view_root).read(spark)
     if spec.get("kind") == "refresh":
         # every aggregate ran verbatim and landed under its own alias
@@ -1416,181 +1451,22 @@ def read_mview(spark: SparkSession, view_root: str):
     return df.select(*[_out(n) for n in spec["select_names"]])
 
 
-def _mview_stmt(spark: SparkSession, m: re.Match, tables: dict):
-    """CREATE MATERIALIZED VIEW: persist the definition as a sidecar spec
-    under the view root (durable before the view table's first commit —
-    the catalog entry a warehouse would hold), create the empty view table
-    eagerly, run the initial sync, register the view into ``tables``."""
-    import os
-
-    name, loc, ine = m.group("name"), m.group("loc"), m.group("ine")
-    spec_path = _mview_spec_path(loc)
-    if os.path.exists(spec_path):
-        if not ine:
-            raise ValueError(
-                f"materialized view already exists at {loc!r} "
-                "(use CREATE MATERIALIZED VIEW IF NOT EXISTS to re-register)"
-            )
-        tables[name] = loc
-        return LakeTable.load(loc)
-    spec = _parse_mview_query(m.group("query"))
-    spec["query"] = " ".join(m.group("query").split()).rstrip(";").strip()
-    src = spec.pop("source")
-    if src not in tables:
-        raise ValueError(
-            f"unknown source table {src!r} (registered: {sorted(tables)})"
-        )
-    t = tables[src]
-    spec["source_root"] = t.root if isinstance(t, LakeTable) else t
-    spec["view_root"] = loc
-    job = _mview_job(spec)
-    view = job.ensure_view(spark)
-    os.makedirs(loc, exist_ok=True)
-    tmp = spec_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(spec, f, indent=1)
-    os.replace(tmp, spec_path)
-    job.run_once(spark)
-    tables[name] = loc
-    return view
+_INDEX_SIDE = {"NEARDUP": None, "DECONTAM": "EVAL", "IVF": "CENTROIDS"}
 
 
-def show_create_mview(view_root: str, name: str = "v") -> str:
-    """The CREATE MATERIALIZED VIEW statement, reconstructed from the
-    persisted definition — round-trips through :func:`execute_ddl` (fill a
-    new LOCATION to re-point it)."""
-    spec = load_mview_spec(view_root)
-    return (
-        f"CREATE MATERIALIZED VIEW {name} LOCATION '{view_root}' AS "
-        f"{spec['query']}"
-    )
-
-
-def _mview_refresh(spark: SparkSession, m: re.Match, tables: dict) -> dict:
-    """REFRESH MATERIALIZED VIEW: reconstruct the sync job from the
-    persisted spec and maintain through every pending source epoch —
-    O(changed data), idempotent (the view's own epoch ledger)."""
-    name = m.group("name")
-    if name not in tables:
-        raise ValueError(
-            f"unknown materialized view {name!r} (registered: "
-            f"{sorted(tables)})"
-        )
-    t = tables[name]
-    root = t.root if isinstance(t, LakeTable) else t
-    spec = load_mview_spec(root)
-    return _mview_job(spec).run_once(spark)
-
-
-# ---------------- secondary INDEX statements ----------------
-
-_INDEX_SPEC_FILE = "_index.json"
-_INDEX_KINDS = ("NEARDUP", "DECONTAM", "IVF")
-_INDEX_HEAD = re.compile(
-    r"^\s*CREATE\s+INDEX\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
-    r"(?P<name>[\w.-]+)\s+ON\s+(?P<src>[\w.-]+)\s+USING\s+"
-    r"(?P<kind>\w+)\s*\((?P<cols>[^)]+)\)\s+LOCATION\s+'(?P<loc>[^']+)'"
-    r"(?:\s+(?P<skw>EVAL|CENTROIDS)\s+'(?P<side>[^']+)')?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_INDEX_REFRESH_HEAD = re.compile(
-    r"^\s*REFRESH\s+INDEX\s+(?P<name>[\w.-]+)\s*;?\s*$", re.IGNORECASE
-)
-
-
-def _index_spec_path(index_root: str) -> str:
-    import os
-
-    return os.path.join(index_root, _INDEX_SPEC_FILE)
-
-
-def load_index_spec(index_root: str) -> dict:
-    with open(_index_spec_path(index_root), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _index_job(spark: SparkSession, spec: dict):
-    """Reconstruct the incremental index job from a persisted spec. The
-    side input (eval grams / centroids) was FROZEN under the index root at
-    CREATE, so a refresh never re-reads the original side location."""
-    kind = spec["kind"]
-    if kind == "NEARDUP":
-        from cnpj_data_pipeline_spark.plans.neardup import NearDupIndexJob
-
-        return NearDupIndexJob(
-            spec["source_root"],
-            spec["index_root"],
-            id_col=spec["id_col"],
-            text_col=spec["val_col"],
-        )
-    if kind == "DECONTAM":
-        from cnpj_data_pipeline_spark.plans.decontam import DecontamIndexJob
-
-        grams = spark.read.parquet(spec["side_frozen"])
-        return DecontamIndexJob(
-            spec["source_root"],
-            spec["index_root"],
-            grams,
-            id_col=spec["id_col"],
-            text_col=spec["val_col"],
-        )
-    if kind == "IVF":
-        from cnpj_data_pipeline_spark.plans.ivf import IVFIndexJob
-
-        cents = spark.read.parquet(spec["side_frozen"])
-        return IVFIndexJob(
-            spec["source_root"],
-            spec["index_root"],
-            cents,
-            id_col=spec["id_col"],
-            emb_col=spec["val_col"],
-        )
-    raise ValueError(f"unknown index kind {kind!r}")
-
-
-def _index_stmt(spark: SparkSession, m: re.Match, tables: dict):
-    """CREATE INDEX: declare one of the engine's INCREMENTAL change-feed
-    indexes (plans/neardup.py band index, plans/decontam.py contamination
-    index, plans/ivf.py assignment index) in SQL. The definition persists
-    as a sidecar ``_index.json`` under the index root (the mview pattern),
-    the side input is FROZEN by copying it under ``<root>/_side/`` (a
-    refresh never depends on the original side path still existing or
-    being unchanged — the frozen-codebook contract made physical), and the
-    initial sync runs at CREATE. ``REFRESH INDEX`` catches up O(changed
-    data), idempotent under the index table's own epoch ledger."""
-    import os
-
-    name, loc, ine = m.group("name"), m.group("loc"), m.group("ine")
+def _index_spec(m: re.Match) -> dict:
     kind = m.group("kind").upper()
-    if kind not in _INDEX_KINDS:
+    if kind not in _INDEX_SIDE:
         raise ValueError(
-            f"unknown index kind {kind!r} (choose from {_INDEX_KINDS})"
+            f"unknown index kind {kind!r} (choose from {tuple(_INDEX_SIDE)})"
         )
-    spec_path = _index_spec_path(loc)
-    if os.path.exists(spec_path):
-        if not ine:
-            raise ValueError(
-                f"index already exists at {loc!r} "
-                "(use CREATE INDEX IF NOT EXISTS to re-register)"
-            )
-        tables[name] = loc
-        return LakeTable.load(loc)
     cols = [c.strip() for c in m.group("cols").split(",")]
     if len(cols) != 2:
         raise ValueError(
             f"CREATE INDEX USING {kind} takes exactly (id_col, "
             f"{'emb_col' if kind == 'IVF' else 'text_col'}), got {cols}"
         )
-    src = m.group("src")
-    if src not in tables:
-        raise ValueError(
-            f"unknown source table {src!r} (registered: {sorted(tables)})"
-        )
-    t = tables[src]
-    source_root = t.root if isinstance(t, LakeTable) else t
-    skw = (m.group("skw") or "").upper()
-    side = m.group("side")
-    need = {"NEARDUP": None, "DECONTAM": "EVAL", "IVF": "CENTROIDS"}[kind]
+    skw, need = (m.group("skw") or "").upper(), _INDEX_SIDE[kind]
     if need is None and skw:
         raise ValueError(f"USING NEARDUP takes no {skw} side input")
     if need is not None and skw != need:
@@ -1600,205 +1476,238 @@ def _index_stmt(spark: SparkSession, m: re.Match, tables: dict):
         )
     spec = {
         "kind": kind,
-        "source": src,
-        "source_root": source_root,
-        "index_root": loc,
+        "source": m.group("src"),
         "id_col": cols[0],
         "val_col": cols[1],
     }
-    os.makedirs(loc, exist_ok=True)
     if need is not None:
-        frozen = os.path.join(loc, "_side", need.lower())
-        if kind == "DECONTAM":
-            from cnpj_data_pipeline_spark.plans.decontam import eval_gram_set
-
-            # freeze the GRAMS, not the docs: the spec's side input is
-            # exactly what the transform broadcasts each epoch. EVAL
-            # accepts raw eval docs OR an already-grammed one-column
-            # (gram) frame — the latter is what SHOW CREATE INDEX emits,
-            # so the statement round-trips
-            ev = spark.read.parquet(side)
-            if ev.columns == ["gram"]:
-                ev.write.mode("overwrite").parquet(frozen)
-            else:
-                eval_gram_set(ev, text_col=cols[1]).write.mode(
-                    "overwrite"
-                ).parquet(frozen)
-        else:
-            spark.read.parquet(side).write.mode("overwrite").parquet(frozen)
-        spec["side_frozen"] = frozen
-        spec["side_origin"] = side
-    tmp = spec_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(spec, f, indent=1)
-    os.replace(tmp, spec_path)
-    job = _index_job(spark, spec)
-    job.run_once(spark)
-    tables[name] = loc
-    return LakeTable.load(loc)
+        spec["side_origin"] = m.group("side")
+    return spec
 
 
-def show_create_index(index_root: str, name: str = "i") -> str:
-    """The CREATE INDEX statement, reconstructed from the persisted
-    definition (the side clause points at the FROZEN copy — the original
-    side path may be long gone)."""
-    spec = load_index_spec(index_root)
+def _index_freeze(spark: SparkSession, spec: dict, root: str) -> None:
+    """Copy the side input under ``<root>/_side/`` (the frozen-codebook
+    contract made physical). DECONTAM freezes the GRAMS, not the docs:
+    exactly what the transform broadcasts each epoch. EVAL accepts raw
+    eval docs OR an already-grammed one-column (gram) frame — the latter is
+    what SHOW CREATE INDEX emits, so the statement round-trips."""
+    need = _INDEX_SIDE[spec["kind"]]
+    if need is None:
+        return
+    side = spark.read.parquet(spec["side_origin"])
+    if spec["kind"] == "DECONTAM" and side.columns != ["gram"]:
+        from cnpj_data_pipeline_spark.plans.decontam import eval_gram_set
+
+        side = eval_gram_set(side, text_col=spec["val_col"])
+    frozen = os.path.join(root, "_side", need.lower())
+    side.write.mode("overwrite").parquet(frozen)
+    spec["side_frozen"] = frozen
+
+
+def _index_job(spark: SparkSession, spec: dict, root: str):
+    kind, src = spec["kind"], spec["source_root"]
+    if kind == "NEARDUP":
+        from cnpj_data_pipeline_spark.plans.neardup import NearDupIndexJob
+
+        return NearDupIndexJob(
+            src, root, id_col=spec["id_col"], text_col=spec["val_col"]
+        )
+    if kind == "DECONTAM":
+        from cnpj_data_pipeline_spark.plans.decontam import DecontamIndexJob
+
+        return DecontamIndexJob(
+            src,
+            root,
+            spark.read.parquet(spec["side_frozen"]),
+            id_col=spec["id_col"],
+            text_col=spec["val_col"],
+        )
+    if kind == "IVF":
+        from cnpj_data_pipeline_spark.plans.ivf import IVFIndexJob
+
+        return IVFIndexJob(
+            src,
+            root,
+            spark.read.parquet(spec["side_frozen"]),
+            id_col=spec["id_col"],
+            emb_col=spec["val_col"],
+        )
+    raise ValueError(f"unknown index kind {kind!r}")
+
+
+def _show_index(spec: dict, root: str, name: str) -> str:
+    # the side clause points at the FROZEN copy: the original side path
+    # may be long gone
     side = ""
     if spec.get("side_frozen"):
-        kw = "EVAL" if spec["kind"] == "DECONTAM" else "CENTROIDS"
-        side = f" {kw} '{spec['side_frozen']}'"
+        side = f" {_INDEX_SIDE[spec['kind']]} '{spec['side_frozen']}'"
     return (
         f"CREATE INDEX {name} ON {spec['source']} USING {spec['kind']} "
-        f"({spec['id_col']}, {spec['val_col']}) "
-        f"LOCATION '{index_root}'{side}"
+        f"({spec['id_col']}, {spec['val_col']}) LOCATION '{root}'{side}"
     )
 
 
-def _index_refresh(spark: SparkSession, m: re.Match, tables: dict) -> dict:
-    name = m.group("name")
-    if name not in tables:
-        raise ValueError(
-            f"unknown index {name!r} (registered: {sorted(tables)})"
-        )
-    t = tables[name]
-    root = t.root if isinstance(t, LakeTable) else t
-    return _index_job(spark, load_index_spec(root)).run_once(spark)
-
-
-_HISTORY_SPEC_FILE = "_history.json"
-_HISTORY_HEAD = re.compile(
-    r"^\s*CREATE\s+HISTORY\s+TABLE\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
-    r"(?P<name>[\w.-]+)\s+ON\s+(?P<src>[\w.-]+)\s+LOCATION\s+"
-    r"'(?P<loc>[^']+)'\s*;?\s*$",
-    re.IGNORECASE,
-)
-_HISTORY_REFRESH_HEAD = re.compile(
-    r"^\s*REFRESH\s+HISTORY\s+TABLE\s+(?P<name>[\w.-]+)\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-def _history_stmt(spark: SparkSession, m: re.Match, tables: dict):
-    """CREATE HISTORY TABLE: declare an SCD Type 2 version-history consumer
-    (``plans/scd2.py``) in SQL — the DLT ``APPLY CHANGES ... STORED AS SCD
-    TYPE 2`` declaration for this engine. The definition persists as a
-    sidecar ``_history.json`` under the history root (the mview/index
-    pattern) and the initial sync runs at CREATE; ``REFRESH HISTORY TABLE``
-    catches up one apply-commit window at a time (version granularity is
-    the commit — see the job's module doc), idempotent under the history
-    table's own epoch ledger. The created table registers under its SQL
-    name, so DESCRIBE / SELECT / point-in-time filters work on it like any
-    other table."""
-    import os
-
-    name, loc, ine = m.group("name"), m.group("loc"), m.group("ine")
-    src = m.group("src")
-    spec_path = os.path.join(loc, _HISTORY_SPEC_FILE)
-    if os.path.exists(spec_path):
-        if not ine:
-            raise ValueError(
-                f"history table already exists at {loc!r} "
-                "(use CREATE HISTORY TABLE IF NOT EXISTS to re-register)"
-            )
-        with open(spec_path, encoding="utf-8") as f:
-            spec = json.load(f)
-        # re-registering must not silently bind ON <src> to another source:
-        # a registered source must be the recorded root, an unregistered
-        # one the recorded name
-        t = tables.get(src)
-        src_root = t.root if isinstance(t, LakeTable) else t
-        if (
-            os.path.abspath(src_root) != os.path.abspath(spec["source_root"])
-            if src_root is not None
-            else src != spec["source"]
-        ):
-            raise ValueError(
-                f"history table at {loc!r} records source "
-                f"{spec['source']!r} at {spec['source_root']!r}; the "
-                f"statement names {src!r}"
-                + (f" at {src_root!r}" if src_root is not None else "")
-            )
-        tables[name] = loc
-        return LakeTable.load(loc)
-    if src not in tables:
-        raise ValueError(
-            f"unknown source table {src!r} (registered: {sorted(tables)})"
-        )
-    t = tables[src]
-    source_root = t.root if isinstance(t, LakeTable) else t
-    spec = {
-        "kind": "SCD2",
-        "source": src,
-        "source_root": source_root,
-        "index_root": loc,  # consumer-listing key (SHOW CONSUMERS)
-    }
+def _history_job(spark: SparkSession, spec: dict, root: str):
     from cnpj_data_pipeline_spark.plans.scd2 import SCD2SyncJob
 
-    # sync BEFORE the sidecar lands: a failing sync (a keyless source, say)
-    # leaves no spec behind to make a retried CREATE say "already exists";
-    # a sync that fails midway resumes under the history table's own ledger
-    SCD2SyncJob(source_root, loc).run_once(spark)
-    tmp = spec_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(spec, f, indent=1)
-    os.replace(tmp, spec_path)
+    return SCD2SyncJob(spec["source_root"], root)
+
+
+_MVIEW = _ConsumerKind(
+    sql="MATERIALIZED VIEW",
+    label="materialized view",
+    head=re.compile(
+        r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+"
+        r"(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
+        r"(?P<name>[\w.-]+)\s+LOCATION\s+'(?P<loc>[^']+)'\s+AS\s+"
+        r"(?P<query>SELECT\s.+?)\s*;?\s*$",
+        re.IGNORECASE | re.DOTALL,
+    ),
+    spec_file="_mview.json",
+    root_key="view_root",
+    spec=_mview_spec,
+    job=_mview_job,
+    show=lambda spec, root, name: (
+        f"CREATE MATERIALIZED VIEW {name} LOCATION '{root}' AS "
+        f"{spec['query']}"
+    ),
+    listed="MVIEW",
+)
+_INDEX = _ConsumerKind(
+    sql="INDEX",
+    label="index",
+    head=re.compile(
+        r"^\s*CREATE\s+INDEX\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
+        r"(?P<name>[\w.-]+)\s+ON\s+(?P<src>[\w.-]+)\s+USING\s+"
+        r"(?P<kind>\w+)\s*\((?P<cols>[^)]+)\)\s+LOCATION\s+'(?P<loc>[^']+)'"
+        r"(?:\s+(?P<skw>EVAL|CENTROIDS)\s+'(?P<side>[^']+)')?\s*;?\s*$",
+        re.IGNORECASE,
+    ),
+    spec_file="_index.json",
+    root_key="index_root",
+    spec=_index_spec,
+    job=_index_job,
+    show=_show_index,
+    freeze=_index_freeze,
+    by_name=False,
+)
+_HISTORY = _ConsumerKind(
+    sql="HISTORY TABLE",
+    label="history table",
+    head=re.compile(
+        r"^\s*CREATE\s+HISTORY\s+TABLE\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
+        r"(?P<name>[\w.-]+)\s+ON\s+(?P<src>[\w.-]+)\s+LOCATION\s+"
+        r"'(?P<loc>[^']+)'\s*;?\s*$",
+        re.IGNORECASE,
+    ),
+    spec_file="_history.json",
+    root_key="index_root",  # the field name history sidecars always had
+    spec=lambda m: {"kind": "SCD2", "source": m.group("src")},
+    job=_history_job,
+    show=lambda spec, root, name: (
+        f"CREATE HISTORY TABLE {name} ON {spec['source']} LOCATION '{root}'"
+    ),
+)
+_KINDS = {k.sql: k for k in (_MVIEW, _INDEX, _HISTORY)}
+_CONSUMER_STMT = re.compile(
+    r"^\s*(?P<op>REFRESH|SHOW\s+CREATE)\s+"
+    r"(?P<kind>MATERIALIZED\s+VIEW|INDEX|HISTORY\s+TABLE)\s+"
+    r"(?P<name>[\w.-]+)\s*;?\s*$",
+    re.IGNORECASE,
+)
+
+
+def _load_spec(kind: _ConsumerKind, root: str) -> dict:
+    path = os.path.join(root, kind.spec_file)
+    if not os.path.exists(path):
+        raise ValueError(
+            f"no {kind.label} at {root!r} (no {kind.spec_file} sidecar)"
+        )
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def load_index_spec(index_root: str) -> dict:
+    return _load_spec(_INDEX, index_root)
+
+
+def _create_consumer(
+    spark: SparkSession, kind: _ConsumerKind, m: re.Match, tables: dict
+) -> LakeTable:
+    """CREATE of any declared consumer kind, in the order and under the
+    re-register rule the module doc's DECLARED CONSUMERS paragraph
+    states."""
+    name, loc = m.group("name"), m.group("loc")
+    spec = kind.spec(m)
+    src = spec["source"]
+    spec_path = os.path.join(loc, kind.spec_file)
+    if os.path.exists(spec_path):
+        if not m.group("ine"):
+            raise ValueError(
+                f"{kind.label} already exists at {loc!r} (use CREATE "
+                f"{kind.sql} IF NOT EXISTS to re-register)"
+            )
+        rec = _load_spec(kind, loc)
+        recorded = rec.get("source")  # absent from older view sidecars
+        src_root = None
+        if src in tables:
+            src_root = resolve_name(tables, src, root=True)
+        if (
+            os.path.abspath(src_root) != os.path.abspath(rec["source_root"])
+            if src_root is not None
+            else kind.by_name and recorded not in (None, src)
+        ):
+            raise ValueError(
+                f"{kind.label} at {loc!r} records source "
+                + (f"{recorded!r} at " if recorded else "")
+                + f"{rec['source_root']!r}; the statement names {src!r}"
+                + (f" at {src_root!r}" if src_root is not None else "")
+            )
+    else:
+        spec["source_root"] = resolve_name(
+            tables, src, "source table", root=True
+        )
+        spec[kind.root_key] = loc
+        made = not os.path.exists(loc)
+        try:
+            if kind.freeze is not None:
+                kind.freeze(spark, spec, loc)
+            kind.job(spark, spec, loc).run_once(spark)  # creates the table
+        except BaseException:
+            if made:  # leave nothing at a location this CREATE made
+                shutil.rmtree(loc, ignore_errors=True)
+            raise
+        tmp = spec_path + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(spec, f, indent=1)
+        os.replace(tmp, spec_path)
     tables[name] = loc
     return LakeTable.load(loc)
 
 
-def show_create_history(hist_root: str, name: str = "h") -> str:
-    import os
-
-    with open(
-        os.path.join(hist_root, _HISTORY_SPEC_FILE), encoding="utf-8"
-    ) as f:
-        spec = json.load(f)
-    return (
-        f"CREATE HISTORY TABLE {name} ON {spec['source']} "
-        f"LOCATION '{hist_root}'"
-    )
+def show_create_mview(view_root: str, name: str = "v") -> str:
+    """The CREATE MATERIALIZED VIEW statement, reconstructed from the
+    persisted definition — round-trips through :func:`execute_ddl` (fill a
+    new LOCATION to re-point it)."""
+    return _show_create(_MVIEW, view_root, name)
 
 
-def _history_refresh(spark: SparkSession, m: re.Match, tables: dict) -> dict:
-    import os
-
-    name = m.group("name")
-    if name not in tables:
-        raise ValueError(
-            f"unknown history table {name!r} (registered: {sorted(tables)})"
-        )
-    t = tables[name]
-    root = t.root if isinstance(t, LakeTable) else t
-    with open(
-        os.path.join(root, _HISTORY_SPEC_FILE), encoding="utf-8"
-    ) as f:
-        spec = json.load(f)
-    from cnpj_data_pipeline_spark.plans.scd2 import SCD2SyncJob
-
-    return SCD2SyncJob(spec["source_root"], root).run_once(spark)
+def _show_create(kind: _ConsumerKind, root: str, name: str) -> str:
+    return kind.show(_load_spec(kind, root), root, name)
 
 
 def _show_consumers(spark: SparkSession, tables: dict):
-    """SHOW CONSUMERS: one row per registered DECLARED consumer (index or
-    materialized view) with its lag — ``epochs_behind`` is
-    ``LakeTable.epochs_behind``, the same figure every consumer's
-    ``run_once`` reports. Metadata-only: snapshot reads, no Spark job over
-    data."""
-    import os
-
+    """SHOW CONSUMERS: one row per registered declared consumer with its
+    lag — ``epochs_behind`` is ``LakeTable.epochs_behind``, the same figure
+    every consumer's ``run_once`` reports. Metadata-only: snapshot reads,
+    no Spark job over data."""
     rows = []
-    for name, t in sorted(tables.items()):
-        root = t.root if isinstance(t, LakeTable) else t
-        for spec_file, default_kind in (
-            (_INDEX_SPEC_FILE, None),
-            (_MVIEW_SPEC_FILE, "MVIEW"),
-            (_HISTORY_SPEC_FILE, "SCD2"),
-        ):
-            p = os.path.join(root, spec_file)
-            if not os.path.exists(p):
+    for name in sorted(tables):
+        root = resolve_name(tables, name, root=True)
+        for kind in _KINDS.values():
+            if not os.path.exists(os.path.join(root, kind.spec_file)):
                 continue
-            with open(p, encoding="utf-8") as f:
-                spec = json.load(f)
+            spec = _load_spec(kind, root)
             src_root = spec["source_root"]
             behind = None
             if LakeTable.exists(src_root) and LakeTable.exists(root):
@@ -1808,7 +1717,7 @@ def _show_consumers(spark: SparkSession, tables: dict):
             rows.append(
                 (
                     name,
-                    spec.get("kind") or default_kind,
+                    kind.listed or spec["kind"],
                     spec.get("source") or src_root,
                     root,
                     behind,
@@ -1833,70 +1742,22 @@ def execute_ddl(
     Python API issues; ``SHOW CREATE TABLE`` returns the statement text;
     ``DESCRIBE`` returns a DataFrame."""
     stmt = statement.strip()
-    mm = _MVIEW_HEAD.match(stmt)
-    if mm:
-        return _mview_stmt(spark, mm, tables)
-    rfm = _REFRESH_HEAD.match(stmt)
-    if rfm:
-        return _mview_refresh(spark, rfm, tables)
-    scm = re.match(
-        r"^SHOW\s+CREATE\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.-]+)\s*;?\s*$",
-        stmt,
-        re.IGNORECASE,
-    )
-    if scm:
-        n = scm.group("name")
-        if n not in tables:
-            raise ValueError(
-                f"unknown materialized view {n!r} (registered: "
-                f"{sorted(tables)})"
+    for kind in _KINDS.values():
+        km = kind.head.match(stmt)
+        if km:
+            return _create_consumer(spark, kind, km, tables)
+    km = _CONSUMER_STMT.match(stmt)
+    if km:
+        kind = _KINDS[" ".join(km.group("kind").upper().split())]
+        name = km.group("name")
+        root = resolve_name(tables, name, kind.label, root=True)
+        if km.group("op").upper() == "REFRESH":
+            # rebuild the job from the sidecar; catch up every pending
+            # source epoch, idempotent under the consumer's own ledger
+            return kind.job(spark, _load_spec(kind, root), root).run_once(
+                spark
             )
-        t = tables[n]
-        return show_create_mview(
-            t.root if isinstance(t, LakeTable) else t, n
-        )
-    im = _INDEX_HEAD.match(stmt)
-    if im:
-        return _index_stmt(spark, im, tables)
-    irm = _INDEX_REFRESH_HEAD.match(stmt)
-    if irm:
-        return _index_refresh(spark, irm, tables)
-    hm = _HISTORY_HEAD.match(stmt)
-    if hm:
-        return _history_stmt(spark, hm, tables)
-    hrm = _HISTORY_REFRESH_HEAD.match(stmt)
-    if hrm:
-        return _history_refresh(spark, hrm, tables)
-    shm = re.match(
-        r"^SHOW\s+CREATE\s+HISTORY\s+TABLE\s+(?P<name>[\w.-]+)\s*;?\s*$",
-        stmt,
-        re.IGNORECASE,
-    )
-    if shm:
-        n = shm.group("name")
-        if n not in tables:
-            raise ValueError(
-                f"unknown history table {n!r} (registered: {sorted(tables)})"
-            )
-        t = tables[n]
-        return show_create_history(
-            t.root if isinstance(t, LakeTable) else t, n
-        )
-    sim = re.match(
-        r"^SHOW\s+CREATE\s+INDEX\s+(?P<name>[\w.-]+)\s*;?\s*$",
-        stmt,
-        re.IGNORECASE,
-    )
-    if sim:
-        n = sim.group("name")
-        if n not in tables:
-            raise ValueError(
-                f"unknown index {n!r} (registered: {sorted(tables)})"
-            )
-        t = tables[n]
-        return show_create_index(
-            t.root if isinstance(t, LakeTable) else t, n
-        )
+        return _show_create(kind, root, name)
     if re.match(r"^SHOW\s+CONSUMERS\s*;?\s*$", stmt, re.IGNORECASE):
         return _show_consumers(spark, tables)
     cm = _CLONE_HEAD.match(stmt)
@@ -1908,21 +1769,14 @@ def execute_ddl(
     if am:
         return _alter_stmt(spark, am, tables)
 
-    def _lookup(name: str) -> LakeTable:
-        if name not in tables:
-            raise ValueError(
-                f"unknown DDL target {name!r} (registered: {sorted(tables)})"
-            )
-        t = tables[name]
-        return t if isinstance(t, LakeTable) else LakeTable.load(t)
-
     sm = re.match(
         r"^SHOW\s+CREATE\s+TABLE\s+(?P<name>[\w.-]+)\s*;?\s*$",
         stmt,
         re.IGNORECASE,
     )
     if sm:
-        return show_create_table(_lookup(sm.group("name")), sm.group("name"))
+        name = sm.group("name")
+        return show_create_table(resolve_name(tables, name), name)
     dm = re.match(
         r"^DESCRIBE\s+(?:(?P<ext>EXTENDED)\s+)?(?:TABLE\s+)?"
         r"(?P<name>[\w.-]+)\s*;?\s*$",
@@ -1931,13 +1785,15 @@ def execute_ddl(
     )
     if dm:
         return _describe(
-            spark, _lookup(dm.group("name")), dm.group("ext") is not None
+            spark,
+            resolve_name(tables, dm.group("name")),
+            dm.group("ext") is not None,
         )
     om = re.match(
         r"^OPTIMIZE\s+(?P<name>[\w.-]+)\s*;?\s*$", stmt, re.IGNORECASE
     )
     if om:
-        return _lookup(om.group("name")).compact(spark)
+        return resolve_name(tables, om.group("name")).compact(spark)
     vtm = re.match(
         r"^VACUUM\s+(?P<name>[\w.-]+)\s+TOMBSTONES\s+BELOW\s+LSN\s+"
         r"(?P<lsn>\d+)\s*;?\s*$",
@@ -1945,7 +1801,7 @@ def execute_ddl(
         re.IGNORECASE,
     )
     if vtm:
-        return _lookup(vtm.group("name")).vacuum_tombstones(
+        return resolve_name(tables, vtm.group("name")).vacuum_tombstones(
             spark, lsn_horizon=int(vtm.group("lsn"))
         )
     vm = re.match(
@@ -1957,7 +1813,7 @@ def execute_ddl(
     )
     if vm:
         keep = vm.group("keep")
-        return _lookup(vm.group("name")).expire_snapshots(
+        return resolve_name(tables, vm.group("name")).expire_snapshots(
             keep_last=10 if keep is None else int(keep),
             older_than=vm.group("ts"),
             sweep_orphans=True,
@@ -1971,7 +1827,7 @@ def execute_ddl(
         re.IGNORECASE,
     )
     if rm:
-        table = _lookup(rm.group("name"))
+        table = resolve_name(tables, rm.group("name"))
         if rm.group("ver") is not None:
             sid = int(rm.group("ver"))
         elif rm.group("ts") is not None:
@@ -1992,7 +1848,7 @@ def execute_ddl(
             refresh_stats,
         )
 
-        table = _lookup(am.group("name"))
+        table = resolve_name(tables, am.group("name"))
         if am.group("inc"):
             if am.group("cols"):
                 raise ValueError(
@@ -2028,12 +1884,12 @@ def execute_ddl(
         re.IGNORECASE,
     )
     if ssm:
-        return _lookup(ssm.group("name")).snapshots_df(spark)
+        return resolve_name(tables, ssm.group("name")).snapshots_df(spark)
     stm = re.match(
         r"^SHOW\s+TAGS\s+(?P<name>[\w.-]+)\s*;?\s*$", stmt, re.IGNORECASE
     )
     if stm:
-        tags = _lookup(stm.group("name")).tags()
+        tags = resolve_name(tables, stm.group("name")).tags()
         return spark.createDataFrame(
             sorted(tags.items()), "tag string, snapshot_id int"
         )

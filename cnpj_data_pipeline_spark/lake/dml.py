@@ -82,6 +82,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnpj_data_pipeline_spark.config import EngineConfig
+from cnpj_data_pipeline_spark.lake.ddl import resolve_name
 from cnpj_data_pipeline_spark.lake.format import LakeTable
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
 
@@ -301,7 +302,7 @@ def _delete_stmt(
     statement is read-committed: it tombstones the keys matched at its read
     snapshot (serialize against concurrent writers with the epoch ledger /
     ``expected_props``, as on every other write path)."""
-    target = _resolve(m.group("target"), tables)
+    target = resolve_name(tables, m.group("target"), "DML target")
     key_cols = target.key_cols()
     if key_cols is None:
         raise ValueError(
@@ -342,7 +343,7 @@ def _update_stmt(
     the batch is a column PATCH (keys + assigned columns), which the
     partial engine folds per-column. Same read-committed caveat as
     DELETE."""
-    target = _resolve(m.group("target"), tables)
+    target = resolve_name(tables, m.group("target"), "DML target")
     key_cols = target.key_cols()
     if key_cols is None:
         raise ValueError(
@@ -443,7 +444,7 @@ def merge_into(
         )
     mi = _INSERT_HEAD.match(stmt)
     if mi:
-        target = _resolve(mi.group("target"), tables)
+        target = resolve_name(tables, mi.group("target"), "DML target")
         src = spark.sql(mi.group("select"))
         batch = src.withColumn("op", F.lit("I"))
         return apply_changes(
@@ -459,7 +460,7 @@ def merge_into(
             "<select>', 'DELETE FROM <t> WHERE ...' or 'UPDATE <t> SET ... "
             f"WHERE ...', got: {stmt[:80]!r}"
         )
-    target = _resolve(mh.group("target"), tables)
+    target = resolve_name(tables, mh.group("target"), "DML target")
     talias = mh.group("talias")
     source_txt, is_subquery, rest = _scan_source(stmt[mh.end():])
     am = re.match(r"\s*(?:AS\s+)?(\w+)\s+(?=ON\b)", rest, re.IGNORECASE)
@@ -624,12 +625,3 @@ def merge_into(
         spark, target, batch, epoch=epoch, cfg=cfg,
         props=props, expected_props=expected_props, stage_only=stage_only,
     )
-
-
-def _resolve(name: str, tables: dict[str, LakeTable | str]) -> LakeTable:
-    if name not in tables:
-        raise ValueError(
-            f"unknown DML target {name!r} (registered: {sorted(tables)})"
-        )
-    t = tables[name]
-    return t if isinstance(t, LakeTable) else LakeTable.load(t)
