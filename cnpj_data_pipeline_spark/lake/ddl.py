@@ -220,7 +220,7 @@ from typing import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from cnpj_data_pipeline_spark.lake.format import LakeTable
+from cnpj_data_pipeline_spark.lake.format import LakeTable, _write_json, as_table
 
 _CREATE_HEAD = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
@@ -260,7 +260,7 @@ def resolve_name(
     t = tables[name]
     if root:
         return t.root if isinstance(t, LakeTable) else t
-    return t if isinstance(t, LakeTable) else LakeTable.load(t)
+    return as_table(t)
 
 
 def _split_top_level(s: str, sep: str = ",") -> list[str]:
@@ -1677,10 +1677,7 @@ def _create_consumer(
             if made:  # leave nothing at a location this CREATE made
                 shutil.rmtree(loc, ignore_errors=True)
             raise
-        tmp = spec_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(spec, f, indent=1)
-        os.replace(tmp, spec_path)
+        _write_json(spec_path, spec)
     tables[name] = loc
     return LakeTable.load(loc)
 

@@ -69,6 +69,14 @@ staged under a per-attempt unique ``data/stage-*`` directory that no reader
 can discover, so concurrent writers never collide on staging paths; a crash
 at any point before the manifest link leaves the table unchanged (orphan
 files are GC-able). Readers never lock.
+
+One builder, one log: :func:`_next_snapshot` is the only code that builds a
+snapshot manifest — create, every commit attempt, rollback, clone, and the
+write-audit preview (so the preview IS what the publish commits). The log
+primitives — :func:`_write_json` (fsync'd temp file, then ``os.link``
+exclusive create or ``os.replace``), :func:`_advance_hint` (forward-only
+pointer) and :func:`_log_head` (probe forward) — serve table manifests,
+snapshot tags and the multi-table catalog (``lake/txn_catalog.py``) alike.
 """
 
 from __future__ import annotations
@@ -404,6 +412,76 @@ def _retry_io(fn: Callable, *args, **kwargs):
     raise last
 
 
+# ---------------- the version log: one CAS log for tables and catalogs ----
+#
+# A table's snapshot manifests and a multi-table catalog's versions (and a
+# snapshot tag) are the same structure: immutable numbered JSON entries
+# whose EXCLUSIVE creation is the commit point, plus a ``_current`` pointer
+# HINT that readers probe forward from. These functions are that log; the
+# owners only bind its paths.
+
+
+def _read_json(path: str):
+    def _read():
+        with open(path) as f:
+            return json.load(f)
+
+    return _retry_io(_read)
+
+
+def _write_json(path: str, obj, exclusive: bool = False) -> None:
+    """The one durable JSON write of the metadata layer: dump + fsync a
+    writer-unique temp file, then publish it under ``path`` in one atomic
+    step. ``exclusive=True`` publishes with ``os.link`` — create-if-absent,
+    the CAS that arbitrates writers racing for one name (``FileExistsError``
+    when another writer holds it); otherwise ``os.replace`` overwrites. A
+    crash before the publish leaves only an invisible temp file."""
+    tmp = f"{path}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
+
+    def _write() -> None:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        if exclusive:
+            os.link(tmp, path)
+        else:
+            os.replace(tmp, path)
+
+    try:
+        _retry_io(_write)
+    finally:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
+
+
+def _log_head(hint_path: str, entry_path: Callable[[int], str]) -> int:
+    """True head of a version log: probe forward from the pointer hint for
+    the next committed entry (the entry's exclusive creation is the commit
+    point; the hint may lag a crashed or racing writer by a step). O(lag)
+    existence probes — normally zero."""
+    n = int(_read_json(hint_path))
+    while os.path.exists(entry_path(n + 1)):
+        n += 1
+    return n
+
+
+def _advance_hint(hint_path: str, n: int) -> None:
+    """Advance a version log's pointer HINT (never the commit itself).
+    Forward-only: a slower writer finishing an older entry must not move the
+    hint backwards. The read-check/replace is not atomic, but a lost or
+    stale hint only costs readers extra forward probes — it can never hide
+    a committed entry."""
+    try:
+        if int(_read_json(hint_path)) >= n:
+            return
+    except (FileNotFoundError, ValueError):
+        pass
+    _write_json(hint_path, n)
+
+
 def _json_stat(v):
     """Parquet footer stat value → JSON-storable (bytes → utf-8 str)."""
     if isinstance(v, bytes):
@@ -543,6 +621,257 @@ def _file_stats(
     return out
 
 
+def _pad_fstats(fs, n: int) -> list:
+    fs = list(fs) if fs else []
+    return fs + [None] * (n - len(fs))
+
+
+def _next_snapshot(
+    parent: dict | None,
+    *,
+    op: str,
+    epochs: Sequence[int] = (),
+    bucket_updates: dict | None = None,
+    mode: str = "replace",
+    merged: bool = True,
+    new_schema: T.StructType | None = None,
+    props: dict | None = None,
+    drop_column: str | None = None,
+    rename: tuple[str, str] | None = None,
+    new_n_buckets: int | None = None,
+    state: dict | None = None,
+    origin: dict | None = None,
+) -> dict:
+    """The one builder of a snapshot manifest: the complete snapshot that
+    follows ``parent`` (None: a table's first snapshot, id 0) after one
+    commit's changes. Pure — no IO and no validation; callers check what
+    must hold at the head (:meth:`LakeTable._build_and_cas`) first.
+
+    Table state (schema, layout, engine, name maps, props, buckets,
+    applied-epoch ledger) carries over from ``state`` when given — create's
+    declaration, rollback's target snapshot, clone's source snapshot — else
+    from ``parent``. ``origin`` replaces the per-bucket lineage with one
+    marker row saying where that state came from.
+
+    ``bucket_updates`` (keys: bucket ids, int or str) append to the carried
+    buckets (``mode="append"``) or replace them; see :meth:`LakeTable.commit`
+    for ``merged``, ``props``, ``drop_column``, ``rename``, ``new_schema``."""
+    base = parent if state is None else state
+    keyless = base["key_cols"] is None
+    # scalar label for lineage/back-compat readers; the full window set
+    # rides in "epochs" and the cumulative ledger in "applied_epochs"
+    epoch = max(epochs) if epochs else None
+    # a bucket-count change invalidates every old bucket assignment, so
+    # the update set must be the COMPLETE new layout (rebucket rewrite)
+    buckets = {} if new_n_buckets is not None else dict(base.get("buckets") or {})
+    lineage = []
+    for b, info in sorted(
+        (bucket_updates or {}).items(), key=lambda kv: int(kv[0])
+    ):
+        prev = buckets.get(
+            str(b), {"max_lsn": None, "files": [], "rows": 0, "merged": True}
+        )
+        max_lsn = info.get("max_lsn")
+        if mode == "append":
+            files = list(prev.get("files", [])) + list(info["files"])
+            rows = prev.get("rows", 0) + info["rows"]
+            fstats = _pad_fstats(
+                prev.get("fstats"), len(prev.get("files", []))
+            ) + _pad_fstats(info.get("fstats"), len(info["files"]))
+            pmax = prev.get("max_lsn")
+            if max_lsn is None or (pmax is not None and pmax > max_lsn):
+                max_lsn = pmax
+            gens = prev.get("gens", 1 if prev.get("files") else 0) + (
+                1 if info["files"] else 0
+            )
+            # keyless tables have no per-key versions to resolve: every
+            # generation is final state, so the bucket is always "merged".
+            # For keyed tables a first generation is merged only if the
+            # WRITER vouches it folded the batch (``merged``): a raw
+            # (unfolded) generation — the partial engine's copart append,
+            # or a chunk-split hot bucket — can hold several versions of
+            # one key, and the fold-free merged fast path would surface
+            # them all.
+            is_merged = True if keyless else (gens <= 1 and merged)
+        else:
+            files = info["files"]
+            rows = info["rows"]
+            fstats = _pad_fstats(info.get("fstats"), len(files))
+            if max_lsn is None:
+                max_lsn = prev.get("max_lsn")
+            # a path-only rewrite (localize: same bytes, new location)
+            # carries the bucket's flags through verbatim; data rewrites
+            # (compact/vacuum/CoW) omit them and take the defaults
+            gens = info.get("gens", 1 if files else 0)
+            is_merged = info.get("merged", merged)
+        buckets[str(b)] = {
+            "files": files,
+            "rows": rows,
+            "max_lsn": max_lsn,
+            "merged": bool(is_merged),
+            "gens": gens,
+            "fstats": fstats,
+        }
+        lineage.append(
+            {
+                "partition_id": int(b),
+                "epoch": epoch,
+                "max_lsn": max_lsn,
+                "rows_applied": info["rows"],
+            }
+        )
+    if origin is not None:
+        lineage = [
+            {"partition_id": -1, "epoch": None, "max_lsn": None,
+             "rows_applied": 0, **origin}
+        ]
+    applied = list(base.get("applied_epochs") or [])
+    applied.extend(e for e in epochs if e not in applied)
+    dropped_cols = list(base.get("dropped_cols") or [])
+    renames = dict(base.get("renames") or {})
+    retired = dict(base.get("retired_names") or {})
+    schema_json = base["schema"]
+    if rename is not None:
+        phys, new_logical = rename
+        # the name being renamed AWAY stays resolvable: record it in the
+        # retired map (name -> physical) so a stale producer still sending
+        # an INTERMEDIATE logical name (tool -> tool_name -> tool_label;
+        # producer still says tool_name) maps into the right physical
+        # column instead of silently evolving a brand new one. The
+        # physical name itself needs no entry (it always maps), and the
+        # new current name leaves the retired set.
+        prev_logical = renames.get(phys, phys)
+        if prev_logical not in (phys, new_logical):
+            retired[prev_logical] = phys
+        retired.pop(new_logical, None)
+        if new_logical == phys:
+            renames.pop(phys, None)
+        else:
+            renames[phys] = new_logical
+    if drop_column is not None:
+        # schema REPLACEMENT, not union (a union would keep the column);
+        # recomputed from the parent so a concurrent evolve's new columns
+        # survive and a concurrent identical drop is a no-op
+        schema_json = T.StructType(
+            [
+                f for f in schema_from_json(schema_json).fields
+                if f.name != drop_column
+            ]
+        ).json()
+        if drop_column not in dropped_cols:
+            dropped_cols.append(drop_column)
+        # a dropped RENAMED column's logical name joins the retired map: a
+        # stale producer still sending it must map to the tombstoned
+        # physical name (and be ignored like any stale physical-name
+        # producer), not evolve a brand-new column
+        prev_logical = renames.pop(drop_column, None)
+        if prev_logical:
+            retired[prev_logical] = drop_column
+    elif new_schema is not None:
+        # union with the PARENT's schema (not the writer's baseline): a
+        # concurrent evolve commit that won the race keeps its columns;
+        # tombstoned names stay out
+        schema_json = union_schema(
+            schema_from_json(schema_json), new_schema, dropped=dropped_cols
+        ).json()
+    return {
+        "snapshot_id": 0 if parent is None else parent["snapshot_id"] + 1,
+        "parent_id": None if parent is None else parent["snapshot_id"],
+        "epoch": epoch,
+        "epochs": list(epochs),
+        "op": op,
+        "schema": schema_json,
+        "key_cols": base["key_cols"],
+        "bucket_cols": base.get("bucket_cols"),
+        "merge_engine": base.get("merge_engine", "lww"),
+        "agg_spec": base.get("agg_spec"),
+        "dropped_cols": dropped_cols,
+        "renames": renames,
+        "retired_names": retired,
+        "props": {**(base.get("props") or {}), **(props or {})},
+        "n_buckets": (
+            int(new_n_buckets) if new_n_buckets is not None else base["n_buckets"]
+        ),
+        "buckets": buckets,
+        "applied_epochs": applied,
+        "lineage": lineage,
+        "rows_total": sum(i["rows"] for i in buckets.values()),
+        "committed_at": _utcnow_iso(),
+    }
+
+
+def _check_at_head(
+    cur: dict,
+    new_schema: T.StructType | None = None,
+    props: dict | None = None,
+    drop_column: str | None = None,
+    rename: tuple[str, str] | None = None,
+) -> None:
+    """Validate a commit's schema-changing arguments AT THE HEAD it is about
+    to build on, not just at the snapshot its caller read: a concurrent
+    drop/evolve/sort-order commit may have landed in between. Raises
+    :class:`CommitConflictError`."""
+    head_fields = {f.name for f in schema_from_json(cur["schema"]).fields}
+    dropped = set(cur.get("dropped_cols") or ())
+    renames = cur.get("renames") or {}
+    retired = cur.get("retired_names") or {}
+    if rename is not None:
+        phys, new_logical = rename
+        if phys not in head_fields:
+            raise CommitConflictError(
+                f"cannot rename {phys!r}: dropped by a concurrent commit"
+            )
+        logical_others = {
+            renames.get(n, n) for n in head_fields if n != phys
+        }
+        if (
+            new_logical in logical_others
+            or (new_logical in head_fields and new_logical != phys)
+            or new_logical in dropped
+            or retired.get(new_logical, phys) != phys
+        ):
+            raise CommitConflictError(
+                f"rename target {new_logical!r} collides with a "
+                "column, tombstone or retired name at the commit head "
+                "(concurrent evolve/drop); re-plan against fresh state"
+            )
+    # a drop racing a set_sort_order (either order) could otherwise leave
+    # the head's sort_order naming a column the schema no longer has —
+    # breaking every later compaction
+    if drop_column is not None:
+        head_so = (cur.get("props") or {}).get("sort_order") or ()
+        if drop_column in head_so:
+            raise CommitConflictError(
+                f"cannot drop column {drop_column!r}: a concurrent "
+                f"commit declared sort_order {list(head_so)} naming it; "
+                "reset the sort order and retry"
+            )
+    if props and props.get("sort_order"):
+        missing = [c for c in props["sort_order"] if c not in head_fields]
+        if missing:
+            raise CommitConflictError(
+                f"sort_order names column(s) {missing} that no longer "
+                "exist at the commit head (concurrent drop/evolve); "
+                "re-declare against fresh state"
+            )
+    if drop_column is None and new_schema is not None:
+        # a NEW physical column must not shadow a live logical name — two
+        # user-visible columns would share one name (the racing twin of
+        # rename_column's own collision check)
+        added = {
+            f.name for f in new_schema.fields
+            if not isinstance(f.dataType, T.NullType)  # not added yet
+        } - head_fields - dropped
+        shadow = added & (set(renames.values()) | set(retired))
+        if shadow:
+            raise CommitConflictError(
+                f"schema evolution adds column(s) {sorted(shadow)} "
+                "that collide with a renamed column's current or "
+                "retired logical name at the commit head; rename the "
+                "incoming column upstream"
+            )
+
+
 class LakeTable:
     def __init__(self, root: str):
         self.root = os.path.abspath(root)
@@ -653,26 +982,22 @@ class LakeTable:
             raise FileExistsError(f"table already exists at {root}")
         os.makedirs(t.meta_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
-        snap = {
-            "snapshot_id": 0,
-            "parent_id": None,
-            "epoch": None,
-            "op": "create",
-            "schema": schema.json(),
-            "key_cols": list(key_cols) if key_cols is not None else None,
-            "bucket_cols": list(bucket_cols) if bucket_cols is not None else None,
-            "merge_engine": merge_engine,
-            "agg_spec": agg_spec if merge_engine == "aggregate" else None,
-            "n_buckets": int(n_buckets),
-            "buckets": {},
-            "applied_epochs": [],
-            "lineage": [],
-            "rows_total": 0,
-            "props": {},
-            "committed_at": _utcnow_iso(),
-        }
-        t._write_snapshot(snap)
-        t._swap_pointer(0)
+        t._publish(
+            _next_snapshot(
+                None,
+                op="create",
+                state={
+                    "schema": schema.json(),
+                    "key_cols": list(key_cols) if key_cols is not None else None,
+                    "bucket_cols": (
+                        list(bucket_cols) if bucket_cols is not None else None
+                    ),
+                    "merge_engine": merge_engine,
+                    "agg_spec": agg_spec if merge_engine == "aggregate" else None,
+                    "n_buckets": int(n_buckets),
+                },
+            )
+        )
         return t
 
     @classmethod
@@ -695,30 +1020,15 @@ class LakeTable:
         return os.path.join(self.meta_dir, f"snapshot-{sid}.json")
 
     def current_snapshot_id(self) -> int:
-        """True head = probe forward from the pointer hint for the next
-        committed manifest (the manifest's exclusive creation is the commit
-        point; the pointer may lag a crashed or racing writer by a step).
-        O(lag) existence probes — normally zero."""
-        def _read() -> int:
-            with open(self._pointer_path()) as f:
-                return int(f.read().strip())
-
-        sid = _retry_io(_read)
-        while os.path.exists(self._snapshot_path(sid + 1)):
-            sid += 1
-        return sid
+        """True head: the pointer hint probed forward (:func:`_log_head`)."""
+        return _log_head(self._pointer_path(), self._snapshot_path)
 
     def snapshot(self, sid: int | str | None = None) -> dict:
         if sid is None:
             sid = self.current_snapshot_id()
         elif isinstance(sid, str):
             sid = self.resolve_tag(sid)
-
-        def _read() -> dict:
-            with open(self._snapshot_path(sid)) as f:
-                return json.load(f)
-
-        return _retry_io(_read)
+        return _read_json(self._snapshot_path(sid))
 
     def snapshot_as_of(self, ts: "_dt.datetime | str") -> int:
         """TIMESTAMP AS OF time travel (Iceberg's ``snapshot_at``): the id of
@@ -933,31 +1243,19 @@ class LakeTable:
             raise FileNotFoundError(f"no snapshot {sid} to tag")
         path = self._tag_path(name)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
-
-        def _write() -> None:
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"snapshot_id": sid, "created_at": _utcnow_iso()}, f
-                )
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, path)  # exclusive create — the tag CAS
-            except FileExistsError:
-                existing = self.resolve_tag(name)
-                if existing != sid:
-                    raise FileExistsError(
-                        f"tag {name!r} already pins snapshot {existing} "
-                        f"(wanted {sid}); tags are immutable — drop first"
-                    ) from None
-            finally:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-
-        _retry_io(_write)
+        try:
+            _write_json(  # exclusive create — the tag CAS
+                path,
+                {"snapshot_id": sid, "created_at": _utcnow_iso()},
+                exclusive=True,
+            )
+        except FileExistsError:
+            existing = self.resolve_tag(name)
+            if existing != sid:
+                raise FileExistsError(
+                    f"tag {name!r} already pins snapshot {existing} "
+                    f"(wanted {sid}); tags are immutable — drop first"
+                ) from None
         return sid
 
     def drop_tag(self, name: str) -> bool:
@@ -1123,11 +1421,25 @@ class LakeTable:
                 "type evidence)"
             )
         snap = self.snapshot()
-        schema = schema_from_json(snap["schema"])
-        phys_names = {f.name for f in schema.fields}
+        self._check_new_column_name(name, snap)
+        return self.commit(
+            op="evolve",
+            epoch=None,
+            bucket_updates={},
+            new_schema=T.StructType([T.StructField(name, dtype, True)]),
+            expected_parent=snap["snapshot_id"],
+        )
+
+    @staticmethod
+    def _check_new_column_name(name: str, snap: dict) -> None:
+        """A column being ADDED must take a genuinely new name: not a
+        current physical or logical name, not a dropped-column tombstone
+        (old files still carry its pre-drop values), not a retired name
+        (stale producers may still send it, and the apply boundary maps it
+        to the renamed column)."""
+        phys_names = {f.name for f in schema_from_json(snap["schema"]).fields}
         ren = snap.get("renames") or {}
-        logical_names = {ren.get(n, n) for n in phys_names}
-        if name in phys_names or name in logical_names:
+        if name in phys_names or name in {ren.get(n, n) for n in phys_names}:
             raise ValueError(f"column {name!r} already exists")
         if name in set(snap.get("dropped_cols") or ()):
             raise ValueError(
@@ -1142,13 +1454,6 @@ class LakeTable:
                 "producers may still send it and the apply boundary maps "
                 "it there — a new column must take a new name"
             )
-        return self.commit(
-            op="evolve",
-            epoch=None,
-            bucket_updates={},
-            new_schema=T.StructType([T.StructField(name, dtype, True)]),
-            expected_parent=snap["snapshot_id"],
-        )
 
     def widen_column(self, name: str, dtype: T.DataType) -> int:
         """ALTER COLUMN TYPE evolution, declared EXPLICITLY: widen a
@@ -1478,11 +1783,7 @@ class LakeTable:
             raise ValueError(
                 f"constraint {name!r} already declared; drop it first"
             )
-        parent = (
-            ref_table
-            if isinstance(ref_table, LakeTable)
-            else LakeTable.load(ref_table)
-        )
+        parent = as_table(ref_table)
         cols = list(cols)
         local = {f.name: f.dataType for f in self.logical_schema().fields}
         missing = [c for c in cols if c not in local]
@@ -1668,25 +1969,7 @@ class LakeTable:
         refs = analyze_generated(
             spark, self.logical_schema(), name, expr, dtype
         )
-        # same new-name validation add_column performs
-        schema = schema_from_json(snap["schema"])
-        phys_names = {f.name for f in schema.fields}
-        ren = snap.get("renames") or {}
-        if name in phys_names or name in {
-            ren.get(n, n) for n in phys_names
-        }:
-            raise ValueError(f"column {name!r} already exists")
-        if name in set(snap.get("dropped_cols") or ()):
-            raise ValueError(
-                f"{name!r} is a dropped-column tombstone; a new column "
-                "must take a new name"
-            )
-        if name in (snap.get("retired_names") or {}):
-            raise ValueError(
-                f"{name!r} is a RETIRED name of column "
-                f"{snap['retired_names'][name]!r} (renamed away); a new "
-                "column must take a new name"
-            )
+        self._check_new_column_name(name, snap)
         return self.commit(
             op="evolve",
             epoch=None,
@@ -2947,265 +3230,40 @@ class LakeTable:
         drop_column: str | None = None,
         rename: tuple[str, str] | None = None,
     ) -> int | None:
-        """One commit attempt against ``cur``: build the snapshot, try the
-        exclusive manifest create. Returns the new id, or None on CAS loss."""
-        keyless = cur["key_cols"] is None
-        # scalar label for lineage/back-compat readers; the full window set
-        # rides in "epochs" and the cumulative ledger in "applied_epochs"
-        epoch = max(epochs) if epochs else None
-        sid = cur["snapshot_id"] + 1
-        # a bucket-count change invalidates every old bucket assignment, so
-        # the update set must be the COMPLETE new layout (rebucket rewrite)
-        buckets = {} if new_n_buckets is not None else dict(cur["buckets"])
-        lineage = []
-
-        def _pad_fstats(fs, n):
-            fs = list(fs) if fs else []
-            return fs + [None] * (n - len(fs))
-
-        for b, info in sorted(bucket_updates.items()):
-            prev = buckets.get(
-                str(b), {"max_lsn": None, "files": [], "rows": 0, "merged": True}
-            )
-            max_lsn = info.get("max_lsn")
-            if mode == "append":
-                files = list(prev.get("files", [])) + list(info["files"])
-                rows = prev.get("rows", 0) + info["rows"]
-                fstats = _pad_fstats(
-                    prev.get("fstats"), len(prev.get("files", []))
-                ) + _pad_fstats(info.get("fstats"), len(info["files"]))
-                pmax = prev.get("max_lsn")
-                if max_lsn is None or (pmax is not None and pmax > max_lsn):
-                    max_lsn = pmax
-                gens = prev.get("gens", 1 if prev.get("files") else 0) + (
-                    1 if info["files"] else 0
-                )
-                # keyless tables have no per-key versions to resolve: every
-                # generation is final state, so the bucket is always "merged".
-                # For keyed tables a first generation is merged only if the
-                # WRITER vouches it folded the batch (``merged``): a raw
-                # (unfolded) generation — the partial engine's copart append,
-                # or a chunk-split hot bucket — can hold several versions of
-                # one key, and the fold-free merged fast path would surface
-                # them all.
-                is_merged = True if keyless else (gens <= 1 and merged)
-            else:
-                files = info["files"]
-                rows = info["rows"]
-                fstats = _pad_fstats(info.get("fstats"), len(files))
-                if max_lsn is None:
-                    max_lsn = prev.get("max_lsn")
-                # a path-only rewrite (localize: same bytes, new location)
-                # carries the bucket's flags through verbatim; data rewrites
-                # (compact/vacuum/CoW) omit them and take the defaults
-                gens = info.get("gens", 1 if files else 0)
-                is_merged = info.get("merged", merged)
-            buckets[str(b)] = {
-                "files": files,
-                "rows": rows,
-                "max_lsn": max_lsn,
-                "merged": bool(is_merged),
-                "gens": gens,
-                "fstats": fstats,
-            }
-            lineage.append(
-                {
-                    "partition_id": int(b),
-                    "epoch": epoch,
-                    "max_lsn": max_lsn,
-                    "rows_applied": info["rows"],
-                }
-            )
-        applied = list(cur["applied_epochs"])
-        applied.extend(e for e in epochs if e not in applied)
-        dropped_cols = list(cur.get("dropped_cols") or [])
-        renames = dict(cur.get("renames") or {})
-        retired = dict(cur.get("retired_names") or {})
-        # rename validation AT THE REBASE HEAD (like the drop/sort_order
-        # cross-checks): a concurrent drop/evolve could have taken the
-        # target name or removed the source column since the caller read
-        if rename is not None:
-            phys, new_logical = rename
-            head_fields = {
-                f.name for f in schema_from_json(cur["schema"]).fields
-            }
-            if phys not in head_fields:
-                raise CommitConflictError(
-                    f"cannot rename {phys!r}: dropped by a concurrent commit"
-                )
-            logical_others = {
-                renames.get(n, n) for n in head_fields if n != phys
-            }
-            if (
-                new_logical in logical_others
-                or (new_logical in head_fields and new_logical != phys)
-                or new_logical in dropped_cols
-                or retired.get(new_logical, phys) != phys
-            ):
-                raise CommitConflictError(
-                    f"rename target {new_logical!r} collides with a "
-                    "column, tombstone or retired name at the commit head "
-                    "(concurrent evolve/drop); re-plan against fresh state"
-                )
-            # the name being renamed AWAY stays resolvable: record it in
-            # the retired map (name -> physical) so a stale producer still
-            # sending an INTERMEDIATE logical name (tool -> tool_name ->
-            # tool_label; producer still says tool_name) maps into the
-            # right physical column instead of silently evolving a brand
-            # new one. The physical name itself needs no entry (it always
-            # maps), and the new current name leaves the retired set.
-            prev_logical = renames.get(phys, phys)
-            if prev_logical not in (phys, new_logical):
-                retired[prev_logical] = phys
-            retired.pop(new_logical, None)
-            if new_logical == phys:
-                renames.pop(phys, None)
-            else:
-                renames[phys] = new_logical
-        # cross-validate AT THE REBASE HEAD, not just at the caller's
-        # snapshot: a drop racing a set_sort_order (either order) could
-        # otherwise leave the head's sort_order naming a column the schema
-        # no longer has — breaking every later compaction
-        if drop_column is not None:
-            head_so = (cur.get("props") or {}).get("sort_order") or ()
-            if drop_column in head_so:
-                raise CommitConflictError(
-                    f"cannot drop column {drop_column!r}: a concurrent "
-                    f"commit declared sort_order {list(head_so)} naming it; "
-                    "reset the sort order and retry"
-                )
-        if props and props.get("sort_order"):
-            live = {
-                f.name for f in schema_from_json(cur["schema"]).fields
-            }
-            missing = [c for c in props["sort_order"] if c not in live]
-            if missing:
-                raise CommitConflictError(
-                    f"sort_order names column(s) {missing} that no longer "
-                    "exist at the commit head (concurrent drop/evolve); "
-                    "re-declare against fresh state"
-                )
-        if drop_column is not None:
-            # schema REPLACEMENT, not union (a union would keep the column);
-            # recomputed from the rebase head so a concurrent evolve's new
-            # columns survive and a concurrent identical drop is a no-op
-            cur_schema = schema_from_json(cur["schema"])
-            schema_json = T.StructType(
-                [f for f in cur_schema.fields if f.name != drop_column]
-            ).json()
-            if drop_column not in dropped_cols:
-                dropped_cols.append(drop_column)
-            # a dropped RENAMED column's logical name joins the retired
-            # map: a stale producer still sending it must map to the
-            # tombstoned physical name (and be ignored like any stale
-            # physical-name producer), not evolve a brand-new column
-            prev_logical = renames.get(drop_column)
-            if prev_logical:
-                retired[prev_logical] = drop_column
-            renames.pop(drop_column, None)
-        elif new_schema is not None:
-            # union with the CURRENT head's schema (not the baseline's): a
-            # concurrent evolve commit that won the race keeps its columns;
-            # tombstoned names stay out
-            unioned = union_schema(
-                schema_from_json(cur["schema"]), new_schema,
-                dropped=dropped_cols,
-            )
-            # a NEW physical column must not shadow a live logical name —
-            # two user-visible columns would share one name (the racing
-            # twin of rename_column's own collision check)
-            head_names = {
-                f.name for f in schema_from_json(cur["schema"]).fields
-            }
-            shadow = {
-                f.name for f in unioned.fields if f.name not in head_names
-            } & (set(renames.values()) | set(retired))
-            if shadow:
-                raise CommitConflictError(
-                    f"schema evolution adds column(s) {sorted(shadow)} "
-                    "that collide with a renamed column's current or "
-                    "retired logical name at the commit head; rename the "
-                    "incoming column upstream"
-                )
-            schema_json = unioned.json()
-        else:
-            schema_json = cur["schema"]
-        snap = {
-            "snapshot_id": sid,
-            "parent_id": cur["snapshot_id"],
-            "epoch": epoch,
-            "epochs": epochs,
-            "op": op,
-            "schema": schema_json,
-            "key_cols": cur["key_cols"],
-            "bucket_cols": cur.get("bucket_cols"),
-            "merge_engine": cur.get("merge_engine", "lww"),
-            "agg_spec": cur.get("agg_spec"),
-            "dropped_cols": dropped_cols,
-            "renames": renames,
-            "retired_names": retired,
-            "props": {**(cur.get("props") or {}), **(props or {})},
-            "n_buckets": int(new_n_buckets) if new_n_buckets is not None else cur["n_buckets"],
-            "buckets": buckets,
-            "applied_epochs": applied,
-            "lineage": lineage,
-            "rows_total": sum(i["rows"] for i in buckets.values()),
-            "committed_at": _utcnow_iso(),
-        }
+        """One commit attempt against ``cur``: validate at the head, build
+        the snapshot, try the exclusive manifest create. Returns the new id,
+        or None on CAS loss."""
+        _check_at_head(cur, new_schema, props, drop_column, rename)
+        snap = _next_snapshot(
+            cur, op=op, epochs=epochs, bucket_updates=bucket_updates,
+            mode=mode, merged=merged, new_schema=new_schema, props=props,
+            drop_column=drop_column, rename=rename,
+            new_n_buckets=new_n_buckets,
+        )
         try:
-            self._write_snapshot(snap)
+            return self._publish(snap)
         except FileExistsError:
             return None  # CAS lost: another writer committed this id first
-        self._swap_pointer(sid)
-        return sid
+
+    def _publish(self, snap: dict) -> int:
+        """Publish a built snapshot: the exclusive manifest create (raises
+        ``FileExistsError`` when another writer holds the id), then the
+        pointer hint."""
+        self._write_snapshot(snap)
+        self._swap_pointer(snap["snapshot_id"])
+        return snap["snapshot_id"]
 
     def _write_snapshot(self, snap: dict) -> None:
-        """The commit point: exclusive creation of the manifest. The snapshot
-        JSON is fully written + fsynced to a per-writer temp file, then
-        ``os.link``ed to its final name — an atomic create-if-absent (the CAS
-        that arbitrates concurrent writers racing for the same id). A crash
-        before the link leaves only an invisible temp file; after it, the
-        commit is durable whether or not the pointer hint ever advances
+        """The commit point: exclusive creation of the manifest. A crash
+        before it leaves only an invisible temp file; after it, the commit
+        is durable whether or not the pointer hint ever advances
         (``current_snapshot_id`` probes forward)."""
-        path = self._snapshot_path(snap["snapshot_id"])
-        tmp = f"{path}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
-
-        def _write() -> None:
-            with open(tmp, "w") as f:
-                json.dump(snap, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.link(tmp, path)
-
-        try:
-            _retry_io(_write)
-        finally:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
+        _write_json(
+            self._snapshot_path(snap["snapshot_id"]), snap, exclusive=True
+        )
 
     def _swap_pointer(self, sid: int) -> None:
-        """Advance the pointer HINT (never the commit itself). Forward-only:
-        a slower writer finishing an older commit must not move the hint
-        backwards. The read-check/replace here is not atomic, but a lost or
-        stale hint only costs readers extra forward probes — it can never
-        hide a committed snapshot."""
-        def _write() -> None:
-            try:
-                with open(self._pointer_path()) as f:
-                    if int(f.read().strip()) >= sid:
-                        return
-            except (FileNotFoundError, ValueError):
-                pass
-            tmp = f"{self._pointer_path()}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "w") as f:
-                f.write(str(sid))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._pointer_path())
-
-        _retry_io(_write)
+        _advance_hint(self._pointer_path(), sid)
 
     # ------------- write-audit-publish (staged commits) -------------
     #
@@ -3255,25 +3313,11 @@ class LakeTable:
             "stage_dir": os.path.relpath(stage_dir, self.root),
             "created_at": _utcnow_iso(),
         }
-        path = self._staged_desc_path(token)
-
-        def _write() -> None:
-            tmp = f"{path}.{os.getpid()}.tmp"
-            with open(tmp, "w") as f:
-                json.dump(desc, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)
-
-        _retry_io(_write)
+        _write_json(self._staged_desc_path(token), desc)
         return token
 
     def load_staged(self, token: str) -> dict:
-        def _read() -> dict:
-            with open(self._staged_desc_path(token)) as f:
-                return json.load(f)
-
-        return _retry_io(_read)
+        return _read_json(self._staged_desc_path(token))
 
     def list_staged(self) -> list[dict]:
         """All pending staged batches, oldest first — the maintenance view
@@ -3289,65 +3333,48 @@ class LakeTable:
         return sorted(out, key=lambda d: d.get("created_at", ""))
 
     def staged_snapshot(self, token: str) -> dict:
-        """The SYNTHETIC snapshot the staged batch would produce if published
-        right now: current head + the descriptor's bucket appends, with the
-        same merged/gens arithmetic as a real append commit. Raises
+        """The snapshot the staged batch would commit if published right
+        now: the descriptor applied to the current head by the same builder
+        and head checks as :meth:`publish_staged`'s commit. Raises
         :class:`CommitConflictError` if the layout changed underneath the
         staged files, :class:`EpochAlreadyAppliedError` if a concurrent
         writer already applied the batch's epochs (the preview would double
         count)."""
         desc = self.load_staged(token)
         cur = self.snapshot()
-        if cur["n_buckets"] != desc["n_buckets"]:
-            raise CommitConflictError(
-                "bucket layout changed underneath the staged batch "
-                f"({desc['n_buckets']} -> {cur['n_buckets']}); abandon and "
-                "re-stage"
-            )
+        self._check_staged_layout(desc, cur)
         overlap = set(desc["epochs"]) & set(cur["applied_epochs"])
         if overlap:
             raise EpochAlreadyAppliedError(
                 f"staged epoch(s) {sorted(overlap)} were applied by a "
                 "concurrent writer; the staged batch is obsolete"
             )
-        keyless = cur["key_cols"] is None
-        buckets = {b: dict(info) for b, info in cur["buckets"].items()}
-        for b, info in desc["bucket_updates"].items():
-            prev = buckets.get(
-                b, {"max_lsn": None, "files": [], "rows": 0, "merged": True}
+        new_schema = (
+            schema_from_json(desc["new_schema"])
+            if desc.get("new_schema") else None
+        )
+        _check_at_head(cur, new_schema)
+        return _next_snapshot(
+            cur, op=desc["op"], epochs=desc["epochs"],
+            bucket_updates=desc["bucket_updates"], mode="append",
+            merged=desc.get("merged", True), new_schema=new_schema,
+        )
+
+    def _check_staged_layout(self, desc: dict, head: dict) -> None:
+        """A rebucket between stage and publish would append files under
+        STALE bucket ids — rows landing in buckets their keys no longer hash
+        to, silently invisible to read_keys/bucket pruning and split across
+        per-bucket LWW folds."""
+        if head["n_buckets"] != desc["n_buckets"] or (
+            desc.get("bucket_cols") is not None
+            and self._bucket_cols_of(head) != desc["bucket_cols"]
+        ):
+            raise CommitConflictError(
+                "bucket layout changed underneath the staged batch "
+                f"(n_buckets {desc['n_buckets']} -> {head['n_buckets']}, "
+                f"bucket_cols {desc.get('bucket_cols')} -> "
+                f"{self._bucket_cols_of(head)}); abandon and re-stage"
             )
-            files = list(prev.get("files", [])) + list(info["files"])
-            gens = prev.get("gens", 1 if prev.get("files") else 0) + (
-                1 if info["files"] else 0
-            )
-            max_lsn = info.get("max_lsn")
-            pmax = prev.get("max_lsn")
-            if max_lsn is None or (pmax is not None and pmax > max_lsn):
-                max_lsn = pmax
-            buckets[b] = {
-                "files": files,
-                "rows": prev.get("rows", 0) + info["rows"],
-                "max_lsn": max_lsn,
-                "merged": (
-                    True
-                    if keyless
-                    else gens <= 1 and desc.get("merged", True)
-                ),
-                "gens": gens,
-            }
-        if desc.get("new_schema"):
-            # honor dropped-name tombstones: the PREVIEW must match what
-            # publish would commit (a staged batch schema predating a drop
-            # must not resurrect the column in the audit view)
-            schema_json = union_schema(
-                schema_from_json(cur["schema"]),
-                schema_from_json(desc["new_schema"]),
-                dropped=cur.get("dropped_cols") or (),
-            ).json()
-        else:
-            schema_json = cur["schema"]
-        return {**cur, "buckets": buckets, "schema": schema_json,
-                "staged_token": token}
 
     def read_staged(
         self,
@@ -3401,24 +3428,12 @@ class LakeTable:
         epochs, the staged files are abandoned and
         :class:`EpochAlreadyAppliedError` propagates (exactly-once).
 
-        Layout guard (mirrors :meth:`staged_snapshot`): a rebucket between
-        stage and publish would append files under STALE bucket ids — rows
-        landing in buckets their keys no longer hash to, silently invisible
-        to read_keys/bucket pruning and split across per-bucket LWW folds —
-        so the descriptor's n_buckets/bucket_cols are validated against the
-        current head before committing."""
+        The descriptor's bucket layout is validated against the current
+        head before committing (:meth:`_check_staged_layout`, shared with
+        :meth:`staged_snapshot`)."""
         desc = self.load_staged(token)
         head = self.snapshot()
-        if head["n_buckets"] != desc["n_buckets"] or (
-            desc.get("bucket_cols") is not None
-            and self._bucket_cols_of(head) != desc["bucket_cols"]
-        ):
-            raise CommitConflictError(
-                "bucket layout changed underneath the staged batch "
-                f"(n_buckets {desc['n_buckets']} -> {head['n_buckets']}, "
-                f"bucket_cols {desc.get('bucket_cols')} -> "
-                f"{self._bucket_cols_of(head)}); abandon and re-stage"
-            )
+        self._check_staged_layout(desc, head)
         updates = {int(b): u for b, u in desc["bucket_updates"].items()}
         new_schema = (
             schema_from_json(desc["new_schema"]) if desc.get("new_schema") else None
@@ -4196,53 +4211,23 @@ class LakeTable:
                 f"than head {cur['snapshot_id']}"
             )
         target = self.snapshot(to_snapshot_id)  # raises if expired/unknown
-        snap = {
-            "snapshot_id": cur["snapshot_id"] + 1,
-            "parent_id": cur["snapshot_id"],
-            "epoch": None,
-            "op": "rollback",
-            "schema": target["schema"],
-            "key_cols": target["key_cols"],
-            "bucket_cols": target.get("bucket_cols"),
-            # engine + name-mapping state reverts WITH the schema: omitting
-            # these keys would make every reader fall back to their defaults
-            # — a partial/aggregate table silently becoming LWW after a
-            # rollback, a rename map vanishing (physical names resurfacing),
-            # and a dropped-column tombstone disappearing (re-adding that
-            # name would resurrect the old files' pre-drop values)
-            "merge_engine": target.get("merge_engine", "lww"),
-            "agg_spec": target.get("agg_spec"),
-            "renames": target.get("renames") or {},
-            "retired_names": target.get("retired_names") or {},
-            "dropped_cols": target.get("dropped_cols") or [],
-            # props revert WITH the data, like applied_epochs: a consumer
-            # frontier stored on this table must rewind to the target state
-            # so the consumer re-applies the rolled-back windows
-            "props": target.get("props") or {},
-            "n_buckets": target["n_buckets"],
-            "buckets": target["buckets"],
-            "applied_epochs": target["applied_epochs"],
-            "lineage": [
-                {
-                    "partition_id": -1,
-                    "epoch": None,
-                    "max_lsn": None,
-                    "rows_applied": 0,
-                    "rolled_back_to": to_snapshot_id,
-                }
-            ],
-            "rows_total": target["rows_total"],
-            "committed_at": _utcnow_iso(),
-        }
+        # the WHOLE table state reverts with the data — engine, name maps
+        # and tombstones (a partial table must not silently become LWW, a
+        # dropped name must not become re-addable), and props, like
+        # applied_epochs (a consumer frontier stored on this table rewinds
+        # so the consumer re-applies the rolled-back windows)
         try:
-            self._write_snapshot(snap)
+            return self._publish(
+                _next_snapshot(
+                    cur, op="rollback", state=target,
+                    origin={"rolled_back_to": to_snapshot_id},
+                )
+            )
         except FileExistsError:
             raise CommitConflictError(
                 "a concurrent commit landed while rolling back; re-examine "
                 "the head and retry the rollback deliberately"
             )
-        self._swap_pointer(snap["snapshot_id"])
-        return snap["snapshot_id"]
 
     # ---------------- zero-copy clone (table fork) ----------------
     #
@@ -4328,41 +4313,31 @@ class LakeTable:
                     pass
             raise
 
-        new = json.loads(json.dumps(snap))  # deep copy
-        for info in new["buckets"].values():
-            info["files"] = [
-                f if os.path.isabs(f) else os.path.join(src_root, f)
-                for f in info["files"]
-            ]
-        new.update(
-            {
-                "snapshot_id": 0,
-                "parent_id": None,
-                "epoch": None,
-                "epochs": [],
-                "op": "clone",
-                "lineage": [
-                    {
-                        "partition_id": -1,
-                        "epoch": None,
-                        "max_lsn": None,
-                        "rows_applied": 0,
-                        "cloned_from": {"root": src_root, "snapshot_id": sid},
-                    }
+        buckets = {
+            b: {
+                **info,
+                "files": [
+                    f if os.path.isabs(f) else os.path.join(src_root, f)
+                    for f in info["files"]
                 ],
-                "committed_at": _utcnow_iso(),
             }
-        )
-        new["props"] = {
-            **(new.get("props") or {}),
-            "clone_src": src_root,
-            "clone_src_snapshot": sid,
-            "clone_pins": pins,
+            for b, info in snap["buckets"].items()
         }
         os.makedirs(dest.meta_dir, exist_ok=True)
         os.makedirs(dest.data_dir, exist_ok=True)
-        dest._write_snapshot(new)
-        dest._swap_pointer(0)
+        dest._publish(
+            _next_snapshot(
+                None,
+                op="clone",
+                state={**snap, "buckets": buckets},
+                props={
+                    "clone_src": src_root,
+                    "clone_src_snapshot": sid,
+                    "clone_pins": pins,
+                },
+                origin={"cloned_from": {"root": src_root, "snapshot_id": sid}},
+            )
+        )
         return dest
 
     def foreign_files(self) -> list[str]:
@@ -4487,3 +4462,9 @@ class LakeTable:
             )
 
         return _retry_conflicts(_once)
+
+
+def as_table(table: "LakeTable | str") -> LakeTable:
+    """A table registry entry — a :class:`LakeTable` or its root path — as
+    a loaded :class:`LakeTable`."""
+    return table if isinstance(table, LakeTable) else LakeTable.load(table)

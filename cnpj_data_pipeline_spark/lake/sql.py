@@ -24,11 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from cnpj_data_pipeline_spark.lake.format import LakeTable
-
-
-def _as_table(table: LakeTable | str) -> LakeTable:
-    return table if isinstance(table, LakeTable) else LakeTable.load(table)
+from cnpj_data_pipeline_spark.lake.format import LakeTable, as_table
 
 
 def register_view(
@@ -40,7 +36,7 @@ def register_view(
 ) -> None:
     """Register ``name`` as a temp view of the table's resolved state,
     pinned to ``snapshot_id`` (default: the current head at call time)."""
-    t = _as_table(table)
+    t = as_table(table)
     sid = t.current_snapshot_id() if snapshot_id is None else snapshot_id
     t.read(spark, snapshot_id=sid, include_meta=include_meta).createOrReplaceTempView(
         name
@@ -53,7 +49,7 @@ def register_history_view(
     """Commit history (one row per snapshot: operation, epoch, counts) as a
     queryable relation — the lineage surface of the reference's
     ``processed_files`` checkpoint table (``src/database/postgres.py:122-196``)."""
-    _as_table(table).lineage_df(spark).createOrReplaceTempView(name)
+    as_table(table).lineage_df(spark).createOrReplaceTempView(name)
 
 
 def register_meta_views(
@@ -64,7 +60,7 @@ def register_meta_views(
     (commit chain + tags), ``<prefix>_lineage`` (per-bucket apply history).
     Layout/ops questions become SQL: compaction debt is
     ``SELECT bucket, count(*) FROM t_files WHERE NOT merged GROUP BY 1``."""
-    t = _as_table(table)
+    t = as_table(table)
     t.files_df(spark).createOrReplaceTempView(f"{prefix}_files")
     t.snapshots_df(spark).createOrReplaceTempView(f"{prefix}_snapshots")
     t.lineage_df(spark).createOrReplaceTempView(f"{prefix}_lineage")
@@ -82,7 +78,7 @@ def register_changes_view(
     (default: current head) as a temp view — per-epoch LWW winner rows with
     ``__op``/``__lsn`` meta columns, same semantics as
     :meth:`LakeTable.read_changes`."""
-    t = _as_table(table)
+    t = as_table(table)
     t.read_changes(spark, from_snapshot, to_snapshot).createOrReplaceTempView(name)
 
 
@@ -111,7 +107,7 @@ def consistent_frontier(
     table's manifest chain), no data IO. Assumes the tables share one epoch
     sequence (the multi-table WAL layout).
     """
-    loaded = {n: _as_table(t) for n, t in tables.items()}
+    loaded = {n: as_table(t) for n, t in tables.items()}
     maxes = []
     for t in loaded.values():
         applied = t.applied_epochs()
@@ -147,7 +143,7 @@ def register_catalog(
     if consistent:
         _, pins = consistent_frontier(tables)
     else:
-        pins = {n: _as_table(t).current_snapshot_id() for n, t in tables.items()}
+        pins = {n: as_table(t).current_snapshot_id() for n, t in tables.items()}
     for name, table in tables.items():
         register_view(spark, table, name, snapshot_id=pins[name])
         if history:

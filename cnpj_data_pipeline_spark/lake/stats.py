@@ -45,11 +45,12 @@ import glob
 import json
 import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from cnpj_data_pipeline_spark.lake.format import _write_json
 
 DEFAULT_LG_K = 14
 
@@ -140,12 +141,7 @@ def _estimates(spark: SparkSession, sketches: dict) -> dict[str, int]:
 def _write_record(root: str, rec: dict) -> str:
     path = _stats_path(root, rec["snapshot_id"])
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(path), prefix=".colstats-tmp-"
-    )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(rec, fh)
-    os.replace(tmp, path)
+    _write_json(path, rec)
     return path
 
 

@@ -8,8 +8,10 @@ torn state. ``lake/sql.py:consistent_frontier`` solves this read-side by
 epoch alignment; this module solves it WRITE-side, the way an Iceberg REST
 catalog runs multi-table transactions: the catalog is one tiny versioned
 JSON file mapping table names to pinned snapshot ids, and advancing it is
-a single exclusive-create CAS (the same ``os.link`` primitive as the table
-format's own manifests — maps to a conditional PUT on an object store).
+a single exclusive-create CAS — the table format's own version log
+(``lake/format.py``: ``_write_json`` exclusive create, forward-only
+``_advance_hint``, probe-forward ``_log_head``; maps to a conditional PUT on
+an object store), so a catalog version publishes exactly like a snapshot.
 Readers that resolve tables THROUGH the catalog observe every transaction
 all-or-nothing, regardless of how many tables it touched.
 
@@ -20,7 +22,7 @@ machinery, so no new data path exists:
   ``apply_changes(stage_only=True)``: shuffled/folded/staged parquet +
   footer stats, invisible behind a pending-commit descriptor. When every
   table is staged, a prepared-transaction descriptor lands in the catalog
-  dir (crash-atomic ``os.replace``) — the 2PC commit record.
+  dir (the format's fsync'd ``os.replace`` writer) — the 2PC commit record.
 * **commit** — each staged batch is published (table-level commits, each
   idempotent under the exactly-once epoch ledger), then ONE catalog CAS
   makes the new pin vector visible. A crash anywhere in between leaves
@@ -62,8 +64,12 @@ from cnpj_data_pipeline_spark.lake.format import (
     CommitConflictError,
     EpochAlreadyAppliedError,
     LakeTable,
-    _retry_io,
+    _advance_hint,
+    _log_head,
+    _read_json,
     _utcnow_iso,
+    _write_json,
+    as_table,
 )
 
 
@@ -92,7 +98,7 @@ class Catalog:
         os.makedirs(root, exist_ok=True)
         pins = {}
         for name, t in (tables or {}).items():
-            lt = t if isinstance(t, LakeTable) else LakeTable.load(t)
+            lt = as_table(t)
             pins[name] = {
                 "root": os.path.abspath(lt.root),
                 "snapshot_id": lt.current_snapshot_id(),
@@ -106,8 +112,7 @@ class Catalog:
             "tag": f"cat-{cid}-v0-{_uuid.uuid4().hex[:8]}",
         }
         cat._tag_pins(ver)
-        cat._write_version(ver)
-        cat._swap_pointer(0)
+        cat._publish(ver)
         return cat
 
     @classmethod
@@ -133,57 +138,23 @@ class Catalog:
         return os.path.join(self.root, f"txn-{token}.json")
 
     def current_version(self) -> int:
-        def _read() -> int:
-            with open(self._pointer_path()) as f:
-                return int(f.read().strip())
-
-        n = _retry_io(_read)
-        while os.path.exists(self._version_path(n + 1)):
-            n += 1
-        return n
+        return _log_head(self._pointer_path(), self._version_path)
 
     def version(self, n: int | None = None) -> dict:
         if n is None:
             n = self.current_version()
+        return _read_json(self._version_path(n))
 
-        def _read() -> dict:
-            with open(self._version_path(n)) as f:
-                return json.load(f)
-
-        return _retry_io(_read)
-
-    def _write_version(self, ver: dict) -> None:
-        """Exclusive create — the catalog's commit CAS (os.link, like the
-        table format's manifests). Raises FileExistsError on a lost race."""
-        path = self._version_path(ver["version"])
-        tmp = f"{path}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
-
-        def _write() -> None:
-            with open(tmp, "w") as f:
-                json.dump(ver, f)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, path)
-            finally:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-
-        _retry_io(_write)
+    def _publish(self, ver: dict) -> int:
+        """The catalog's commit: exclusive creation of the version manifest
+        (the CAS — ``FileExistsError`` on a lost race), then the pointer
+        hint; the same log primitives as a table's snapshot manifests."""
+        _write_json(self._version_path(ver["version"]), ver, exclusive=True)
+        self._swap_pointer(ver["version"])
+        return ver["version"]
 
     def _swap_pointer(self, n: int) -> None:
-        tmp = f"{self._pointer_path()}.{os.getpid()}.{_uuid.uuid4().hex[:8]}.tmp"
-
-        def _write() -> None:
-            with open(tmp, "w") as f:
-                f.write(str(n))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._pointer_path())
-
-        _retry_io(_write)
+        _advance_hint(self._pointer_path(), n)
 
     # ---------------- reads ----------------
 
@@ -268,7 +239,7 @@ class Catalog:
                 pass
 
     def register(self, name: str, table: "LakeTable | str") -> int:
-        lt = table if isinstance(table, LakeTable) else LakeTable.load(table)
+        lt = as_table(table)
         return self.publish(
             {name: lt.current_snapshot_id()},
             _new_roots={name: os.path.abspath(lt.root)},
@@ -332,16 +303,13 @@ class Catalog:
             }
             self._tag_pins(ver)
             try:
-                self._write_version(ver)
+                return self._publish(ver)
             except FileExistsError:
                 self._drop_version_tags(ver)
                 if expected_version is not None:
                     raise CommitConflictError(
                         f"lost the catalog CAS at version {ver['version']}"
                     )
-                continue
-            self._swap_pointer(ver["version"])
-            return ver["version"]
         raise CommitConflictError(
             f"lost the catalog publish race {max_retries} times; giving up"
         )
@@ -541,8 +509,7 @@ class MultiTableTransaction:
         if name in pins:
             return LakeTable.load(pins[name]["root"])
         if tables and name in tables:
-            t = tables[name]
-            return t if isinstance(t, LakeTable) else LakeTable.load(t)
+            return as_table(tables[name])
         raise KeyError(
             f"no table {name!r} in catalog (have {sorted(pins)}) or in the "
             "supplied registry"
@@ -598,17 +565,8 @@ class MultiTableTransaction:
             "updates": self._staged,
             "created_at": _utcnow_iso(),
         }
-        path = self.catalog._txn_path(self.token)
-        tmp = f"{path}.{os.getpid()}.tmp"
-
-        def _write() -> None:
-            with open(tmp, "w") as f:
-                json.dump(txn, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)
-
-        _retry_io(_write)  # the 2PC commit point: prepared record durable
+        # the 2PC commit point: prepared record durable
+        _write_json(self.catalog._txn_path(self.token), txn)
         return txn
 
     def commit(self) -> int:

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 from cnpj_data_pipeline_spark.config import EngineConfig
 from cnpj_data_pipeline_spark.lake.format import LakeTable
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
+from cnpj_data_pipeline_spark.plans.pipeline import copart_eligible
 from cnpj_data_pipeline_spark.sources.change_stream import (
     epoch_row_count,
     list_epochs,
@@ -248,10 +249,7 @@ class MultiTableIngestJob:
             # apply, exactly like the single-table loop — per (table,
             # epoch) detection, same ledger, silent fallback
             layout = None
-            if self.cfg.copart != "off" and (
-                tables[spec.name].key_cols() is None
-                or self.cfg.write_mode == "mor"
-            ):
+            if copart_eligible(tables[spec.name], self.cfg):
                 from cnpj_data_pipeline_spark.sources.change_stream import (
                     bucketed_layout,
                 )

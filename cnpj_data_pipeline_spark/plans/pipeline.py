@@ -20,6 +20,22 @@ from cnpj_data_pipeline_spark.operators.merge import apply_changes
 from cnpj_data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
 
 
+def copart_eligible(table: LakeTable, cfg: EngineConfig) -> bool:
+    """Whether a table's epochs may take the shuffle-free co-partitioned
+    apply at all (each epoch still needs a bucket-aligned WAL layout):
+    copart enabled, merge-on-read for keyed tables (the apply appends), and
+    no row-dropping CHECK constraint (drop/dlq rewrites the batch, which the
+    zero-shuffle apply cannot do; fail-mode constraints keep the fast path
+    through one map-only pre-scan inside ``apply_changes_copart``)."""
+    from cnpj_data_pipeline_spark.lake.constraints import row_dropping
+
+    return (
+        cfg.copart != "off"
+        and (table.key_cols() is None or cfg.write_mode == "mor")
+        and not row_dropping(table.constraints())
+    )
+
+
 @dataclass
 class CopartBatch:
     """A pending epoch whose WAL layout is bucket-aligned with the table
@@ -219,17 +235,7 @@ class IngestJob:
         if dlq_dir is not None and wal_format != "debezium":
             raise ValueError("dlq_dir only applies to wal_format='debezium'")
         table = self.ensure_table()
-        from cnpj_data_pipeline_spark.lake.constraints import row_dropping
-
-        # row-dropping CHECK constraints (drop/dlq) rewrite the batch, which
-        # the zero-shuffle copart apply cannot do — route those tables
-        # through the general path; fail-mode constraints keep the fast path
-        # (one map-only pre-scan inside apply_changes_copart)
-        use_copart = (
-            self.cfg.copart != "off"
-            and (table.key_cols() is None or self.cfg.write_mode == "mor")
-            and not row_dropping(table.constraints())
-        )
+        use_copart = copart_eligible(table, self.cfg)
 
         def _plans_debezium():
             from cnpj_data_pipeline_spark.sources.debezium import (

@@ -262,7 +262,13 @@ def test_one_declared_consumer_path():
     the refresh as the only ``run_once`` calls, and no registry coercion
     outside the shared resolver."""
     tree = _ddl_tree()
-    assert len(_calls(tree, "os", "replace")) == 1
+    # the one sidecar write goes through the format's fsync'd JSON writer
+    assert not _calls(tree, "os", "replace")
+    assert len([
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and getattr(n.func, "id", None) == "_write_json"
+    ]) == 1
     assert len(_calls(tree, "json", "load")) == 1
     assert len(_calls(tree, None, "run_once")) == 2
     regexes = [

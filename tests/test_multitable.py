@@ -274,3 +274,45 @@ def test_txn_mode_bounded_admission_reads_consistent_epoch(spark, tmp_path):
     job.run_stream(spark, wal)
     assert cat.current_version() == 2
     assert cat.read(spark, "turns").count() == 23
+
+
+def test_copart_epoch_with_row_dropping_constraint_takes_general_path(
+    spark, tmp_path
+):
+    """A bucket-aligned epoch for a table with a drop/dlq CHECK constraint
+    must take the general (batch-rewriting) apply in the multi-table loop,
+    exactly as the single-table loop routes it: the co-partitioned apply
+    cannot drop rows."""
+    from cnpj_data_pipeline_spark.sources.change_stream import (
+        write_epoch_bucketed,
+    )
+
+    n_buckets = 4
+    cat = TableCatalog([
+        TableSpec("convs", CONV_SCHEMA, key_cols=("conv_id",),
+                  n_buckets=n_buckets),
+    ])
+    job = MultiTableIngestJob(
+        str(tmp_path / "lake"), cat, EngineConfig(n_buckets=n_buckets)
+    )
+    job.ensure_tables()["convs"].add_constraint(
+        spark, "titled", "title IS NOT NULL", on_violation="drop"
+    )
+    ts = pd.Timestamp("2026-01-01")
+    rows = [
+        (f"c{i:02d}", None if i == 3 else f"t{i}", ts, "I", i)
+        for i in range(8)
+    ]
+    batch = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["conv_id", "title", "ts", "op", "lsn"]),
+        "conv_id string, title string, ts timestamp, op string, lsn long",
+    )
+    wal = str(tmp_path / "wal")
+    write_epoch_bucketed(batch, f"{wal}/convs", 0, ["conv_id"], n_buckets)
+
+    (m,) = job.run_stream(spark, wal)
+    assert not m.get("copartitioned")
+    got = LakeTable.load(job.table_path("convs")).read(spark)
+    assert sorted(r["conv_id"] for r in got.collect()) == [
+        f"c{i:02d}" for i in range(8) if i != 3
+    ]
