@@ -27,7 +27,7 @@ Methodology notes (documented in BENCH/BASELINE.md):
   8→32 range is NOT usable as scaling evidence on this single VM: even a
   pure-JVM ``spark.range → repartition → agg`` shuffle microbenchmark flattens
   to ~2× from 8→32 threads here (hypervisor/memory-bandwidth ceiling measured
-  in tools/profile_ingest.py experiments), while pure-ALU work scales 3.5×.
+  in profiling experiments recorded in BENCH.md), while pure-ALU work scales 3.5×.
   On a real cluster, N→4N executors multiplies memory bandwidth and disk
   spindles along with cores; on one VM it does not.
 * Each worker applies a WARMUP batch into a scratch table first (JIT/codegen

@@ -10,7 +10,7 @@ hot keys across tasks, and the merge kernel strategy.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -26,7 +26,7 @@ class EngineConfig:
         so throughput scales with executors up to ``n_buckets`` parallel merges.
     salt_factor
         Sub-splits of a bucket for the grouped merge. Salting is on
-        ``xxhash64(conv_id, turn_idx, salt_seed)`` — the FULL key, never conv_id
+        ``xxhash64(conv_id, turn_idx, SALT_SEED)`` — the FULL key, never conv_id
         alone — so one hot conversation spreads over ``salt_factor`` tasks while
         every (conv_id, turn_idx) key still lands in exactly one task (merge
         correctness requires per-key locality, not per-conversation locality).
@@ -45,7 +45,6 @@ class EngineConfig:
 
     n_buckets: int = 32
     salt_factor: int = 4
-    salt_seed: int = 1337
     merge_strategy: str = "native"
     # Partition count for the merge shuffle. None (default) auto-sizes to
     # min(n_buckets * salt_factor, 2 * defaultParallelism). Set explicitly to
@@ -122,15 +121,12 @@ class EngineConfig:
     # For merge_engine="aggregate": payload column -> "sum"|"min"|"max"|
     # "last" (unlisted columns default to "last").
     agg_spec: dict | None = None
-    lsn_col: str = "lsn"
-    op_col: str = "op"
-    ts_col: str = "ts"
-
-    extra_spark_conf: dict = field(default_factory=dict)
 
 
 # Internal/meta column names used in the physical lake layout.
 BUCKET_COL = "__bucket"
 SALT_COL = "__salt"
+# the merge shuffle's salt hash seed: fixed, so salt placement is stable
+SALT_SEED = 1337
 LSN_META_COL = "__lsn"
 

@@ -1384,9 +1384,6 @@ class _ConsumerKind:
     # (spark, spec, root): copies a side input under the root before the
     # first sync, so no refresh depends on the original path
     freeze: Callable[[SparkSession, dict, str], None] | None = None
-    # IF NOT EXISTS with an unregistered source: must the statement carry
-    # the recorded source name? (INDEX re-registers under any name)
-    by_name: bool = True
 
 
 def _mview_spec(m: re.Match) -> dict:
@@ -1589,7 +1586,6 @@ _INDEX = _ConsumerKind(
     job=_index_job,
     show=_show_index,
     freeze=_index_freeze,
-    by_name=False,
 )
 _HISTORY = _ConsumerKind(
     sql="HISTORY TABLE",
@@ -1655,7 +1651,7 @@ def _create_consumer(
         if (
             os.path.abspath(src_root) != os.path.abspath(rec["source_root"])
             if src_root is not None
-            else kind.by_name and recorded not in (None, src)
+            else recorded not in (None, src)
         ):
             raise ValueError(
                 f"{kind.label} at {loc!r} records source "

@@ -2137,31 +2137,17 @@ class LakeTable:
             # fold is the table's merge engine: LWW (newest row), partial
             # (newest value per column), or aggregate (per-column monoid
             # fold per agg_spec) — operators/partial.py.
-            if engine != "lww":
-                from cnpj_data_pipeline_spark.operators.partial import (
-                    partial_winners_agg,
-                )
+            from cnpj_data_pipeline_spark.operators.partial import winners_agg
 
-                key_set = set(snap["key_cols"])
-                winners = partial_winners_agg(
-                    _scan(unmerged),
-                    snap["key_cols"],
-                    [f.name for f in payload_fields if f.name not in key_set],
-                    lsn_col=LSN_META_COL,
-                    op_col=OP_META_COL,
-                    agg_spec=snap.get("agg_spec"),
-                )
-            else:
-                from cnpj_data_pipeline_spark.operators.dedup import (
-                    lww_winners_agg,
-                )
-
-                winners = lww_winners_agg(
-                    _scan(unmerged),
-                    snap["key_cols"],
-                    lsn_col=LSN_META_COL,
-                    op_col=OP_META_COL,
-                )
+            winners = winners_agg(
+                _scan(unmerged),
+                snap["key_cols"],
+                [f.name for f in payload_fields],
+                engine,
+                lsn_col=LSN_META_COL,
+                op_col=OP_META_COL,
+                agg_spec=snap.get("agg_spec"),
+            )
             df = df.unionByName(winners)
         if not include_tombstones and not keyless:
             df = df.filter(F.col(OP_META_COL) != "D")
@@ -3565,31 +3551,17 @@ class LakeTable:
             ),
         )
         parted = df.repartition(n_parts, F.col(BUCKET_COL), F.col(SALT_COL))
-        if snap.get("merge_engine", "lww") != "lww":
-            from cnpj_data_pipeline_spark.operators.partial import (
-                partial_winners_agg,
-            )
+        from cnpj_data_pipeline_spark.operators.partial import winners_agg
 
-            key_set = set(key_cols)
-            winners = partial_winners_agg(
-                parted,
-                [BUCKET_COL, SALT_COL, *key_cols],
-                [f.name for f in self.schema().fields if f.name not in key_set],
-                lsn_col=LSN_META_COL,
-                op_col=OP_META_COL,
-                agg_spec=snap.get("agg_spec"),
-            ).drop(SALT_COL)
-        else:
-            from cnpj_data_pipeline_spark.operators.dedup import (
-                lww_winners_agg,
-            )
-
-            winners = lww_winners_agg(
-                parted,
-                [BUCKET_COL, SALT_COL, *key_cols],
-                lsn_col=LSN_META_COL,
-                op_col=OP_META_COL,
-            ).drop(SALT_COL)
+        winners = winners_agg(
+            parted,
+            [BUCKET_COL, SALT_COL, *key_cols],
+            self.schema().names,
+            snap.get("merge_engine", "lww"),
+            lsn_col=LSN_META_COL,
+            op_col=OP_META_COL,
+            agg_spec=snap.get("agg_spec"),
+        ).drop(SALT_COL)
         if lsn_horizon is not None:
             winners = winners.filter(
                 ~(

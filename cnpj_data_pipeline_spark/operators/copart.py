@@ -1,4 +1,5 @@
-"""Co-partitioned (bucket-aligned) WAL ingest — the shuffle-free fast path.
+"""The map-only bucket task: shuffle-free WAL apply, mirror catch-up and
+compaction/vacuum.
 
 The general merge (``operators.merge.apply_changes``) must shuffle every
 batch once onto (bucket, salt) because the WAL's partitioning is arbitrary.
@@ -8,18 +9,41 @@ events land in one partition), Debezium emits per-key ordered streams, and
 Iceberg/Hudi writers routinely request a bucket write distribution from the
 producer. When the WAL lands bucket-aligned with the table's own layout —
 same bucket function, same bucket count — the ingest's exchange is pure
-waste: every row is already exactly where it must end up.
+waste: every row is already exactly where it must end up. A committed
+bucket's generations likewise already live together on disk, so compaction
+has nothing to exchange either.
 
-This module exploits that: ``apply_changes_copart`` runs the whole MoR
-apply as a MAP-ONLY job. One Arrow task per bucket (chunked if hot) reads
-that bucket's WAL files, folds within-batch LWW in Arrow C++
-(``_lww_fold_arrow`` — tested bit-identical to the grouped merge's pandas
-kernel and the native total order), writes the bucket's delta file
-directly into the staging dir, harvests its footer stats in place, and
-returns one tiny stats row. No exchange, no second stats pass, no driver
-file loop — the commit goes through the same ``operators.merge._finish``
-as every other write path, so crash/resume, exactly-once and
-concurrent-writer semantics are unchanged.
+Every such job runs ONE task body, ``_bucket_task``, over ``(bucket,
+files)`` rows driven by ``_map_buckets`` (a JVM range frame, one Python
+worker per task). Per bucket it:
+
+1. reads and folds the files with ``read_fold_arrow`` — column-pruned
+   Parquet reads, each file normalized on its own (renamed and retired
+   names and the raw ``lsn``/``op`` envelope mapped to physical names,
+   typed NULLs for pre-evolution files and for columns a change feed's
+   source dropped), then the table's engine fold (``_lww_fold_arrow``,
+   bit-identical to the grouped merge and the native total order, or the
+   partial/aggregate ``partial_fold_arrow``) or none (the raw non-LWW
+   append);
+2. runs the optional stages: refuse an aggregate-engine tombstone, drop
+   tombstone winners below the vacuum ``lsn_horizon``, order by the
+   declared ``sort_order`` (lexical or z-order), stamp the audit column;
+3. writes ONE file with byte-targeted row groups, its key bloom when asked,
+   and returns the file's footer stats as one tiny row.
+
+The driver only assembles the manifest. The three callers differ only in
+what files each task gets and which stages are on:
+
+* ``apply_changes_copart``: a bucket-aligned WAL epoch (or a folded
+  window of epochs); the commit goes through the same
+  ``operators.merge._finish`` as every other write path, so crash/resume,
+  exactly-once and concurrent-writer semantics are unchanged.
+* ``apply_changes_copart(feed_schema=...)``: a change-feed window of a lake
+  table with this table's keys and bucket layout (``plans.sync.FeedSyncJob``,
+  the mirror), each bucket's window files as the source manifest lists
+  them.
+* ``rewrite_buckets_map``: a victim bucket's live files, folded, sorted and
+  rewritten as one file (compaction, and vacuum with its horizon).
 
 Why this matters at 100 TB: an all-to-all exchange is the one ingest phase
 whose cost scales with CLUSTER size (network bisection), not data size per
@@ -38,23 +62,17 @@ The ``_bucketing.json`` descriptor makes the layout self-describing — the
 ingest validates it against the table's snapshot (bucket function inputs
 AND count must match exactly) and silently falls back to the general
 shuffling path on any mismatch, so a mis-partitioned WAL can never corrupt
-bucket locality.
+bucket locality. The engine's own bucket directories are the second
+producer of this contract: the manifest records which bucket lists each
+committed file, is trusted like the descriptor, and
+``copart_verify_placement`` is not applied to these files.
 
-The engine's own bucket directories are the second producer of this
-contract: a lake table's committed delta files sit in
-``<table>/data/.../__bucket=<b>/`` and its manifest records which bucket
-lists each file. A mirror with the source's keys and bucket layout
-(``plans.sync.FeedSyncJob``) applies a change-feed window through the same
-kernel, reading each bucket's window files as the manifest lists them. The
-manifest is trusted like the descriptor, and ``copart_verify_placement`` is
-not applied to these files: the engine placed every row itself.
-
-Skew: one hot bucket would otherwise serialize into one task, so a bucket's
-file list is split into chunks of ``cfg.copart_max_task_bytes``. Chunks of
-the same bucket are folded independently — cross-chunk duplicates may both
-reach the delta files, which MoR semantics already tolerate (readers and
-compaction apply the same LWW total order over all generations; batch-side
-dedup is an optimization, not a correctness requirement).
+Skew: one hot bucket would otherwise serialize into one task, so an apply
+splits a bucket's file list into chunks of ``cfg.copart_max_task_bytes``.
+Chunks of the same bucket are folded independently — cross-chunk
+duplicates may both reach the delta files, which MoR semantics already
+tolerate (readers and compaction apply the same LWW total order over all
+generations). A rewrite never splits: its fold must see the whole bucket.
 
 Reference analogue: the reference has no notion of co-partitioned input —
 every batch is one psycopg2 COPY into a heap table (src/database/
@@ -70,7 +88,7 @@ import uuid
 from typing import Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from cnpj_data_pipeline_spark.config import BUCKET_COL, EngineConfig
@@ -79,6 +97,8 @@ from cnpj_data_pipeline_spark.lake.format import (
     LSN_META_COL,
     OP_META_COL,
     PHYSICAL_META_FIELDS,
+    _map_refold_unsafe,
+    _phys_meta_fields,
     fold_file_stats,
 )
 from cnpj_data_pipeline_spark.operators.merge import (
@@ -140,11 +160,11 @@ def _payload_schema_of_files(
     return out
 
 
-def _normalize_to(tbl, target, inv_renames=None):
+def _normalize_to(tbl, target, renames=None):
     """Pad + project + cast ONE file's Arrow table to ``target`` (pa.Schema).
-    ``inv_renames`` (logical -> physical) first maps renamed columns a
-    post-rename producer wrote under their logical names back to the
-    physical names the table stores; a file carrying BOTH names for one
+    ``renames`` (file name -> physical name) first maps the names a file
+    holds to the physical names the table stores: a post-rename producer's
+    logical names, the raw WAL envelope; a file carrying BOTH names for one
     column is ambiguous and refused.
 
     This must run PER FILE, before any ``pa.concat_tables``: a bucket's
@@ -159,8 +179,8 @@ def _normalize_to(tbl, target, inv_renames=None):
     projection."""
     import pyarrow as pa
 
-    if inv_renames:
-        mapped = [inv_renames.get(c, c) for c in tbl.column_names]
+    if renames:
+        mapped = [renames.get(c, c) for c in tbl.column_names]
         if len(set(mapped)) != len(mapped):
             raise ValueError(
                 "file carries both the physical and the logical name of a "
@@ -229,21 +249,12 @@ def _chunk_by_bytes(
         yield chunk
 
 
-def _lww_fold_arrow(
-    tbl,
-    key_cols: list[str],
-    lsn_col: str = "lsn",
-    op_col: str = "op",
-):
+def _lww_fold_arrow(tbl, key_cols: list[str]):
     """First row per key under the engine total order — all Arrow C++
     (stable desc sort + group-by min(row index)), bit-identical to
     operators.merge._merge_kernel / operators.dedup.lww_winners_agg
     (asserted by tests against the grouped path and the SQL oracle).
-    Executor-side helper: importable on workers, no Spark objects.
-
-    ``lsn_col``/``op_col`` name the envelope columns — raw ("lsn", "op")
-    for WAL batches, physical meta names for committed table files (the
-    compaction path)."""
+    ``tbl`` carries the physical ``__lsn``/``__op`` envelope."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -252,7 +263,7 @@ def _lww_fold_arrow(
     names = set(tbl.column_names)
     sort_keys = []
     work = tbl
-    for c in (lsn_col, "ts", op_col):
+    for c in (LSN_META_COL, "ts", OP_META_COL):
         if c in names:
             sort_keys.append((c, "descending"))
     for c in LWW_STRING_TIEBREAKS:
@@ -283,18 +294,25 @@ def read_fold_arrow(
     agg_spec: dict[str, str] | None = None,
     key_in: tuple | None = None,
     workers: int = 1,
+    renames: dict[str, str] | None = None,
+    columns: Sequence[str] | None = None,
 ):
-    """Committed lake files as one Arrow table of ``target`` (the table's
-    physical pa.Schema, meta columns included), folded to one row per key
-    when ``key_cols`` is given. The fold is the table's merge engine: LWW
+    """Parquet files as one Arrow table of ``target`` (a physical
+    pa.Schema, meta columns included), folded to one row per key when
+    ``key_cols`` is given. The fold is the table's merge engine: LWW
     (``_lww_fold_arrow``) or the partial/aggregate per-column fold
     (``partial_fold_arrow``; the caller routes ``_map_refold_unsafe``
-    tables elsewhere). Both the map-only compaction kernel and the driver
+    tables elsewhere). The bucket task (``_bucket_task``) and the driver
     regime of ``LakeTable.read_keys`` read through here.
 
-    Each file is read for the ``target`` columns it holds and normalized on
-    its own before the concat (``_normalize_to``: typed NULLs for
-    pre-evolution files, INT96 and tz-aware timestamps cast). ``key_in`` is
+    Each file is read for the columns that land in ``target`` and
+    normalized on its own before the concat (``_normalize_to``: typed NULLs
+    for pre-evolution files, INT96 and tz-aware timestamps cast).
+    ``renames`` maps a name as a file holds it to its physical name: a
+    producer's logical and retired names of a renamed column, and the raw
+    WAL envelope ``lsn``/``op`` -> ``__lsn``/``__op``. ``columns`` limits
+    the file columns read: a change-feed file can still hold a column its
+    table has since dropped, which must read back NULL. ``key_in`` is
     ``(column, pa.Array)``: each file keeps only the rows whose column is
     in the value set, before the concat and fold, so it must keep or drop
     whole keys, never some of a key's versions. ``workers`` files are read
@@ -306,11 +324,19 @@ def read_fold_arrow(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    ren = renames or {}
+    want = set(target.names)
+    keep = None if columns is None else set(columns)
+
     def read(fp: str):
         with pq.ParquetFile(fp) as pf:
-            have = set(pf.schema_arrow.names)
-            tbl = pf.read(columns=[n for n in target.names if n in have])
-        tbl = _normalize_to(tbl, target)
+            tbl = pf.read(
+                columns=[
+                    c for c in pf.schema_arrow.names
+                    if ren.get(c, c) in want and (keep is None or c in keep)
+                ]
+            )
+        tbl = _normalize_to(tbl, target, renames)
         if key_in is not None:
             col, vals = key_in
             tbl = tbl.filter(pc.is_in(tbl.column(col), value_set=vals))
@@ -325,9 +351,7 @@ def read_fold_arrow(
     if not key_cols or not len(tbl):
         return tbl
     if engine == "lww":
-        return _lww_fold_arrow(
-            tbl, list(key_cols), lsn_col=LSN_META_COL, op_col=OP_META_COL
-        )
+        return _lww_fold_arrow(tbl, list(key_cols))
     from cnpj_data_pipeline_spark.lake.format import PARTIAL_META_FIELDS
     from cnpj_data_pipeline_spark.operators.partial import partial_fold_arrow
 
@@ -341,132 +365,120 @@ def read_fold_arrow(
     return _normalize_to(folded, target)
 
 
-def _make_task(
+def _bucket_task(
     stage: str,
     root: str,
+    phys_json: str,
     key_cols: list[str] | None,
-    evolved_json: str,
-    audit_col: str | None,
-    blooms: bool = False,
-    fold: bool = True,
+    engine: str | None,
+    agg_spec: dict[str, str] | None = None,
+    renames: dict[str, str] | None = None,
+    columns: Sequence[str] | None = None,
     forbid_deletes: bool = False,
-    inv_renames: dict[str, str] | None = None,
-    envelope: tuple[str, str] = ("lsn", "op"),
-    file_cols: Sequence[str] | None = None,
+    lsn_horizon: int | None = None,
+    sort: tuple[str, list[str]] | None = None,
+    audit_col: str | None = None,
+    blooms: bool = False,
 ):
-    """Build the Arrow task body. Everything it closes over is tiny and
-    picklable; the evolved schema travels as JSON and is rebuilt per task
-    (a pa.Schema closure would pin pyarrow pickling across versions).
+    """The one map-only bucket task: the copart WAL apply, the mirror
+    catch-up and the compaction/vacuum rewrite all run this body over
+    ``(bucket, files)`` rows (``_map_buckets``). Per row it reads and folds
+    the files into ``phys_json`` (the physical schema, as Spark JSON:
+    rebuilt per task, a pa.Schema closure would pin pyarrow pickling) with
+    ``read_fold_arrow``; ``engine`` None keeps the raw rows (the non-LWW
+    copart append, whose read/compaction fold stays associative). Then the
+    optional stages: refuse a tombstone (``forbid_deletes``, the aggregate
+    engine), drop tombstone winners below ``lsn_horizon`` (vacuum), order
+    by ``sort`` (``("zorder"|"lexical", cols)``), stamp ``audit_col``.
+    It writes ONE file with byte-targeted row groups, its key bloom when
+    ``blooms``, and returns the file's footer stats as one row."""
+    # the row-group byte target is captured DRIVER-side: executor python
+    # workers inherit the JVM's launch env, not later mutations
+    row_group_bytes = int(
+        os.environ.get("SPARK_GRAFT_REWRITE_ROWGROUP_BYTES", 32 << 20)
+    )
 
-    ``envelope`` names the input files' (lsn, op) columns: the raw WAL
-    envelope, or the physical meta columns of a lake table's committed
-    delta files (a change-feed window). ``file_cols`` limits what is read
-    from each file: a lake file can still hold a column its table has
-    since dropped, which must read back as NULL, not as its old values."""
-    lsn_col, op_col = envelope
+    def task(rows: list[tuple[int, list[str]]]) -> Iterator[pd.DataFrame]:
+        import datetime as dt
 
-    def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from cnpj_data_pipeline_spark.lake.format import _file_stats
-        from cnpj_data_pipeline_spark.operators.copart import _lww_fold_arrow
+        from cnpj_data_pipeline_spark.operators.copart import read_fold_arrow
         from cnpj_data_pipeline_spark.schemas import schema_from_json
 
-        from cnpj_data_pipeline_spark.operators.copart import _normalize_to
-
-        evolved = schema_from_json(evolved_json)
-        phys_fields = list(evolved.fields) + list(PHYSICAL_META_FIELDS)
-        if audit_col:
-            phys_fields.append(T.StructField(audit_col, T.TimestampType()))
-        target = to_arrow_schema(T.StructType(phys_fields))
-        # pre-rename input shape: evolved payload + (lsn, op) envelope.
-        # Every file is normalized to THIS schema individually before concat
-        # (mixed-producer encodings, additive evolution inside a fold window)
-        wal_target = to_arrow_schema(
-            T.StructType(
-                list(evolved.fields)
-                + [
-                    T.StructField(lsn_col, T.LongType()),
-                    T.StructField(op_col, T.StringType()),
-                ]
+        target = to_arrow_schema(schema_from_json(phys_json))
+        for b, files in rows:
+            tbl = read_fold_arrow(
+                files, target, key_cols if engine else None,
+                engine or "lww", agg_spec, renames=renames,
+                columns=columns,
             )
-        )
-
-        def read(fp: str) -> pa.Table:
-            if file_cols is None:
-                return pq.read_table(fp)
-            pf = pq.ParquetFile(fp)
-            keep = set(file_cols)
-            return pf.read(
-                columns=[c for c in pf.schema_arrow.names if c in keep]
-            )
-
-        for driving in batches:
-            for _, row in driving.iterrows():  # rows are (bucket, files)
-                b = int(row["bucket"])
-                files = list(row["files"])
-                tbl = pa.concat_tables(
-                    [
-                        _normalize_to(read(f), wal_target, inv_renames)
-                        for f in files
-                    ]
+            ops = tbl.column(OP_META_COL)
+            if forbid_deletes and pc.any(pc.equal(ops, "D")).as_py():
+                raise ValueError(
+                    "merge_engine='aggregate' rejects tombstones: a "
+                    "folded sum cannot retract a contribution; model "
+                    "removals as explicit negative deltas"
                 )
-                if forbid_deletes and len(tbl):
-                    import pyarrow.compute as pc
-
-                    if pc.any(
-                        pc.equal(tbl.column(op_col), "D")
-                    ).as_py():
-                        raise ValueError(
-                            "merge_engine='aggregate' rejects tombstones: "
-                            "a folded sum cannot retract a contribution; "
-                            "model removals as explicit negative deltas"
-                        )
-                if key_cols and fold and len(tbl):
-                    tbl = _lww_fold_arrow(tbl, key_cols, lsn_col, op_col)
-                tbl = tbl.rename_columns(
-                    [
-                        {lsn_col: LSN_META_COL, op_col: OP_META_COL}.get(c, c)
-                        for c in tbl.column_names
-                    ]
+            if lsn_horizon is not None:
+                dead = pc.and_kleene(
+                    pc.equal(ops, "D"),
+                    pc.less(tbl.column(LSN_META_COL), lsn_horizon),
                 )
-                if audit_col:
-                    now = pd.Timestamp.utcnow().tz_localize(None)
-                    tbl = tbl.append_column(
-                        audit_col,
-                        pa.array([now] * len(tbl), pa.timestamp("us")),
-                    )
-                have = set(tbl.column_names)
-                for f in target:
-                    if f.name not in have:
-                        tbl = tbl.append_column(
-                            f.name, pa.nulls(len(tbl), f.type)
-                        )
-                out = tbl.select([f.name for f in target]).cast(target)
-                bdir = os.path.join(stage, f"{BUCKET_COL}={b}")
-                os.makedirs(bdir, exist_ok=True)
-                path = os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet")
-                pq.write_table(out, path, compression="zstd")
-                if blooms and key_cols:
-                    # the key column is already in memory — the sidecar is
-                    # a vectorized hash pass, no extra read anywhere
-                    from cnpj_data_pipeline_spark.lake.bloom import (
-                        write_sidecar,
+                tbl = tbl.filter(pc.fill_null(pc.invert(dead), True))
+            if sort is not None:
+                kind, cols = sort
+                if kind == "zorder":
+                    from cnpj_data_pipeline_spark.operators.zorder import (
+                        sort_indices_zorder,
                     )
 
-                    write_sidecar(path, out.column(key_cols[0]))
-                st = _file_stats(
-                    path, LSN_META_COL, key_cols[0] if key_cols else None
+                    idx = sort_indices_zorder(tbl, cols, key_cols)
+                else:
+                    idx = pc.sort_indices(
+                        tbl, sort_keys=[(c, "ascending") for c in cols]
+                    )
+                tbl = tbl.take(idx)
+            if audit_col:
+                now = pa.scalar(
+                    dt.datetime.now(dt.timezone.utc),
+                    pa.timestamp("us", tz="UTC"),
                 )
-                yield pd.DataFrame(
-                    {
-                        "bucket": [b],
-                        "relpath": [os.path.relpath(path, root)],
-                        "stats": [json.dumps(st)],
-                    }
-                )
+                tbl = tbl.append_column(audit_col, pa.repeat(now, len(tbl)))
+            bdir = os.path.join(stage, f"{BUCKET_COL}={b}")
+            os.makedirs(bdir, exist_ok=True)
+            path = os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet")
+            # byte-targeted row groups (~32 MiB decoded), not pyarrow's
+            # 1Mi-row default: row-group min/max stats are the unit of
+            # scan pruning, and a big bucket written as one giant group
+            # gives sorted layouts (sort_order) nothing to skip
+            rows_per_group = max(
+                1024, int(len(tbl) * row_group_bytes / max(tbl.nbytes, 1))
+            ) if len(tbl) else None
+            pq.write_table(
+                tbl, path, compression="zstd",
+                row_group_size=rows_per_group,
+            )
+            if blooms and key_cols:
+                # the key column is already in memory — the sidecar is
+                # a vectorized hash pass, no extra read anywhere
+                from cnpj_data_pipeline_spark.lake.bloom import write_sidecar
+
+                write_sidecar(path, tbl.column(key_cols[0]))
+            st = _file_stats(
+                path, LSN_META_COL, key_cols[0] if key_cols else None
+            )
+            yield pd.DataFrame(
+                {
+                    "bucket": [b],
+                    "relpath": [os.path.relpath(path, root)],
+                    "stats": [json.dumps(st)],
+                }
+            )
 
     return task
 
@@ -618,29 +630,26 @@ def apply_changes_copart(
     stage = table.new_staging_dir()
     if chunks:
         os.makedirs(stage, exist_ok=True)
-        envelope = (
-            ("lsn", "op") if feed_schema is None
-            else (LSN_META_COL, OP_META_COL)
-        )
-        task = _make_task(
+        phys = T.StructType(list(evolved.fields) + list(PHYSICAL_META_FIELDS))
+        task = _bucket_task(
             stage,
             table.root,
+            phys.json(),
             key_cols,
-            evolved.json(),
-            cfg.audit_col if cfg.write_audit_col else None,
-            blooms=cfg.key_blooms == "force",
-            inv_renames=inv_renames or None,
-            # non-LWW engines: append ALL raw versions — the Arrow kernel's
-            # LWW fold would drop batch "losers" whose columns/deltas the
-            # winner lacks; raw rows carry their origin LSN implicitly, so
-            # the read/compaction fold stays associative (operators/partial.py)
-            fold=engine == "lww",
-            forbid_deletes=engine == "aggregate",
-            envelope=envelope,
-            file_cols=(
+            # non-LWW engines: append ALL raw versions — an LWW fold would
+            # drop batch "losers" whose columns/deltas the winner lacks; raw
+            # rows carry their origin LSN implicitly, so the read/compaction
+            # fold stays associative (operators/partial.py)
+            "lww" if engine == "lww" else None,
+            # a lake file's envelope is already physical, a WAL file's raw
+            renames={**inv_renames, "lsn": LSN_META_COL, "op": OP_META_COL},
+            columns=(
                 None if feed_schema is None
-                else feed_schema.names + list(envelope)
+                else feed_schema.names + [LSN_META_COL, OP_META_COL]
             ),
+            forbid_deletes=engine == "aggregate",
+            audit_col=cfg.audit_col if cfg.write_audit_col else None,
+            blooms=cfg.key_blooms == "force",
         )
         updates = _map_buckets(spark, chunks, cfg.merge_partitions, task)
         clock.mark("merge_write")
@@ -674,10 +683,7 @@ def _map_buckets(
     def run(ids: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in ids:
             for i in pdf["id"]:
-                mine = work[int(i)::n_parts]
-                yield from task(
-                    iter([pd.DataFrame(mine, columns=["bucket", "files"])])
-                )
+                yield from task(work[int(i)::n_parts])
 
     rows = (
         spark.range(0, n_parts, 1, n_parts)
@@ -699,150 +705,49 @@ def rewrite_buckets_map(
     blooms: bool = True,
 ) -> dict[int, dict]:
     """MAP-ONLY bucket rewrite — the compaction/vacuum kernel without the
-    shuffle. A committed bucket's generations already live together on disk
-    (the bucket IS the partition), so re-exchanging them on (bucket, salt)
-    just to group what is already grouped is pure waste: one Arrow task per
-    victim bucket reads its generations, LWW-folds in Arrow C++ (same total
-    order as the shuffling kernel — tested bit-identical), optionally drops
-    tombstone winners below ``lsn_horizon`` (the vacuum path), sorts by the
-    table's declared ``sort_order`` property or by key (the Iceberg
-    sort-order analogue: tight parquet row-group ranges for range or point
-    reads respectively), writes EXACTLY ONE file, and returns its footer
-    stats inline — so the rewritten bucket is single-file, key-clustered,
-    and fully stat-ed with zero exchange and no separate stats pass. The
+    shuffle: one ``_bucket_task`` per victim bucket reads its live files,
+    folds them with the table's engine (same total order as the shuffling
+    kernel — tested bit-identical), drops tombstone winners below
+    ``lsn_horizon`` (the vacuum path), sorts by the declared ``sort_order``
+    or by key (the Iceberg sort-order analogue: tight row-group ranges for
+    range or point reads), and writes EXACTLY ONE fully stat-ed file. The
     salted shuffle rewrite left ``salt_factor`` files per bucket.
 
-    Unlike the WAL apply there is no chunk split: a fold must see its whole
-    bucket. The memory contract is the table-design one (EngineConfig:
-    n_buckets is sized so one bucket's state fits an executor) — the
-    shuffling `_rewrite_buckets` path remains for tables that violate it.
+    There is no chunk split: a fold must see its whole bucket. The memory
+    contract is the table-design one (EngineConfig: n_buckets is sized so
+    one bucket's state fits an executor) — the shuffling
+    `_rewrite_buckets` path remains for tables that violate it.
 
     Returns the commit-ready ``bucket_updates`` fragment for the victims
     (caller owns the commit and the watermark-keep/empty-bucket fixups)."""
     snap = table.snapshot()
     engine = snap.get("merge_engine", "lww")
-    agg_spec = snap.get("agg_spec") or None
-    if engine != "lww":
-        from cnpj_data_pipeline_spark.lake.format import _map_refold_unsafe
-
-        if _map_refold_unsafe(snap):
-            raise ValueError(
-                "the map-only rewrite kernel cannot refold this table "
-                "bit-identically (float sum, non-numeric monoid, or "
-                "non-atomic payload column); it compacts via the shuffle "
-                "kernel (_rewrite_buckets routes it automatically)"
-            )
+    if engine != "lww" and _map_refold_unsafe(snap):
+        raise ValueError(
+            "the map-only rewrite kernel cannot refold this table "
+            "bit-identically (float sum, non-numeric monoid, or "
+            "non-atomic payload column); it compacts via the shuffle "
+            "kernel (_rewrite_buckets routes it automatically)"
+        )
     key_cols = list(snap["key_cols"])
     # declared sort_order property (key-tiebroken) or key clustering;
     # "zorder" interleaves the declared columns' rank bits instead of
     # sorting lexicographically (operators/zorder.py)
-    sort_cols = table._sort_cols_of(snap)
-    sort_kind = table._sort_kind_of(snap)
-    declared_cols = list(
-        (snap.get("props") or {}).get("sort_order") or key_cols
-    )
-    # row-group byte target threaded through the closure (env is captured
-    # DRIVER-side: executor python workers inherit the JVM's launch env,
-    # not later mutations)
-    row_group_bytes = int(
-        os.environ.get("SPARK_GRAFT_REWRITE_ROWGROUP_BYTES", 32 << 20)
-    )
-    schema_json = table.schema().json()
-    bucket_files = {
-        b: [
-            os.path.join(table.root, rel)
-            for rel in snap["buckets"][str(b)]["files"]
-        ]
+    if table._sort_kind_of(snap) == "zorder":
+        sort = ("zorder", list(snap["props"]["sort_order"]))
+    else:
+        sort = ("lexical", table._sort_cols_of(snap))
+    work = [
+        (b, [os.path.join(table.root, rel) for rel in info["files"]])
         for b in victims
-        if str(b) in snap["buckets"]
-    }
-    work = [(b, files) for b, files in bucket_files.items() if files]
+        if (info := snap["buckets"].get(str(b))) and info["files"]
+    ]
     if not work:
         return {}
-    root = table.root
-
-    def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from cnpj_data_pipeline_spark.lake.format import (
-            PARTIAL_META_FIELDS,
-            _file_stats,
-        )
-        from cnpj_data_pipeline_spark.operators.copart import read_fold_arrow
-        from cnpj_data_pipeline_spark.schemas import schema_from_json
-
-        phys_fields = list(schema_from_json(schema_json).fields) + list(
-            PHYSICAL_META_FIELDS
-        )
-        if engine != "lww":
-            phys_fields = phys_fields + list(PARTIAL_META_FIELDS)
-        target = to_arrow_schema(T.StructType(phys_fields))
-
-        for driving in batches:
-            for _, row in driving.iterrows():
-                b = int(row["bucket"])
-                folded = read_fold_arrow(
-                    list(row["files"]), target, key_cols, engine, agg_spec
-                )
-                if lsn_horizon is not None:
-                    keep = pc.invert(
-                        pc.and_kleene(
-                            pc.equal(folded.column(OP_META_COL), "D"),
-                            pc.less(folded.column(LSN_META_COL), lsn_horizon),
-                        )
-                    )
-                    folded = folded.filter(pc.fill_null(keep, True))
-                if sort_kind == "zorder":
-                    from cnpj_data_pipeline_spark.operators.zorder import (
-                        sort_indices_zorder,
-                    )
-
-                    folded = folded.take(
-                        sort_indices_zorder(folded, declared_cols, key_cols)
-                    )
-                else:
-                    folded = folded.take(
-                        pc.sort_indices(
-                            folded,
-                            sort_keys=[(c, "ascending") for c in sort_cols],
-                        )
-                    )
-                bdir = os.path.join(stage, f"{BUCKET_COL}={b}")
-                os.makedirs(bdir, exist_ok=True)
-                path = os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet")
-                # byte-targeted row groups (~32 MiB decoded), not pyarrow's
-                # 1Mi-row default: row-group min/max stats are the unit of
-                # scan pruning, and a big bucket written as one giant group
-                # gives sorted layouts (sort_order) nothing to skip
-                rows_per_group = max(
-                    1024,
-                    int(
-                        len(folded)
-                        * row_group_bytes
-                        / max(folded.nbytes, 1)
-                    ),
-                ) if len(folded) else None
-                pq.write_table(
-                    folded, path, compression="zstd",
-                    row_group_size=rows_per_group,
-                )
-                if blooms:
-                    from cnpj_data_pipeline_spark.lake.bloom import (
-                        write_sidecar,
-                    )
-
-                    write_sidecar(path, folded.column(key_cols[0]))
-                st = _file_stats(path, LSN_META_COL, key_cols[0])
-                import json as _json
-
-                yield pd.DataFrame(
-                    {
-                        "bucket": [b],
-                        "relpath": [os.path.relpath(path, root)],
-                        "stats": [_json.dumps(st)],
-                    }
-                )
-
+    phys = T.StructType(list(table.schema().fields) + _phys_meta_fields(snap))
+    task = _bucket_task(
+        stage, table.root, phys.json(), key_cols, engine,
+        agg_spec=snap.get("agg_spec") or None,
+        lsn_horizon=lsn_horizon, sort=sort, blooms=blooms,
+    )
     return _map_buckets(spark, work, merge_partitions, task)

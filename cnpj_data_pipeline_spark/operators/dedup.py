@@ -40,9 +40,7 @@ LWW_STRING_TIEBREAKS = ("text", "tool", "role")
 def lww_order_cols(
     present: Sequence[str] | None = None,
     lsn_col: str = "lsn",
-    ts_col: str = "ts",
     op_col: str = "op",
-    tiebreak_cols: Sequence[str] = LWW_STRING_TIEBREAKS,
 ):
     """Engine-wide deterministic total order as Window ``orderBy`` expressions.
 
@@ -51,11 +49,11 @@ def lww_order_cols(
     order). ``None`` means all are assumed present."""
     has = (lambda c: True) if present is None else (lambda c: c in set(present))
     out = [F.col(lsn_col).desc()]
-    if has(ts_col):
-        out.append(F.col(ts_col).desc())
+    if has("ts"):
+        out.append(F.col("ts").desc())
     if has(op_col):
         out.append(F.col(op_col).desc())
-    for c in tiebreak_cols:
+    for c in LWW_STRING_TIEBREAKS:
         if has(c):
             out.append(F.coalesce(F.col(c), F.lit("")).desc())
     return out
@@ -65,11 +63,10 @@ def lww_dedup(
     changes: DataFrame,
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
     lsn_col: str = "lsn",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Keep exactly one event per key: the last writer under the total order."""
     w = Window.partitionBy(*key_cols).orderBy(
-        *lww_order_cols(changes.columns, lsn_col, ts_col)
+        *lww_order_cols(changes.columns, lsn_col)
     )
     return (
         changes.withColumn(LWW_ROW_NUMBER_COL, F.row_number().over(w))
@@ -82,9 +79,7 @@ def lww_winners_agg(
     df: DataFrame,
     group_cols: Sequence[str],
     lsn_col: str = "lsn",
-    ts_col: str = "ts",
     op_col: str = "op",
-    tiebreak_cols: Sequence[str] = LWW_STRING_TIEBREAKS,
 ) -> DataFrame:
     """The same LWW winner per group, as a hash aggregate instead of a sorted
     window: ``max_by(struct(all columns), struct(order key))``. Lexicographic
@@ -103,11 +98,11 @@ def lww_winners_agg(
     the read path stays schema-agnostic."""
     present = set(df.columns)
     keys = [F.col(lsn_col)]
-    if ts_col in present:
-        keys.append(F.col(ts_col))
+    if "ts" in present:
+        keys.append(F.col("ts"))
     if op_col in present:
         keys.append(F.col(op_col))
-    for c in tiebreak_cols:
+    for c in LWW_STRING_TIEBREAKS:
         if c in present:
             keys.append(F.coalesce(F.col(c), F.lit("")))
     order_key = F.struct(*keys)

@@ -49,6 +49,7 @@ from pyspark.sql import types as T
 from cnpj_data_pipeline_spark.config import (
     BUCKET_COL,
     SALT_COL,
+    SALT_SEED,
     EngineConfig,
 )
 from cnpj_data_pipeline_spark.lake.format import (
@@ -488,7 +489,7 @@ def apply_changes(
         ch = ch.withColumn(
             SALT_COL,
             F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(cfg.salt_seed)),
+                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(SALT_SEED)),
                 F.lit(cfg.salt_factor),
             ).cast("int"),
         )
@@ -497,50 +498,47 @@ def apply_changes(
             F.col(BUCKET_COL),
             F.col(SALT_COL),
         )
-        extra_meta: list = []
-        if engine != "lww":
-            # per-column fold: within-batch folding stays correct for
-            # out-of-order streams because the fold emits per-column origin
-            # LSNs, and monoid (sum/min/max) columns are associative by
-            # algebra — the batch's folded row is refoldable against
-            # anything (operators/partial.py). Same exchange reuse as the
-            # LWW agg. Aggregate tables reject tombstones HERE (a sum
-            # cannot retract a contribution a compaction already folded);
-            # the raise rides the fold's own scan via raise_error — zero
-            # cost on the delete-free path, no extra batch pass.
-            from cnpj_data_pipeline_spark.operators.partial import (
-                COL_LSNS_META_COL,
-                DEL_LSN_META_COL,
-                partial_winners_agg,
-            )
+        # Non-LWW engines fold per column: within-batch folding stays
+        # correct for out-of-order streams because the fold emits
+        # per-column origin LSNs, and monoid (sum/min/max) columns are
+        # associative by algebra — the batch's folded row is refoldable
+        # against anything (operators/partial.py). Same exchange reuse as
+        # the LWW agg. Aggregate tables reject tombstones HERE (a sum
+        # cannot retract a contribution a compaction already folded); the
+        # raise rides the fold's own scan via raise_error — zero cost on
+        # the delete-free path, no extra batch pass.
+        from cnpj_data_pipeline_spark.operators.partial import (
+            COL_LSNS_META_COL,
+            DEL_LSN_META_COL,
+            winners_agg,
+        )
 
-            if engine == "aggregate":
-                parted = parted.withColumn(
-                    "lsn",
-                    F.when(
-                        F.col("op") == "D",
-                        F.raise_error(
-                            F.lit(
-                                "merge_engine='aggregate' rejects "
-                                "tombstones: a folded sum cannot retract a "
-                                "contribution; model removals as explicit "
-                                "negative deltas"
-                            )
-                        ).cast("long"),
-                    ).otherwise(F.col("lsn")),
-                )
-            key_set = set(key_cols)
-            winners = partial_winners_agg(
-                parted,
-                [BUCKET_COL, SALT_COL, *key_cols],
-                [f.name for f in evolved.fields if f.name not in key_set],
-                agg_spec=snap.get("agg_spec"),
-            ).drop(SALT_COL)
-            extra_meta = [F.col(COL_LSNS_META_COL), F.col(DEL_LSN_META_COL)]
-        else:
-            winners = lww_winners_agg(
-                parted, [BUCKET_COL, SALT_COL, *key_cols]
-            ).drop(SALT_COL)
+        if engine == "aggregate":
+            parted = parted.withColumn(
+                "lsn",
+                F.when(
+                    F.col("op") == "D",
+                    F.raise_error(
+                        F.lit(
+                            "merge_engine='aggregate' rejects "
+                            "tombstones: a folded sum cannot retract a "
+                            "contribution; model removals as explicit "
+                            "negative deltas"
+                        )
+                    ).cast("long"),
+                ).otherwise(F.col("lsn")),
+            )
+        winners = winners_agg(
+            parted,
+            [BUCKET_COL, SALT_COL, *key_cols],
+            evolved.names,
+            engine,
+            agg_spec=snap.get("agg_spec"),
+        ).drop(SALT_COL)
+        extra_meta = (
+            [] if engine == "lww"
+            else [F.col(COL_LSNS_META_COL), F.col(DEL_LSN_META_COL)]
+        )
         phys = winners.select(
             *[F.col(f.name) for f in evolved.fields],
             F.col("lsn").alias(LSN_META_COL),
@@ -586,7 +584,7 @@ def apply_changes(
         combined = state_env.unionByName(ch).withColumn(
             SALT_COL,
             F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(cfg.salt_seed)),
+                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(SALT_SEED)),
                 F.lit(cfg.salt_factor),
             ).cast("int"),
         )

@@ -56,6 +56,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cnpj_data_pipeline_spark.operators.dedup import lww_winners_agg
+
 #: physical meta column: map<payload column name, origin lsn> of each
 #: surviving column value on a FOLDED row (absent/null on raw WAL rows —
 #: their origin is the row's own lsn)
@@ -213,6 +215,29 @@ def partial_winners_agg(
         F.when(dele >= 0, dele).cast("long").alias(DEL_LSN_META_COL)
     )
     return agg.select(*out_cols)
+
+
+def winners_agg(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    payload_cols: Sequence[str],
+    engine: str = "lww",
+    lsn_col: str = "lsn",
+    op_col: str = "op",
+    agg_spec: dict[str, str] | None = None,
+) -> DataFrame:
+    """One folded row per group under the table's merge engine — the Spark
+    fold every shuffling path runs: ``dedup.lww_winners_agg`` for "lww",
+    else :func:`partial_winners_agg` over the ``payload_cols`` that are not
+    group columns. ``group_cols`` is the key, optionally prefixed by
+    (bucket, salt)."""
+    if engine == "lww":
+        return lww_winners_agg(df, group_cols, lsn_col=lsn_col, op_col=op_col)
+    groups = set(group_cols)
+    return partial_winners_agg(
+        df, group_cols, [c for c in payload_cols if c not in groups],
+        lsn_col=lsn_col, op_col=op_col, agg_spec=agg_spec,
+    )
 
 
 def partial_fold_arrow(

@@ -26,7 +26,7 @@ from cnpj_data_pipeline_spark.lake.format import (
     OP_META_COL,
     LakeTable,
 )
-from cnpj_data_pipeline_spark.operators.dedup import lww_winners_agg
+from cnpj_data_pipeline_spark.operators.dedup import lww_dedup, lww_winners_agg
 from cnpj_data_pipeline_spark.operators.merge import apply_changes
 from cnpj_data_pipeline_spark.schemas import TRANSCRIPT_SCHEMA
 
@@ -210,18 +210,6 @@ winners AS (
 """
 
 
-def _winners(ch: DataFrame) -> DataFrame:
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        F.col("lsn").desc(),
-        F.col("ts").desc(),
-        F.col("op").desc(),
-        F.coalesce(F.col("text"), F.lit("")).desc(),
-        F.coalesce(F.col("tool"), F.lit("")).desc(),
-        F.coalesce(F.col("role"), F.lit("")).desc(),
-    )
-    return ch.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-
-
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
@@ -233,7 +221,7 @@ def q_changes_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1: one winner per key under the deterministic total order."""
-    return _winners(changes_from_events(spark, sf_dir)).select(
+    return lww_dedup(changes_from_events(spark, sf_dir)).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts", "op", "lsn"
     )
 
@@ -242,7 +230,7 @@ def q_final_state_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The replay result expressed declaratively (winners minus tombstones) —
     the Catalyst-native strategy of the merge."""
     return (
-        _winners(changes_from_events(spark, sf_dir))
+        lww_dedup(changes_from_events(spark, sf_dir))
         .filter(F.col("op") != "D")
         .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     )
@@ -1157,7 +1145,7 @@ def q_stateful_conv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keys whose final event is a delete — the retained-tombstone set."""
     return (
-        _winners(changes_from_events(spark, sf_dir))
+        lww_dedup(changes_from_events(spark, sf_dir))
         .filter(F.col("op") == "D")
         .select("conv_id", "turn_idx", "lsn")
     )

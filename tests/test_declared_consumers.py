@@ -116,11 +116,8 @@ def test_if_not_exists_rejects_other_source(spark, tmp_path, kind):
         execute_ddl(
             spark, _create(kind, "a", loc, ine=True), {"a": tables["b"]}
         )
-    if kind == "index":
+    with pytest.raises(ValueError, match="records source 'a'"):
         execute_ddl(spark, _create(kind, "c", loc, ine=True), {})
-    else:
-        with pytest.raises(ValueError, match="records source 'a'"):
-            execute_ddl(spark, _create(kind, "c", loc, ine=True), {})
     fresh = {"a": roots["a"]}
     execute_ddl(spark, _create(kind, "a", loc, ine=True), fresh)
     assert fresh["v"] == loc

@@ -88,7 +88,7 @@ def test_neardup_index_ddl(spark, tmp_path):
     fresh: dict = {}
     execute_ddl(
         spark,
-        f"CREATE INDEX IF NOT EXISTS bands ON whatever USING NEARDUP "
+        f"CREATE INDEX IF NOT EXISTS bands ON docs USING NEARDUP "
         f"(doc_id, text) LOCATION '{tmp_path / 'bands'}'",
         fresh,
     )
