@@ -5,7 +5,11 @@ The reference derives its physical knobs from host memory at runtime
 merge cutovers (10k / 1M rows, ``src/database/postgres.py:216-219,386-390``).
 On Spark those adaptive choices are Catalyst/AQE's job; what remains configurable
 is the *layout* of the lake table (bucket count), the salting factor used to split
-hot keys across tasks, and the merge kernel strategy.
+hot keys across tasks, and the apply's merge kernel (``merge_strategy``). Every
+shuffling fold — the merge-on-read and copy-on-write applies and shuffle
+compaction — runs ``operators.merge.shuffle_fold``. Maintenance has no kernel
+option: compaction, vacuum and rebucket pick theirs from the data (bucket bytes,
+the merge engine, the resize shape).
 """
 
 from __future__ import annotations
@@ -32,13 +36,14 @@ class EngineConfig:
         correctness requires per-key locality, not per-conversation locality).
     merge_strategy
         ``"native"`` (default): single-shuffle JVM-side merge — repartition on
-        (bucket, salt) once, LWW window partitioned by (bucket, salt, key) reuses
-        that partitioning (no second exchange), whole-stage codegen end-to-end.
-        ``"pandas"``: groupBy(bucket, salt).applyInPandas Arrow-vectorized merge
-        kernel (no per-row Python) — the applyInPandas shape from the north star,
-        kept as a fully supported strategy and exercised by tests; measured ~2.6×
-        slower than native at bench scale (Arrow round-trip of the full state).
-        Both produce identical results.
+        (bucket, salt) once, the engine's fold grouped by (bucket, salt, key)
+        reuses that partitioning (no second exchange).
+        ``"pandas"``: the same exchange, then a groupBy(bucket, salt)
+        .applyInPandas Arrow-vectorized LWW kernel (no per-row Python) — the
+        applyInPandas shape from the north star, kept as a fully supported
+        strategy and exercised by tests; measured ~2.6× slower than native at
+        bench scale (Arrow round-trip of the full state). LWW tables only;
+        both produce identical results.
     shuffle_partitions
         Default for spark.sql.shuffle.partitions in sessions we create.
     """

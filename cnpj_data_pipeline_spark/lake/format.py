@@ -1563,8 +1563,9 @@ class LakeTable:
         columns' rank bits into a Morton code (``operators/zorder.py``) so
         range predicates on ANY declared column prune — the Delta OPTIMIZE
         ZORDER analogue. Z-ordering runs in the map-only rewrite kernel;
-        the salted-shuffle kernel (forced strategy, or a bucket over the
-        per-bucket size fallback) degrades that rewrite to LEXICAL
+        the salted-shuffle kernel (a bucket over the per-bucket size
+        fallback, or a fold the map kernel cannot reproduce) degrades that
+        rewrite to LEXICAL
         clustering on the same columns — physical layout only, correctness
         is never affected.
 
@@ -3518,75 +3519,6 @@ class LakeTable:
 
     # ---------------- maintenance ----------------
 
-    def _shuffle_rewrite_updates(
-        self,
-        spark: SparkSession,
-        snap: dict,
-        victims: list[int],
-        salt_factor: int,
-        lsn_horizon: int | None,
-        blooms: bool = True,
-    ) -> dict[int, dict]:
-        """The salted-repartition rewrite kernel: read the victims' state,
-        resolve the per-key fold across (bucket, salt) tasks (the table's
-        merge engine: LWW winner row, or partial per-column fold — the salt
-        is a full-key hash, so a key's versions never split across groups),
-        write key-clustered files, harvest stats. Returns the commit-ready
-        ``bucket_updates`` fragment (caller owns the commit)."""
-        from cnpj_data_pipeline_spark.config import SALT_COL
-
-        key_cols = snap["key_cols"]
-        df = self.read_state_for_merge(spark, victims, self.schema())
-        df = df.withColumn(
-            SALT_COL,
-            F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(salt_factor)).cast(
-                "int"
-            ),
-        )
-        n_parts = max(
-            1,
-            min(
-                len(victims) * salt_factor,
-                2 * spark.sparkContext.defaultParallelism,
-            ),
-        )
-        parted = df.repartition(n_parts, F.col(BUCKET_COL), F.col(SALT_COL))
-        from cnpj_data_pipeline_spark.operators.partial import winners_agg
-
-        winners = winners_agg(
-            parted,
-            [BUCKET_COL, SALT_COL, *key_cols],
-            self.schema().names,
-            snap.get("merge_engine", "lww"),
-            lsn_col=LSN_META_COL,
-            op_col=OP_META_COL,
-            agg_spec=snap.get("agg_spec"),
-        ).drop(SALT_COL)
-        if lsn_horizon is not None:
-            winners = winners.filter(
-                ~(
-                    (F.col(OP_META_COL) == "D")
-                    & (F.col(LSN_META_COL) < lsn_horizon)
-                )
-            )
-        stage = self.new_staging_dir()
-        # cluster each rewritten bucket (task-local sort, no extra exchange):
-        # compaction is the read-optimization pass, so pay the in-task sort
-        # once to make parquet row-group min/max stats selective — by the
-        # declared sort_order property if set (range-scan clustering), else
-        # by key (point-read clustering); the Iceberg sort-order analogue
-        sort_cols = self._sort_cols_of(snap)
-        with owned_write_conf(spark):
-            winners.sortWithinPartitions(BUCKET_COL, *sort_cols).write.mode(
-                "overwrite"
-            ).partitionBy(BUCKET_COL).parquet(stage)
-        # maintenance pass: build blooms by default (the map-only rewrite —
-        # the default compaction path — builds them inline for the same
-        # reason); key_blooms="off" threads blooms=False down to here
-        return self.collect_staged(
-            stage, spark, blooms="force" if blooms else "off"
-        )
-
     def _bucket_bytes(self, snap: dict, bucket: int) -> int:
         """Total on-disk bytes of one bucket's live generations (driver-side
         stat of the victim's files only — never a tree walk)."""
@@ -3614,54 +3546,41 @@ class LakeTable:
         op: str,
         salt_factor: int = 4,
         lsn_horizon: int | None = None,
-        strategy: str = "map",
-        map_max_bucket_bytes: int | None = None,
         blooms: bool = True,
-    ) -> int:
+    ) -> int | None:
         """Shared kernel for compact/vacuum: resolve the victims' per-key
-        LWW winner, optionally drop tombstone winners below the LSN horizon,
-        rewrite the buckets as single-generation key-clustered state, commit.
+        winner, optionally drop tombstone winners below the LSN horizon,
+        rewrite the buckets as single-generation clustered state, commit
+        once. Returns None, committing nothing, when ``victims`` is empty.
 
-        ``strategy="map"`` (default): NO exchange — a committed bucket's
-        generations already live together on disk, so one Arrow task per
-        bucket folds/sorts/writes/stats its own state
-        (``operators.copart.rewrite_buckets_map``); the rewritten bucket is
-        exactly ONE key-sorted file. Buckets whose on-disk bytes exceed
-        ``map_max_bucket_bytes`` (default
-        :data:`MAP_REWRITE_MAX_BUCKET_BYTES`) are AUTOMATICALLY routed
-        through the salted shuffle kernel instead — per bucket, not as a
-        global mode choice — so one skewed bucket cannot OOM a task while
-        the rest of the pass stays map-only. ``strategy="shuffle"`` forces
-        the salted repartition kernel for every victim. Either way the pass
-        is ONE atomic commit."""
+        The kernel is chosen per bucket from the data, never by the caller:
+        a committed bucket's generations already live together on disk, so
+        by default one Arrow task per bucket folds/sorts/writes/stats its
+        own state (``operators.copart.rewrite_buckets_map``) with NO
+        exchange, leaving exactly ONE file. A bucket whose on-disk bytes
+        exceed :data:`MAP_REWRITE_MAX_BUCKET_BYTES`, and every bucket of a
+        table whose fold the Arrow kernel cannot reproduce bit-identically
+        (``_map_refold_unsafe``: float sums, non-numeric monoids, non-atomic
+        payload columns), is folded by the salted shuffle instead
+        (``operators.merge.shuffle_fold``, the apply's own fold) — so one
+        skewed bucket cannot OOM a task while the rest stays map-only."""
+        if not victims:
+            return None
         snap = self.snapshot()
         key_cols = snap["key_cols"]
         if key_cols is None:
             raise ValueError(
                 "keyless append-only tables have no LWW merge maintenance"
             )
-        map_victims: list[int] = []
-        shuffle_victims: list[int] = []
         if _map_refold_unsafe(snap):
-            # LWW, partial, and integer-sum aggregate tables take the
-            # map-only Arrow kernel (folds proven result-identical to the
-            # shuffling path: int sums are exact, min/max order-insensitive);
-            # float sums, non-numeric monoids, and non-atomic payload
-            # columns force the shuffle kernel (_map_refold_unsafe)
-            strategy = "shuffle"
-        if strategy == "map":
-            limit = (
-                map_max_bucket_bytes
-                if map_max_bucket_bytes is not None
-                else self.MAP_REWRITE_MAX_BUCKET_BYTES
-            )
-            for b in victims:
-                if self._bucket_bytes(snap, b) <= limit:
-                    map_victims.append(b)
-                else:
-                    shuffle_victims.append(b)
+            map_victims, shuffle_victims = [], sorted(victims)
         else:
-            shuffle_victims = list(victims)
+            map_victims = [
+                b for b in victims
+                if self._bucket_bytes(snap, b)
+                <= self.MAP_REWRITE_MAX_BUCKET_BYTES
+            ]
+            shuffle_victims = sorted(set(victims) - set(map_victims))
 
         updates: dict[int, dict] = {}
         if map_victims:
@@ -3677,10 +3596,42 @@ class LakeTable:
                 )
             )
         if shuffle_victims:
+            from cnpj_data_pipeline_spark.operators.merge import shuffle_fold
+
+            schema = self.schema()
+            winners = shuffle_fold(
+                spark,
+                self.read_state_for_merge(spark, shuffle_victims, schema),
+                snap,
+                schema.names,
+                len(shuffle_victims),
+                salt_factor,
+            )
+            if lsn_horizon is not None:
+                winners = winners.filter(
+                    ~(
+                        (F.col(OP_META_COL) == "D")
+                        & (F.col(LSN_META_COL) < lsn_horizon)
+                    )
+                )
+            stage = self.new_staging_dir()
+            # cluster each rewritten bucket (task-local sort, no extra
+            # exchange): compaction is the read-optimization pass, so pay
+            # the in-task sort once to make parquet row-group min/max stats
+            # selective — by the declared sort_order property if set
+            # (range-scan clustering), else by key (point-read clustering);
+            # the Iceberg sort-order analogue
+            with owned_write_conf(spark):
+                winners.sortWithinPartitions(
+                    BUCKET_COL, *self._sort_cols_of(snap)
+                ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
+                    stage
+                )
+            # maintenance pass: build blooms by default, as the map kernel
+            # does; key_blooms="off" threads blooms=False down to here
             updates.update(
-                self._shuffle_rewrite_updates(
-                    spark, snap, sorted(shuffle_victims), salt_factor,
-                    lsn_horizon, blooms=blooms,
+                self.collect_staged(
+                    stage, spark, blooms="force" if blooms else "off"
                 )
             )
         for b in victims:
@@ -3704,15 +3655,16 @@ class LakeTable:
         spark: SparkSession,
         buckets: Iterable[int] | None = None,
         salt_factor: int = 4,
-        strategy: str = "map",
         blooms: bool = True,
     ) -> int:
         """Rewrite multi-generation (unmerged) buckets back to one winner row
         per key — the MoR maintenance op that bounds read amplification.
-        Tombstones survive compaction (vacuum owns their removal).
-        ``strategy``: see ``_rewrite_buckets`` — "map" (default, no
-        exchange) or "shuffle" (for layouts whose single bucket outgrows an
-        executor)."""
+        Tombstones survive compaction (vacuum owns their removal). The
+        kernel is chosen per bucket from the data (``_rewrite_buckets``).
+
+        ``buckets`` names the buckets to rewrite (default: every unmerged
+        one); an id outside ``0..n_buckets-1`` raises ``ValueError``, and an
+        in-range bucket that was never written is skipped."""
         def _once() -> int:
             snap = self.snapshot()
             if buckets is None:
@@ -3723,13 +3675,19 @@ class LakeTable:
                 ]
             else:
                 victims = [int(b) for b in buckets]
+                n = int(snap["n_buckets"])
+                bad = sorted({b for b in victims if not 0 <= b < n})
+                if bad:
+                    raise ValueError(
+                        f"compact: buckets {bad} are outside 0..{n - 1}"
+                    )
+                victims = [b for b in victims if str(b) in snap["buckets"]]
             chosen = sorted(set(victims))
-            if not chosen:
-                return self.current_snapshot_id()
-            return self._rewrite_buckets(
+            sid = self._rewrite_buckets(
                 spark, chosen, op="compact", salt_factor=salt_factor,
-                strategy=strategy, blooms=blooms,
+                blooms=blooms,
             )
+            return self.current_snapshot_id() if sid is None else sid
 
         return _retry_conflicts(_once)
 
@@ -3739,7 +3697,6 @@ class LakeTable:
         max_gens_per_bucket: int,
         salt_factor: int = 4,
         max_buckets: int | None = None,
-        strategy: str = "map",
         blooms: bool = True,
     ) -> int | None:
         """Compact only the buckets whose delta-generation count crossed the
@@ -3750,7 +3707,8 @@ class LakeTable:
         bucket over the threshold in the same epoch, an unbounded pass would
         rewrite the whole table in one stall (measured 49 s against a 47M-row
         table vs ~5 s epochs); spreading it keeps ingest latency bounded
-        while amortized cost stays the same."""
+        while amortized cost stays the same. ``max_buckets=0`` compacts
+        nothing."""
         def _once() -> int | None:
             snap = self.snapshot()
             victims = [
@@ -3759,15 +3717,13 @@ class LakeTable:
                 if not info.get("merged", True)
                 and info.get("gens", len(info["files"])) >= max_gens_per_bucket
             ]
-            if not victims:
-                return None
             victims.sort(reverse=True)
             chosen = [b for _, b in victims]
             if max_buckets is not None:
                 chosen = chosen[:max_buckets]
             return self._rewrite_buckets(
                 spark, sorted(chosen), op="compact", salt_factor=salt_factor,
-                strategy=strategy, blooms=blooms,
+                blooms=blooms,
             )
 
         return _retry_conflicts(_once)
@@ -3775,8 +3731,8 @@ class LakeTable:
     def _rebucket_scan(self, spark: SparkSession, snap: dict, new_n: int):
         """The rebucket's shared scan: every physical row of ``snap`` with
         the bucket column recomputed for the ``new_n`` layout. A narrow
-        (exchange-free) plan — strategy-specific distribution is layered on
-        top by :meth:`rebucket`."""
+        (exchange-free) plan — the non-multiple resize's exchange is layered
+        on top by :meth:`rebucket`."""
         phys = T.StructType(
             list(schema_from_json(snap["schema"]).fields)
             + _phys_meta_fields(snap)
@@ -3791,7 +3747,6 @@ class LakeTable:
         spark: SparkSession,
         new_n_buckets: int,
         salt_factor: int = 4,
-        strategy: str = "auto",
         blooms: bool = True,
     ) -> int:
         """Bucket-count EVOLUTION: rewrite the whole table into a new
@@ -3809,43 +3764,31 @@ class LakeTable:
         against the new layout. Buckets land unmerged (conservative); a
         follow-up ``compact()`` restores single-winner files where wanted.
 
-        ``strategy``:
+        The kernel follows from the resize:
 
-        * ``"map"`` — the LINEAR-HASH SPLIT (Kafka-partition-expansion /
-          linear-hashing shape): valid when ``new_n_buckets`` is an integer
-          multiple k of the current count. Because the bucket function is
-          ``pmod(xxhash64(keys), n)``, a row in old bucket b can only land
-          in the k child buckets ``{b, b+n, ..., b+(k-1)n}`` — so
-          recomputing the bucket column and writing ``partitionBy(bucket)``
-          splits every input task locally into at most k files with ZERO
-          exchange: the table is never shuffled, only streamed through a
-          per-task sort. At 100 TB this is the difference between a
-          full-table shuffle (the cluster's worst job) and a map-only
-          rewrite bounded by scan+write bandwidth.
-        * ``"shuffle"`` — arbitrary resize (including shrink or non-multiple
-          growth): distribute over (bucket, salt) tasks like the merge.
-        * ``"auto"`` (default) — ``"map"`` when the multiple-growth
-          precondition holds, else ``"shuffle"``.
+        * growth by an integer multiple k — the LINEAR-HASH SPLIT
+          (Kafka-partition-expansion / linear-hashing shape). Because the
+          bucket function is ``pmod(xxhash64(keys), n)``, a row in old
+          bucket b can only land in the k child buckets ``{b, b+n, ...,
+          b+(k-1)n}`` — so recomputing the bucket column and writing
+          ``partitionBy(bucket)`` splits every input task locally into at
+          most k files with ZERO exchange: the table is never shuffled,
+          only streamed through a per-task sort. At 100 TB this is the
+          difference between a full-table shuffle (the cluster's worst job)
+          and a map-only rewrite bounded by scan+write bandwidth.
+        * any other resize (shrink, non-multiple growth) — the merge's
+          salted exchange over (bucket, salt) tasks
+          (``operators.merge.salted_exchange``), with no fold.
         """
         snap = self.snapshot()
         old_n = int(snap["n_buckets"])
         new_n = int(new_n_buckets)
         if new_n == old_n:
             return self.current_snapshot_id()
-        if strategy not in ("auto", "map", "shuffle"):
-            raise ValueError(f"unknown rebucket strategy {strategy!r}")
-        splittable = new_n > old_n and new_n % old_n == 0
-        if strategy == "map" and not splittable:
-            raise ValueError(
-                "map-only rebucket requires new_n_buckets to be an integer "
-                f"multiple of the current count (got {old_n} -> {new_n}); "
-                "use strategy='shuffle' for arbitrary resizes"
-            )
-        use_map = splittable if strategy == "auto" else (strategy == "map")
         key_cols = snap["key_cols"]
         df = self._rebucket_scan(spark, snap, new_n)
         split_conf: dict = {}
-        if use_map:
+        if new_n > old_n and new_n % old_n == 0:
             parted = df
             # The map path's parallelism IS the scan's split count — there
             # is no exchange to rebalance it. Size input splits to ~4 tasks
@@ -3860,25 +3803,12 @@ class LakeTable:
             split_conf["spark.sql.files.maxPartitionBytes"] = str(split)
         else:
             from cnpj_data_pipeline_spark.config import SALT_COL
+            from cnpj_data_pipeline_spark.operators.merge import (
+                salted_exchange,
+            )
 
-            salt_src = (
-                [F.col(c) for c in key_cols]
-                if key_cols
-                else [F.col(LSN_META_COL)]
-            )
-            df = df.withColumn(
-                SALT_COL,
-                F.pmod(F.xxhash64(*salt_src), F.lit(salt_factor)).cast("int"),
-            )
-            n_parts = max(
-                1,
-                min(
-                    new_n * salt_factor,
-                    2 * spark.sparkContext.defaultParallelism,
-                ),
-            )
-            parted = df.repartition(
-                n_parts, F.col(BUCKET_COL), F.col(SALT_COL)
+            parted = salted_exchange(
+                spark, df, key_cols or [LSN_META_COL], salt_factor, new_n
             ).drop(SALT_COL)
         stage = self.new_staging_dir()
         sort_cols = list(key_cols) if key_cols else [LSN_META_COL]
@@ -4407,7 +4337,6 @@ class LakeTable:
         spark: SparkSession,
         lsn_horizon: int,
         salt_factor: int = 4,
-        strategy: str = "map",
         blooms: bool = True,
     ) -> int:
         """Physically drop tombstones whose LSN is below the horizon (no late
@@ -4421,17 +4350,15 @@ class LakeTable:
             victims = sorted(
                 int(b) for b, info in snap["buckets"].items() if info["files"]
             )
-            if not victims:
-                return self.current_snapshot_id()
-            return self._rewrite_buckets(
+            sid = self._rewrite_buckets(
                 spark,
                 victims,
                 op="vacuum",
                 salt_factor=salt_factor,
                 lsn_horizon=lsn_horizon,
-                strategy=strategy,
                 blooms=blooms,
             )
+            return self.current_snapshot_id() if sid is None else sid
 
         return _retry_conflicts(_once)
 

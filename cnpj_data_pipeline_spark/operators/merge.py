@@ -21,7 +21,9 @@ Physical shape (scale rationale):
    at 10^10 rows a change batch touches a bounded set of buckets and merge
    cost is independent of total table size).
 4. Union state + changes and pick the per-key winner under the engine-wide
-   total order. Two interchangeable kernels:
+   total order — :func:`shuffle_fold`, the one Spark fold the merge-on-read
+   apply, the copy-on-write apply and shuffle compaction share. Two
+   interchangeable kernels:
    - ``pandas``: ``groupBy(__bucket, __salt).applyInPandas`` — Arrow-vectorized
      pandas sort + drop_duplicates per group, no per-row Python (the shape
      mandated by BASELINE.json input_hint). ``__salt`` sub-splits a bucket by
@@ -56,12 +58,13 @@ from cnpj_data_pipeline_spark.lake.format import (
     EpochAlreadyAppliedError,
     LakeTable,
     OP_META_COL,
+    _phys_meta_fields,
     batch_to_physical,
     bucket_expr,
     owned_write_conf,
 )
 from cnpj_data_pipeline_spark.config import LSN_META_COL
-from cnpj_data_pipeline_spark.operators.dedup import lww_winners_agg
+from cnpj_data_pipeline_spark.operators.partial import winners_agg
 from cnpj_data_pipeline_spark.schemas import union_schema
 
 ENVELOPE_COLS = ("op", "lsn", "epoch")
@@ -77,18 +80,30 @@ def _payload_schema(changes: DataFrame) -> T.StructType:
     )
 
 
-def _align(df: DataFrame, schema: T.StructType, extra: Sequence[str]) -> DataFrame:
-    """Project df onto schema's columns (missing → typed NULL), keeping extras."""
-    cols = []
+def _to_physical(
+    df: DataFrame, schema: T.StructType, bucket_cols: list[str], n_buckets: int
+) -> DataFrame:
+    """Project a change batch onto physical rows: the payload aligned to
+    ``schema`` (missing → typed NULL), the ``(lsn, op)`` envelope under its
+    physical names, and the bucket — hashed over the aligned columns, which
+    for a keyless table include the raw ``lsn``."""
     have = set(df.columns)
-    for f in schema.fields:
-        if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    cols += [F.col(c) for c in extra]
-    return df.select(*cols)
-
+    aligned = df.select(
+        *[
+            (F.col(f.name) if f.name in have else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in schema.fields
+        ],
+        F.col("lsn"),
+        F.col("op"),
+    )
+    return aligned.select(
+        *schema.names,
+        F.col("lsn").alias(LSN_META_COL),
+        F.col("op").alias(OP_META_COL),
+        bucket_expr(bucket_cols, n_buckets).alias(BUCKET_COL),
+    )
 
 
 def _merge_partitions(
@@ -109,15 +124,17 @@ def _merge_partitions(
     return max(1, min(n_buckets * salt_factor, 2 * spark.sparkContext.defaultParallelism))
 
 def _merge_kernel(key_cols: list[str]):
-    """Arrow-vectorized per-group merge: sort by the engine total order
-    (lsn, ts, op, then the string tie-breaks present — text, tool, role —
-    NULL-coalesced to ''), keep the first row per key. Pure pandas column
-    ops — no Python row loop. Must stay bit-identical to
+    """Arrow-vectorized per-group merge over physical rows: sort by the
+    engine total order (__lsn, ts, __op, then the string tie-breaks present
+    — text, tool, role — NULL-coalesced to ''), keep the first row per key.
+    Pure pandas column ops — no Python row loop. Must stay bit-identical to
     operators.dedup.lww_winners_agg / lww_order_cols."""
     from cnpj_data_pipeline_spark.operators.dedup import LWW_STRING_TIEBREAKS
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        sort_cols = [c for c in ("lsn", "ts", "op") if c in pdf.columns]
+        sort_cols = [
+            c for c in (LSN_META_COL, "ts", OP_META_COL) if c in pdf.columns
+        ]
         fills = {}
         for c in LWW_STRING_TIEBREAKS:
             if c in pdf.columns:
@@ -130,6 +147,82 @@ def _merge_kernel(key_cols: list[str]):
         return out.drop(columns=list(fills))
 
     return kernel
+
+
+def salted_exchange(
+    spark: SparkSession,
+    rows: DataFrame,
+    salt_cols: Sequence[str],
+    salt_factor: int,
+    n_buckets: int,
+    merge_partitions: int | None = None,
+) -> DataFrame:
+    """The one shuffle of every Spark-side bucket rewrite: salt each row by
+    the seeded hash of ``salt_cols`` (the full key, so a key's versions
+    never split across tasks while a hot bucket spreads over
+    ``salt_factor`` of them) and hash-partition once on (bucket, salt).
+    ``n_buckets`` is the number of buckets in play; with ``salt_factor`` it
+    caps the partition count (:func:`_merge_partitions`). The output
+    carries ``SALT_COL``."""
+    salted = rows.withColumn(
+        SALT_COL,
+        F.pmod(
+            F.xxhash64(*[F.col(c) for c in salt_cols], F.lit(SALT_SEED)),
+            F.lit(salt_factor),
+        ).cast("int"),
+    )
+    return salted.repartition(
+        _merge_partitions(spark, n_buckets, salt_factor, merge_partitions),
+        F.col(BUCKET_COL),
+        F.col(SALT_COL),
+    )
+
+
+def shuffle_fold(
+    spark: SparkSession,
+    rows: DataFrame,
+    snap: dict,
+    payload_cols: Sequence[str],
+    n_buckets: int,
+    salt_factor: int,
+    merge_partitions: int | None = None,
+    pandas_kernel: bool = False,
+) -> DataFrame:
+    """One folded row per key of ``rows`` — the Spark counterpart of
+    ``operators.copart._bucket_task``, run by the merge-on-read apply (the
+    batch), the copy-on-write apply (touched state ∪ batch) and shuffle
+    compaction/vacuum (the victims' state).
+
+    ``rows`` are physical: payload, the ``__lsn``/``__op`` envelope (plus
+    any partial-engine meta) and ``BUCKET_COL``. One
+    :func:`salted_exchange`, then the fold of ``snap``'s merge engine
+    (``operators.partial.winners_agg``) grouped by (bucket, salt, key): the
+    exchange's HashPartitioning on (bucket, salt) satisfies the aggregate's
+    ClusteredDistribution, so there is no second exchange, and each task
+    holds whole (bucket, salt) groups. ``pandas_kernel`` swaps the
+    LWW fold for the ``_merge_kernel`` grouped map (LWW tables only). The
+    output is physical rows without the salt."""
+    key_cols = list(snap["key_cols"])
+    engine = snap.get("merge_engine", "lww")
+    parted = salted_exchange(
+        spark, rows, key_cols, salt_factor, n_buckets, merge_partitions
+    )
+    if pandas_kernel and engine == "lww":
+        folded = parted.groupBy(BUCKET_COL, SALT_COL).applyInPandas(
+            _merge_kernel(key_cols), schema=parted.schema
+        )
+    else:
+        folded = winners_agg(
+            parted,
+            [BUCKET_COL, SALT_COL, *key_cols],
+            payload_cols,
+            engine,
+            lsn_col=LSN_META_COL,
+            op_col=OP_META_COL,
+            agg_spec=snap.get("agg_spec"),
+        )
+    meta = [f.name for f in _phys_meta_fields(snap)]
+    return folded.select(*payload_cols, *meta, BUCKET_COL)
 
 
 class _PhaseClock:
@@ -434,15 +527,12 @@ def apply_changes(
     # (int -> long) changes a type without adding a column
     new_schema = evolved if evolved.fields != base_schema.fields else None
 
-    # -- normalize the batch: payload aligned to evolved schema + (op, lsn)
-    ch = changes
-    if "epoch" in ch.columns:
-        ch = ch.drop("epoch")
-    ch = _align(ch, evolved, extra=["op", "lsn"])
-    ch = ch.withColumn(BUCKET_COL, bucket_expr(bucket_cols, n_buckets))
+    # -- the batch as physical rows: payload aligned to the evolved schema,
+    #    the (lsn, op) envelope as __lsn/__op, and the bucket
+    batch = _to_physical(changes.drop("epoch"), evolved, bucket_cols, n_buckets)
 
-    # NOTE: no separate within-batch LWW pass here. The merge kernel below
-    # applies the same total order across state ∪ changes, so batch-internal
+    # NOTE: no separate within-batch LWW pass here. The fold below applies
+    # the same total order across state ∪ changes, so batch-internal
     # duplicates resolve identically — pre-deduplicating would add a full
     # extra shuffle (window by key) for no semantic gain. The standalone
     # operator remains available as operators.dedup.lww_dedup (W1).
@@ -463,183 +553,80 @@ def apply_changes(
         # the same applied_epochs guard as keyed tables. One shuffle
         # (repartition on bucket) bounds output files to one per bucket per
         # epoch regardless of source partitioning.
-        parted = ch.repartition(
+        phys = batch.repartition(
             _merge_partitions(spark, n_buckets, 1, cfg.merge_partitions),
             F.col(BUCKET_COL),
         )
-        phys = parted.select(
-            *[F.col(f.name) for f in evolved.fields],
-            F.col("lsn").alias(LSN_META_COL),
-            F.col("op").alias(OP_META_COL),
-            F.col(BUCKET_COL),
-        )
-    elif cfg.write_mode == "mor":
-        # MERGE-ON-READ fast path: no state read at all. LWW-dedup the batch
-        # (batch losers can never be global winners — the total order is the
-        # same one readers apply), append the winners as delta files to their
-        # buckets, commit. Per-epoch cost is O(batch) regardless of table
-        # size — the property that keeps ingest linear at 10^10 events where
-        # every batch touches every bucket and CoW would be quadratic.
-        # Single shuffle: repartition on (bucket, salt-of-full-key), then the
-        # LWW hash aggregate grouped by (bucket, salt, key) reuses that
-        # partitioning (HashPartitioning on a subset of the group keys
-        # satisfies its ClusteredDistribution) — no second exchange, no sort;
-        # each output task holds exactly one (bucket, salt) group → one file
-        # per task.
-        ch = ch.withColumn(
-            SALT_COL,
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(SALT_SEED)),
-                F.lit(cfg.salt_factor),
-            ).cast("int"),
-        )
-        parted = ch.repartition(
-            _merge_partitions(spark, n_buckets, cfg.salt_factor, cfg.merge_partitions),
-            F.col(BUCKET_COL),
-            F.col(SALT_COL),
-        )
-        # Non-LWW engines fold per column: within-batch folding stays
-        # correct for out-of-order streams because the fold emits
-        # per-column origin LSNs, and monoid (sum/min/max) columns are
-        # associative by algebra — the batch's folded row is refoldable
-        # against anything (operators/partial.py). Same exchange reuse as
-        # the LWW agg. Aggregate tables reject tombstones HERE (a sum
-        # cannot retract a contribution a compaction already folded); the
-        # raise rides the fold's own scan via raise_error — zero cost on
-        # the delete-free path, no extra batch pass.
-        from cnpj_data_pipeline_spark.operators.partial import (
-            COL_LSNS_META_COL,
-            DEL_LSN_META_COL,
-            winners_agg,
-        )
-
-        if engine == "aggregate":
-            parted = parted.withColumn(
-                "lsn",
-                F.when(
-                    F.col("op") == "D",
-                    F.raise_error(
-                        F.lit(
-                            "merge_engine='aggregate' rejects "
-                            "tombstones: a folded sum cannot retract a "
-                            "contribution; model removals as explicit "
-                            "negative deltas"
-                        )
-                    ).cast("long"),
-                ).otherwise(F.col("lsn")),
-            )
-        winners = winners_agg(
-            parted,
-            [BUCKET_COL, SALT_COL, *key_cols],
-            evolved.names,
-            engine,
-            agg_spec=snap.get("agg_spec"),
-        ).drop(SALT_COL)
-        extra_meta = (
-            [] if engine == "lww"
-            else [F.col(COL_LSNS_META_COL), F.col(DEL_LSN_META_COL)]
-        )
-        phys = winners.select(
-            *[F.col(f.name) for f in evolved.fields],
-            F.col("lsn").alias(LSN_META_COL),
-            F.col("op").alias(OP_META_COL),
-            *extra_meta,
-            F.col(BUCKET_COL),
-        )
     else:
-        # -- touched buckets (bounded by n_buckets; tiny driver-side list).
-        # When the batch is large relative to the bucket count (cheap
-        # footer-level row-count hint from the WAL source), every bucket is
-        # touched with overwhelming probability ((1-1/B)^n), so skip the
-        # distinct scan — treating an actually-empty bucket as touched is
-        # correct (its state is read and rewritten unchanged), it only
-        # costs a little write amplification.
-        if batch_rows_hint is not None and batch_rows_hint >= 16 * n_buckets:
-            touched = list(range(n_buckets))
+        if cow:
+            # -- touched buckets (bounded by n_buckets; tiny driver-side
+            # list). When the batch is large relative to the bucket count
+            # (cheap footer-level row-count hint from the WAL source), every
+            # bucket is touched with overwhelming probability ((1-1/B)^n),
+            # so skip the distinct scan — treating an actually-empty bucket
+            # as touched is correct (its state is read and rewritten
+            # unchanged), it only costs a little write amplification.
+            if batch_rows_hint is not None and batch_rows_hint >= 16 * n_buckets:
+                touched = list(range(n_buckets))
+            else:
+                touched = sorted(
+                    r[0] for r in batch.select(BUCKET_COL).distinct().collect()
+                )
+            clock.mark("touched_scan")
+            if not touched:
+                # an empty batch marks its epochs applied and changes
+                # nothing else: no schema evolution, no CAS parent (it
+                # touches no bucket)
+                return _finish(
+                    spark, table, cfg, clock, None, epoch, {}, None,
+                    mode="replace", props=props, expected_props=expected_props,
+                )
+            # the touched buckets' current state keeps its ORIGINAL
+            # (__lsn, __op), so the fold over state ∪ batch is exactly the
+            # oracle's total order (no state-vs-change special cases)
+            rows = table.read_state_for_merge(
+                spark, touched, evolved
+            ).unionByName(batch)
         else:
-            touched = sorted(
-                r[0] for r in ch.select(BUCKET_COL).distinct().collect()
-            )
-        clock.mark("touched_scan")
-        if not touched:
-            # an empty batch marks its epochs applied and changes nothing
-            # else: no schema evolution, no CAS parent (it touches no bucket)
-            return _finish(
-                spark, table, cfg, clock, None, epoch, {}, None,
-                mode="replace", props=props, expected_props=expected_props,
-            )
-
-        # -- current state of touched buckets, padded to the evolved schema,
-        #    re-enveloped with its ORIGINAL (lsn, op) so the combined LWW
-        #    total order is exactly the oracle's (no state-vs-change special
-        #    cases).
-        state = table.read_state_for_merge(spark, touched, evolved)
-        state_env = state.select(
-            *[F.col(f.name) for f in evolved.fields],
-            F.col(OP_META_COL).alias("op"),
-            F.col(LSN_META_COL).alias("lsn"),
-            F.col(BUCKET_COL),
-        )
-
-        combined = state_env.unionByName(ch).withColumn(
-            SALT_COL,
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols], F.lit(SALT_SEED)),
-                F.lit(cfg.salt_factor),
-            ).cast("int"),
-        )
-
-        # -- per-key winner
-        if cfg.merge_strategy == "native":
-            # SINGLE-SHUFFLE merge: repartition once on (bucket,
-            # salt-of-full-key), then run the LWW window partitioned by
-            # (bucket, salt, key...). Because (bucket, salt) is a subset of
-            # the window's partition keys, the HashPartitioning from the
-            # explicit repartition already satisfies the window's
-            # ClusteredDistribution — EnsureRequirements inserts only a local
-            # sort, no second exchange. The explicit numPartitions also keeps
-            # AQE from coalescing the write stage below the core count, and
-            # each output task holds exactly one (bucket, salt) group, so
-            # partitionBy emits exactly one file per task (bounded file
-            # counts at scale).
-            n_parts = min(
-                _merge_partitions(
-                    spark, n_buckets, cfg.salt_factor, cfg.merge_partitions
-                ),
-                max(len(touched) * cfg.salt_factor, 1),
-            )
-            parted = combined.repartition(
-                n_parts, F.col(BUCKET_COL), F.col(SALT_COL)
-            )
-            merged = lww_winners_agg(
-                parted, [BUCKET_COL, SALT_COL, *key_cols]
-            ).drop(SALT_COL)
-        else:
-            # salted grouped-map merge: group key is (bucket,
-            # salt-of-full-key) so a hot bucket splits across salt_factor
-            # Arrow tasks while each (conv_id, turn_idx) stays within
-            # exactly one group.
-            out_schema = T.StructType(
-                list(evolved.fields)
-                + [
-                    T.StructField("op", T.StringType(), False),
-                    T.StructField("lsn", T.LongType(), False),
-                    T.StructField(BUCKET_COL, T.IntegerType(), False),
-                    T.StructField(SALT_COL, T.IntegerType(), False),
-                ]
-            )
-            merged = (
-                combined.groupBy(BUCKET_COL, SALT_COL)
-                .applyInPandas(_merge_kernel(key_cols), schema=out_schema)
-                .drop(SALT_COL)
-            )
-
-        # -- physical rows: payload + __lsn/__op (tombstones kept)
-        phys = merged.select(
-            *[F.col(f.name) for f in evolved.fields],
-            F.col("lsn").alias(LSN_META_COL),
-            F.col("op").alias(OP_META_COL),
-            F.col(BUCKET_COL),
+            # MERGE-ON-READ fast path: no state read at all. Fold the batch
+            # alone (batch losers can never be global winners — the total
+            # order is the same one readers apply) and append the winners as
+            # delta files to their buckets. Per-epoch cost is O(batch)
+            # regardless of table size — the property that keeps ingest
+            # linear at 10^10 events where every batch touches every bucket
+            # and CoW would be quadratic. Non-LWW engines fold per column:
+            # the fold emits per-column origin LSNs, and monoid columns are
+            # associative by algebra, so the batch's folded row is
+            # refoldable against anything (operators/partial.py). Aggregate
+            # tables reject tombstones HERE (a sum cannot retract a
+            # contribution a compaction already folded); the raise rides
+            # the batch projection via raise_error — zero cost on the
+            # delete-free path, no extra batch pass.
+            rows = batch
+            if engine == "aggregate":
+                rows = rows.withColumn(
+                    LSN_META_COL,
+                    F.when(
+                        F.col(OP_META_COL) == "D",
+                        F.raise_error(
+                            F.lit(
+                                "merge_engine='aggregate' rejects "
+                                "tombstones: a folded sum cannot retract a "
+                                "contribution; model removals as explicit "
+                                "negative deltas"
+                            )
+                        ).cast("long"),
+                    ).otherwise(F.col(LSN_META_COL)),
+                )
+        phys = shuffle_fold(
+            spark,
+            rows,
+            snap,
+            evolved.names,
+            len(touched) if cow else n_buckets,
+            cfg.salt_factor,
+            cfg.merge_partitions,
+            pandas_kernel=cfg.merge_strategy == "pandas",
         )
 
     if cfg.write_audit_col:

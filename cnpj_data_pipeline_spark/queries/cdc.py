@@ -1233,11 +1233,11 @@ def q_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_replay_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay across a LIVE bucket-layout evolution: epochs 0-1 ingest into
-    an 8-bucket layout, the table is then grown 8->32 with the MAP-ONLY
-    linear-hash split (``LakeTable.rebucket(strategy='map')`` — because the
-    bucket function is ``pmod(xxhash64(keys), n)``, a row in old bucket b
-    can only land in the k child buckets {b, b+8, b+16, b+24}, so the
-    rewrite is a zero-exchange per-task split, never a table shuffle), and
+    an 8-bucket layout, the table is then grown 8->32, an integer multiple,
+    which ``LakeTable.rebucket`` takes as the MAP-ONLY linear-hash split
+    (because the bucket function is ``pmod(xxhash64(keys), n)``, a row in
+    old bucket b can only land in the k child buckets {b, b+8, b+16, b+24},
+    so the rewrite is a zero-exchange per-task split, never a table shuffle), and
     epochs 2-3 ingest into the widened layout. ``applied_epochs`` lineage
     carries over, so exactly-once holds across the layout change and the
     final state must equal the same SQL fold as every other replay variant
@@ -1256,7 +1256,7 @@ def q_cdc_replay_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     for e in range(2):
         batch = spark.read.parquet(os.path.join(wal, f"epoch={e}"))
         apply_changes(spark, table, batch, epoch=e, cfg=cfg)
-    table.rebucket(spark, 32, strategy="map")
+    table.rebucket(spark, 32)
     assert table.snapshot()["n_buckets"] == 32
     for e in range(2, N_EPOCHS):
         batch = spark.read.parquet(os.path.join(wal, f"epoch={e}"))

@@ -404,7 +404,9 @@ def test_verify_placement_catches_misplaced_rows(spark, tmp_path):
     assert m and m[0].get("copartitioned")
 
 
-def test_map_rewrite_auto_falls_back_per_oversized_bucket(spark, tmp_path):
+def test_map_rewrite_auto_falls_back_per_oversized_bucket(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r3 #6: the map-only compaction's memory contract is enforced
     PER BUCKET — a victim whose on-disk bytes exceed the threshold routes
     through the salted shuffle kernel while the rest of the pass stays
@@ -423,9 +425,8 @@ def test_map_rewrite_auto_falls_back_per_oversized_bucket(spark, tmp_path):
     # threshold between min and max: some buckets map-only, some shuffled
     limit = (sizes[0] + sizes[-1]) // 2
     assert sizes[0] <= limit < sizes[-1]
-    sid = table._rewrite_buckets(
-        spark, list(range(4)), op="compact", map_max_bucket_bytes=limit
-    )
+    monkeypatch.setattr(LakeTable, "MAP_REWRITE_MAX_BUCKET_BYTES", limit)
+    sid = table._rewrite_buckets(spark, list(range(4)), op="compact")
     assert sid == table.current_snapshot_id()
     after = table.snapshot()
     # every bucket is single-generation after the pass (one commit)

@@ -347,24 +347,25 @@ def test_file_level_key_range_pruning(spark, tmp_table):
 def test_rebucket_map_split_is_shuffle_free_and_matches_shuffle(
     spark, tmp_path, monkeypatch
 ):
-    """Linear-hash split: growing to an integer-multiple bucket count with
-    strategy='map' must (a) request NO redistribution anywhere — proven by
+    """Linear-hash split: growing to an integer-multiple bucket count
+    (8 -> 32) must (a) request NO redistribution anywhere — proven by
     making DataFrame.repartition explode for the duration — and run only
     single-stage jobs (a shuffle without AQE would need a 2-stage job),
-    (b) produce bit-identical state to the general salted shuffle rewrite,
-    (c) keep bucket-pruned point reads correct against the new layout, and
-    (d) reject a non-multiple resize instead of silently shuffling."""
+    (b) produce bit-identical state to the salted shuffle rewrite a
+    non-multiple growth (12 -> 32) takes, and (c) keep bucket-pruned point
+    reads correct against the new layout."""
     from pyspark.sql import DataFrame as _DF
 
-    cfg = EngineConfig(n_buckets=8)
     ch = gen_changes(spark, n_events=4_000, n_convs=150, n_epochs=2)
     batches = list(epoch_batches(ch, 2))
     reads = {}
-    for strategy in ("map", "shuffle"):
-        root = str(tmp_path / strategy)
-        IngestJob(root, cfg).run_batches(spark, batches)
+    for kernel, n_buckets in (("map", 8), ("shuffle", 12)):
+        root = str(tmp_path / kernel)
+        IngestJob(root, EngineConfig(n_buckets=n_buckets)).run_batches(
+            spark, batches
+        )
         table = LakeTable.load(root)
-        if strategy == "map":
+        if kernel == "map":
             real_repartition = _DF.repartition
 
             def boom(self, *a, **kw):
@@ -376,7 +377,7 @@ def test_rebucket_map_split_is_shuffle_free_and_matches_shuffle(
             sc = spark.sparkContext
             sc.setJobGroup("rebucket-map-split", "map rebucket", False)
             try:
-                table.rebucket(spark, 32, strategy="map")
+                table.rebucket(spark, 32)
             finally:
                 monkeypatch.setattr(_DF, "repartition", real_repartition)
                 sc.setJobGroup("rebucket-map-split-done", "", False)
@@ -390,14 +391,14 @@ def test_rebucket_map_split_is_shuffle_free_and_matches_shuffle(
                     "map-only rebucket must never shuffle"
                 )
         else:
-            table.rebucket(spark, 32, strategy="shuffle")
+            table.rebucket(spark, 32)
         snap = table.snapshot()
         assert snap["n_buckets"] == 32
         assert all(
             len(i["fstats"]) == len(i["files"])
             for i in snap["buckets"].values()
         )
-        reads[strategy] = (
+        reads[kernel] = (
             table.read(spark, include_meta=True)
             .orderBy("conv_id", "turn_idx")
             .toPandas()
@@ -416,10 +417,6 @@ def test_rebucket_map_split_is_shuffle_free_and_matches_shuffle(
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, some.reset_index(drop=True))
-
-    # non-multiple growth cannot claim the map path
-    with pytest.raises(ValueError, match="integer .*multiple|multiple"):
-        table.rebucket(spark, 48, strategy="map")
 
 
 def test_rebucket_to_wide_layout_and_ingest_continues(spark, tmp_table, monkeypatch):

@@ -518,7 +518,7 @@ def test_partial_table_rebucket_preserves_fold(spark, tmp_path):
     job.run_stream(spark, wal)
     t = LakeTable.load(str(tmp_path / "lake"))
     golden = partial_final_state(ch.toPandas())
-    t.rebucket(spark, 16, strategy="map")
+    t.rebucket(spark, 16)
     got = t.read(spark).orderBy(*KEY).toPandas().reset_index(drop=True)
     pd.testing.assert_frame_equal(got, golden, check_dtype=False)
     t.compact(spark)
@@ -655,19 +655,22 @@ def test_partial_fold_nan_tiebreak_matches_spark(spark):
     assert all(math.isnan(got[k]) for k in want), got
 
 
-def test_partial_compact_map_equals_shuffle_and_golden(spark, tmp_path):
+def test_partial_compact_map_equals_shuffle_and_golden(
+    spark, tmp_path, monkeypatch
+):
     """End-to-end: a partial table compacted by the map-only kernel reads
-    identically to the shuffle kernel's rewrite and the pandas golden —
-    and the map pass leaves exactly one file per bucket."""
+    identically to the shuffle kernel's rewrite (forced by a byte cap every
+    bucket exceeds) and the pandas golden — and the map pass leaves exactly
+    one file per bucket."""
     ch = gen_partial_changes(spark, n_events=6_000, n_convs=180, n_epochs=3)
     golden = partial_final_state(ch.toPandas())
 
     states = {}
-    for strategy in ("map", "shuffle"):
-        wal = str(tmp_path / f"wal_{strategy}")
+    for kernel in ("map", "shuffle"):
+        wal = str(tmp_path / f"wal_{kernel}")
         for e, b in epoch_batches(ch, 3):
             cs.write_epoch(b, wal, e)
-        lake = str(tmp_path / f"lake_{strategy}")
+        lake = str(tmp_path / f"lake_{kernel}")
         IngestJob(
             lake,
             EngineConfig(
@@ -675,29 +678,32 @@ def test_partial_compact_map_equals_shuffle_and_golden(spark, tmp_path):
             ),
         ).run_stream(spark, wal)
         t = LakeTable.load(lake)
-        t.compact(spark, strategy=strategy)
+        with monkeypatch.context() as mp:
+            if kernel == "shuffle":
+                mp.setattr(LakeTable, "MAP_REWRITE_MAX_BUCKET_BYTES", -1)
+            t.compact(spark)
         snap = t.snapshot()
         assert all(i.get("merged", True) for i in snap["buckets"].values())
-        if strategy == "map":
+        if kernel == "map":
             assert all(
                 len(i["files"]) <= 1 for i in snap["buckets"].values()
             )
-        states[strategy] = (
+        states[kernel] = (
             t.read(spark).orderBy(*KEY).toPandas().reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(
-            states[strategy], golden, check_dtype=False
+            states[kernel], golden, check_dtype=False
         )
     pd.testing.assert_frame_equal(states["map"], states["shuffle"])
 
 
 def test_aggregate_map_compaction_matches_shuffle_and_routes_float_sums(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Integer-sum aggregate tables refold exactly in the map kernel (int
-    sums exact, min/max order-insensitive) — map vs shuffle compaction must
-    match bit-for-bit; a FLOAT-sum column forces the shuffle kernel even
-    when strategy='map' is requested."""
+    sums exact, min/max order-insensitive) — map vs forced-shuffle
+    compaction must match bit-for-bit; a FLOAT-sum column takes the shuffle
+    kernel even when every bucket is under the map kernel's byte cap."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -716,28 +722,31 @@ def test_aggregate_map_compaction_matches_shuffle_and_routes_float_sums(
         key_cols=("user_id",), compact_threshold=None,
     )
     states = {}
-    for strategy in ("map", "shuffle"):
-        t = _mk_agg_table(tmp_path, name=f"alake_{strategy}")
+    for kernel in ("map", "shuffle"):
+        t = _mk_agg_table(tmp_path, name=f"alake_{kernel}")
         for e in range(3):
             apply_changes(
                 spark, t,
                 _counter_batch(spark, rows[e * 600:(e + 1) * 600]),
                 e, cfg,
             )
-        t.compact(spark, strategy=strategy)
+        with monkeypatch.context() as mp:
+            if kernel == "shuffle":
+                mp.setattr(LakeTable, "MAP_REWRITE_MAX_BUCKET_BYTES", -1)
+            t.compact(spark)
         snap = t.snapshot()
-        if strategy == "map":
+        if kernel == "map":
             assert all(
                 len(i["files"]) <= 1 for i in snap["buckets"].values()
             ), "map pass => one file per bucket"
-        states[strategy] = (
+        states[kernel] = (
             t.read(spark).orderBy("user_id").toPandas()
             .reset_index(drop=True)
         )
     pd.testing.assert_frame_equal(states["map"], states["shuffle"])
 
-    # float SUM column: map request routes that table through the shuffle
-    # kernel (bit-parity for order-sensitive float addition is impossible)
+    # float SUM column: the table routes through the shuffle kernel
+    # (bit-parity for order-sensitive float addition is impossible)
     fs = LakeTable.create(
         str(tmp_path / "alake_floatsum"), COUNTER_SCHEMA,
         key_cols=["user_id"], n_buckets=4, merge_engine="aggregate",
@@ -753,7 +762,7 @@ def test_aggregate_map_compaction_matches_shuffle_and_routes_float_sums(
     before = (
         fs.read(spark).orderBy("user_id").toPandas().reset_index(drop=True)
     )
-    fs.compact(spark, strategy="map")  # silently degrades to shuffle
+    fs.compact(spark)  # _map_refold_unsafe: the shuffle kernel
     snap = fs.snapshot()
     assert all(i.get("merged", True) for i in snap["buckets"].values())
     after = (

@@ -79,10 +79,12 @@ def _assert_files_sorted_by(files, col):
         assert vals == sorted(vals), f"{fp} not clustered by {col}"
 
 
-@pytest.mark.parametrize("strategy", ["map", "shuffle"])
+@pytest.mark.parametrize("kernel", ["map", "shuffle"])
 def test_sort_order_clusters_files_state_unchanged(
-    spark, tmp_table, strategy
+    spark, tmp_table, kernel, monkeypatch
 ):
+    if kernel == "shuffle":  # every bucket over the map kernel's byte cap
+        monkeypatch.setattr(LakeTable, "MAP_REWRITE_MAX_BUCKET_BYTES", -1)
     t = LakeTable.create(tmp_table, TRANSCRIPT_SCHEMA, KEY, CFG.n_buckets)
     _ingest(spark, t)
     golden = _state(t, spark)
@@ -91,7 +93,7 @@ def test_sort_order_clusters_files_state_unchanged(
     t.set_sort_order(["ts"])
     assert t.sort_order() == ["ts"]
 
-    t.compact(spark, strategy=strategy)
+    t.compact(spark)
     assert _state(t, spark).equals(golden)
     _assert_files_sorted_by(_merged_files(t), "ts")
 

@@ -37,16 +37,11 @@ def main() -> None:
     p.add_argument("--threshold", type=int, default=2,
                    help="compact buckets holding >= this many generations")
     p.add_argument("--salt-factor", type=int, default=4)
-    p.add_argument("--strategy", choices=["map", "shuffle"], default="map",
-                   help="map: one Arrow task per bucket, no exchange "
-                        "(default); shuffle: salted repartition kernel for "
-                        "layouts whose single bucket outgrows an executor")
 
     p = sub.add_parser("vacuum", help="drop tombstones below an LSN horizon")
     p.add_argument("--lsn-horizon", type=int, required=True,
                    help="delete 'D' winners with lsn < horizon (late-event safety bound)")
     p.add_argument("--salt-factor", type=int, default=4)
-    p.add_argument("--strategy", choices=["map", "shuffle"], default="map")
 
     p = sub.add_parser("expire", help="GC old snapshots + orphan files")
     p.add_argument("--keep-last", type=int, default=10)
@@ -58,10 +53,6 @@ def main() -> None:
     p = sub.add_parser("rebucket", help="rewrite the table into a new bucket count")
     p.add_argument("--n-buckets", type=int, required=True)
     p.add_argument("--salt-factor", type=int, default=4)
-    p.add_argument("--strategy", choices=["auto", "map", "shuffle"],
-                   default="auto",
-                   help="map = zero-shuffle linear-hash split (integer-"
-                        "multiple growth only); auto picks it when valid")
 
     p = sub.add_parser("rollback", help="revert live state to a historical snapshot")
     p.add_argument("--to-snapshot", type=int, required=True,
@@ -361,13 +352,11 @@ def main() -> None:
         sid = table.compact_if_needed(
             spark, args.threshold,
             salt_factor=args.salt_factor, max_buckets=args.max_buckets,
-            strategy=args.strategy,
         )
         out = {"op": "compact", "snapshot_id": sid, "noop": sid is None}
     elif args.op == "vacuum":
         sid = table.vacuum_tombstones(
             spark, lsn_horizon=args.lsn_horizon, salt_factor=args.salt_factor,
-            strategy=args.strategy,
         )
         out = {"op": "vacuum", "snapshot_id": sid}
     elif args.op == "expire":
@@ -382,8 +371,7 @@ def main() -> None:
         }
     else:
         sid = table.rebucket(spark, args.n_buckets,
-                             salt_factor=args.salt_factor,
-                             strategy=args.strategy)
+                             salt_factor=args.salt_factor)
         out = {"op": "rebucket", "snapshot_id": sid,
                "n_buckets": table.n_buckets(), "noop": sid == before}
     print(json.dumps(out))
